@@ -1,39 +1,28 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
+Usage:
+    python bench.py [NAME ...]
+
+With no names it times the whole ``HEADLINE`` set; with names it times
+just those catalog entries (unknown names are rejected before Spark
+starts). The session runs at local[$SPARK_GRAFT_CPUS], default the
+box's core count.
+
 Prints ONE JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <scale factor>,
-     "calib": {...}}
+     "spread": {name: max/min, ...}}
 
 Each query executes fully via the no-op sink (computation without driver
 result transfer), so timings measure engine work, not collect() serde.
-
-``calib`` makes a noisy sample SELF-DOCUMENTING (r9 verdict task 4: the
-recorded bench drifted ~1.4x r7->r9 on a shared-host VM whose own
-identical runs measured 128-265 s, while idle-box re-profiles stayed
-flat): a fixed CPU-bound probe — code that never changes — is timed
-min-of-3 before and after the sweep, and its ratio to CALIB_IDLE_SEC
-(the idle-box reference) is the host-load factor. A reader comparing
-two BENCH artifacts divides out the factor before calling anything a
-regression; per-query drift is only a plan problem when it exceeds the
-probe's drift.
-
-Since round 11 the factor is also a GATE (r10 verdict task 1): a sweep
-whose own factor exceeds $SPARK_GRAFT_LOAD_GATE (default 1.25) sleeps
-$SPARK_GRAFT_LOAD_SLEEP (default 120 s) and re-sweeps, up to
-$SPARK_GRAFT_LOAD_RETRIES (default 2) extra attempts, emitting the
-lowest-factor attempt with every attempt's factor recorded in
-``calib.attempt_factors`` — a loaded host window can no longer become
-the recorded denominator silently. The gate also fires on probe
-INSTABILITY (``calib.probe_stability`` = max/min of pre vs post per
-probe size > $SPARK_GRAFT_LOAD_STABILITY, default 2.0): a transient
-that starts or dies mid-sweep leaves one probe clean — the min-based
-factor reads idle while half the queries ran loaded.
+A query's time is the min of three repeats; ``spread`` is the max/min
+ratio of those repeats, so a noisy sample documents itself per query.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -49,257 +38,48 @@ from dbms_query_optimizer_spark.session import get_spark  # noqa: E402
 # cost-based pipeline, windows/top-k, every dedup strategy, similarity,
 # text analysis, event-time processing.
 HEADLINE = [
-    "flagship_join_agg",
-    "agg_grouped",
-    "join_multiway",
-    "cbo_ordered_join",
-    "topk_per_group",
-    "window_running",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash_pairs",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_span_duplication",
-    "knn_brute_force",
-    "knn_lsh_bucketed",
-    "text_quality",
-    "text_lang_quality_summary",
-    "text_rolling_fingerprint",
-    "text_tfidf_top_terms",
-    "explode_tokens",
-    "percentile_exact",
-    "multimodal_frame_sample",
-    "events_tumbling",
-    "events_sessionized",
-    "asof_join",
-    "range_join_bucketed",
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q10",
-    "tpch_q18",
-    "tpch_q19",
-    "events_rollup_multires",
-    "events_funnel",
-    "latest_per_key",
-    "join_salted_skew",
-    "quality_gopher_rules",
-    "text_unigram_logprob",
-    "embedding_quantize_int8",
-    "corpus_prep",
-    # round 2: governance / audit, derived-partsupp TPC-H, iterative graph
-    "curriculum_bins",
-    "text_entropy",
-    "sliding_distinct_users",
-    "late_supplier_blame",
-    "robust_stats_mad",
-    "graph_pagerank",
-    "tpch_q2",
-    "source_python_datasource",
-    # round 3: the formerly scale-weak trio, now distributed (block-grid
-    # GEMM dedup is above; these two complete the before/after story)
-    "knn_ivf",
-    "tpch_q15",
-    # round 3: incremental materialized-view maintenance (delta joins),
-    # sweep-line interval-overlap census
-    "incremental_join_view",
-    "interval_overlap_join",
-    # round 4: the sub-quadratic embedding-dedup exemplar (the plan a user
-    # should copy at 100 TB; the exact GEMM twin stays above as the
-    # verification path), the skew-hardened as-of join, and the committed
-    # copy-on-write MERGE through the manifest log
-    "dedup_embedding_cosine_lsh",
-    "asof_join_salted",
-    "txn_merge_upsert",
-    # round 4: zone-map file skipping through the manifest (commit-time
-    # footer stats -> pruned file list before the scan is planned)
-    "txn_zonemap_scan",
-    # round 4: bloom point lookup (heap-point-read analog: = probe prunes
-    # to 1 of 8 hash-clustered files) and the CHECK-constraint ingest
-    # gate (Observation metrics riding the staging write)
-    "txn_point_lookup",
-    "txn_constraint_gate",
-    # round 4: continual-ingest dedup — incoming batch probed against the
-    # persisted corpus signature store (build amortized across batches)
-    "dedup_incremental_lsh",
-    # round 4: PII masking (map-only codegen regexp pass at scan bandwidth)
-    "pii_redact",
-    # round 4: MATCH_RECOGNIZE-class sequence pattern (one agg + regexp)
-    "event_pattern_match",
-    # round 4: content-defined-chunking storage dedup (rolling-hash cuts)
-    "dedup_cdc_chunks",
-    # round 4: half-life EWMA (windowed JVM array fold, no self-join) and
-    # the mergeable histogram-quantile sketch (explicit shard->merge)
-    "ewma_smooth",
-    "quantile_sketch_mergeable",
-    # round 4: merge-on-read deletion vectors (delete = O(deleted rows)
-    # of vector, read = anti-join on only the vectored files) and the
-    # timestamp-zone TTL retention sweep (recent files never read)
-    "txn_delete_mor",
-    "txn_retention_delete",
-    # round 4: corpus boilerplate strip (line-level dedup with ordered
-    # text rebuild) and the block/match/cluster/canonicalize ER composite
-    "boilerplate_strip",
-    "entity_resolution",
-    # round 4: feature-store point-in-time assembly (bucketed range
-    # joins + as-of carry; the leakage-free training-feature prep)
-    "feature_assembly_pit",
-    # round 5: write-audit-publish promotion (branch clone -> audited
-    # ingest -> one atomic metadata commit) and SCD2 MERGE through the
-    # manifest (close-current + insert-new in one transaction)
-    "txn_wap_publish",
-    "txn_scd2_apply",
-    # round 5: windowed order statistics — trailing exact median
-    # (array-select, no self-join) and the clamped Lindley balance
-    # (two stacked windows via the reflection identity, no recursion)
-    "rolling_median",
-    "running_balance_clamped",
-    # round 5: full correlation matrix from ONE moment-aggregate pass
-    "correlation_matrix",
-    # round 5: hard-negative mining through the LSH candidate generator
-    # (the 100 TB composition executing, not just documented)
-    "contrastive_pairs_lsh",
-    # round 5b: exact set-similarity join via PPJoin prefix filtering
-    # (hash-matches the unpruned oracle — losslessness proven, not claimed)
-    "dedup_set_similarity_prefix",
-    # round 5b: FIFO lot matching as interval-intersection of prefix sums
-    # (the imperative match-loop as two windows + one bounded range join)
-    "fifo_allocation",
-    # round 5b: classical additive seasonal decomposition, all windows
-    # partitioned by series; per-segment Kaplan-Meier survival curves
-    "seasonal_decompose",
-    "survival_km",
-    # round 5b: tokenizer-training pair counting (corpus collapses to the
-    # vocab before any per-character work) and the hashing-trick featurizer
-    "bpe_pair_merge",
-    "feature_hash_vectorize",
-    # round 5c: model-eval pair over the score-domain collapse — exact
-    # ROC-AUC (rank-sum) and exact PR-AUC (nano-quantized threshold terms)
-    "model_auc_roc",
-    "model_pr_auc",
-    # round 5c: exact Spearman rho via domain rank tables (no row ranking)
-    "spearman_rank_corr",
-    # round 5c: OHLC bars as struct-extreme aggregates (argmin/argmax,
-    # zero windows, all-integer output)
-    "events_ohlc_bars",
-    # round 5c: PERCENTILE_CONT without a per-group sort buffer (value-
-    # domain collapse + order-statistic selection)
-    "percentile_cont_domain",
-    # round 5c: leakage-safe train-fitted standardization (fit=2-row
-    # broadcast, apply=one grouped pass)
-    "feature_standardize",
-    # round 5c: DSIR importance weights (hashed-unigram LM ratio,
-    # broadcast 64-row models, exact nano-nat doc weights)
-    "dsir_importance_weights",
-    # round 5c: deterministic Poisson bootstrap (explode x100 collapses
-    # map-side; shuffle = partitions x B), CUPED experiment readout,
-    # the full cleaning-funnel composite, compiled tree-ensemble
-    # inference, and the Python Data Source write path
-    "bootstrap_ci_mean",
-    "ab_test_cuped",
-    "pipeline_funnel_report",
-    "gbt_inference_sql",
-    "source_python_datasink",
-    # round 5c: item-item collaborative filtering (basket-bounded pair
-    # self-join + popularity normalization) and Markov removal-effect
-    # attribution (one distributed transition pass + broadcast-scale solve)
-    "recsys_item_cosine",
-    "markov_attribution",
-    # round 5c: physical-design advisor (distributed-rank bucket spans per
-    # candidate cluster key) and leave-one-out vocabulary valuation
-    "cluster_key_advisor",
-    "source_loo_vocab",
-    # round 6: grid-blocked spatial NN join (lossless 3×3 cover with
-    # antimeridian wrap; argmin as struct-min aggregate, no rank window)
-    # and the 1°-cell density heatmap (one hash agg + distributed top-k)
-    "geo_nearest_facility",
-    "geo_grid_density",
-    # round 6: weekly-seasonality ACF over the days-domain collapse,
-    # gaps-and-islands streaks (rn-difference trick, per-user windows),
-    # integer-exact time-decay attribution (completes the family)
-    "autocorr_lags",
-    "activity_islands",
-    "time_decay_attribution",
-    # round 6: BH FDR step-up on distributed_row_number (global p-rank
-    # with no SinglePartition window) and the l-diversity privacy gate
-    "bh_fdr_report",
-    "l_diversity_audit",
-    # round 6: third-order sequential-pattern mining (per-user lead
-    # windows → trigram-domain count → distributed top-k) and
-    # partition-spec evolution with per-generation zone pruning
-    "event_trigram_mining",
-    "txn_cluster_evolution",
-    # round 6: VACUUM made catalog-visible (reclaim counts + post-vacuum
-    # read hash-pinned) — closes the lifecycle loop
-    "txn_vacuum_report",
-    # round 6: per-user trajectory stats (one lag window + integer-meter
-    # hops, exact aggregates)
-    "geo_trajectory_length",
-    # round 7: generic edge-list WCC (delta-frontier min-label propagation
-    # over star-collapsed co-occurrence edges) and the hash-checkable
-    # stateful-streaming sessionizer replay
-    "graph_wcc",
-    "streaming_sessionized",
-    # round 7: trajectory as-of join (last known position per purchase;
-    # one union-sort-window pass, exact integer coordinates/staleness)
-    "geo_position_asof",
-    # round 7: single-source BFS hop distances (frontier loop, O(E) total)
-    "graph_bfs_hops",
-    # round 7: greedy k-center diversity coreset (K map-side scans, zero
-    # shuffles, one 1-row collect per round)
-    "sample_kcenter_coreset",
-    # round 8: k-core peeling (delta-decrement, each edge fires <= once
-    # per direction) and the first-seen cumulative-distinct collapse
-    "graph_kcore",
-    "cumulative_distinct_users",
-    # round 8: optimizer observability — the Selinger memo dump (stats
-    # build + driver DP) and the IntHistogram bucket dump (the two-job
-    # distributed TableStats build)
-    "cbo_plan_memo",
-    "stats_histogram_dump",
-    # round 8 (second batch): privacy-trio EMD, M4 downsampling,
-    # Shapley attribution, integer-exact Lloyd k-means
-    "t_closeness_audit",
-    "events_downsample_m4",
-    "shapley_attribution",
-    "embedding_kmeans_lloyd",
-    "mann_whitney_u",
-    "max_drawdown",
-    "join_null_aware_anti",
-    "stats_histogram_2d_dump",
-    "pad_waste_report",
-    "text_readability",
-    # round 9: CDF-fed incremental maintenance of the persisted
-    # cell-partitioned ANN index (refresh = O(churn + affected cells))
-    "index_refresh",
-    # round 9: hybrid lexical+vector retrieval fused by reciprocal-rank
-    # (distributed global ranks, depth-bounded fusion join)
-    "rrf_hybrid_search",
-    # round 9: split-conformal prediction intervals (group-conditional
-    # order-statistic calibration + test-split coverage audit)
-    "conformal_intervals",
-    # round 9: continuous ANN-index maintenance — manifest tail streamed
-    # through an idempotent foreachBatch cell-fold (exactly-once = hash)
-    "streaming_index_upsert",
-    # round 9: MMR diversified rerank over the RRF candidates (the
-    # retrieve -> fuse -> diversify stack's last stage)
-    "mmr_diversify_topk",
-    # round 9: ranking-quality metrics (nDCG/MRR/recall per leg vs the
-    # exact-cosine ground truth) — the retrieval family's eval harness
-    "retrieval_ndcg_report",
-    # round 9: checksum-validated PAN detection (Luhn lambda algebra,
-    # map-only at scan bandwidth)
-    "pii_luhn_audit",
-    # round 10: MOSS winnowing near-dup pairs (fingerprint-blocked join
-    # with a stop cap, never doc x doc)
-    "dedup_winnowing",
-    # round 10: JL Rademacher projection 64->16 (literal codegen'd
-    # integer arithmetic, map-only)
-    "embedding_random_projection",
-    # round 10: 4-round BPE tokenizer trainer (vocab-bounded explode +
-    # 1-row argmax per round, k-center discipline)
+    "flagship_join_agg", "agg_grouped", "join_multiway", "cbo_ordered_join",
+    "topk_per_group", "window_running", "dedup_exact", "dedup_minhash_lsh",
+    "dedup_simhash_pairs", "dedup_ngram_jaccard", "dedup_embedding_cosine",
+    "dedup_span_duplication", "knn_brute_force", "knn_lsh_bucketed",
+    "text_quality", "text_lang_quality_summary", "text_rolling_fingerprint",
+    "text_tfidf_top_terms", "explode_tokens", "percentile_exact",
+    "multimodal_frame_sample", "events_tumbling", "events_sessionized",
+    "asof_join", "range_join_bucketed", "tpch_q1", "tpch_q3", "tpch_q5",
+    "tpch_q6", "tpch_q10", "tpch_q18", "tpch_q19", "events_rollup_multires",
+    "events_funnel", "latest_per_key", "join_salted_skew",
+    "quality_gopher_rules", "text_unigram_logprob", "embedding_quantize_int8",
+    "corpus_prep", "curriculum_bins", "text_entropy", "sliding_distinct_users",
+    "late_supplier_blame", "robust_stats_mad", "graph_pagerank", "tpch_q2",
+    "source_python_datasource", "knn_ivf", "tpch_q15", "incremental_join_view",
+    "interval_overlap_join", "dedup_embedding_cosine_lsh", "asof_join_salted",
+    "txn_merge_upsert", "txn_zonemap_scan", "txn_point_lookup",
+    "txn_constraint_gate", "dedup_incremental_lsh", "pii_redact",
+    "event_pattern_match", "dedup_cdc_chunks", "ewma_smooth",
+    "quantile_sketch_mergeable", "txn_delete_mor", "txn_retention_delete",
+    "boilerplate_strip", "entity_resolution", "feature_assembly_pit",
+    "txn_wap_publish", "txn_scd2_apply", "rolling_median",
+    "running_balance_clamped", "correlation_matrix", "contrastive_pairs_lsh",
+    "dedup_set_similarity_prefix", "fifo_allocation", "seasonal_decompose",
+    "survival_km", "bpe_pair_merge", "feature_hash_vectorize", "model_auc_roc",
+    "model_pr_auc", "spearman_rank_corr", "events_ohlc_bars",
+    "percentile_cont_domain", "feature_standardize", "dsir_importance_weights",
+    "bootstrap_ci_mean", "ab_test_cuped", "pipeline_funnel_report",
+    "gbt_inference_sql", "source_python_datasink", "recsys_item_cosine",
+    "markov_attribution", "cluster_key_advisor", "source_loo_vocab",
+    "geo_nearest_facility", "geo_grid_density", "autocorr_lags",
+    "activity_islands", "time_decay_attribution", "bh_fdr_report",
+    "l_diversity_audit", "event_trigram_mining", "txn_cluster_evolution",
+    "txn_vacuum_report", "geo_trajectory_length", "graph_wcc",
+    "streaming_sessionized", "geo_position_asof", "graph_bfs_hops",
+    "sample_kcenter_coreset", "graph_kcore", "cumulative_distinct_users",
+    "cbo_plan_memo", "stats_histogram_dump", "t_closeness_audit",
+    "events_downsample_m4", "shapley_attribution", "embedding_kmeans_lloyd",
+    "mann_whitney_u", "max_drawdown", "join_null_aware_anti",
+    "stats_histogram_2d_dump", "pad_waste_report", "text_readability",
+    "index_refresh", "rrf_hybrid_search", "conformal_intervals",
+    "streaming_index_upsert", "mmr_diversify_topk", "retrieval_ndcg_report",
+    "pii_luhn_audit", "dedup_winnowing", "embedding_random_projection",
     "bpe_train_steps",
 ]
 
@@ -350,8 +130,6 @@ def _reap_stray_spark_jvms() -> None:
                 b"verify",
                 b"pytest-dbms-qos",
                 b"dbms_query_optimizer_spark",
-                b"reprofile",
-                b"gen_plans",
                 b"check_eager_flags",
                 b"pq_recall_sweep",
             )
@@ -387,121 +165,48 @@ def _reap_stray_spark_jvms() -> None:
             pass
 
 
-# Near-idle min-of-3 idle references for the two calibration probes on
-# this environment's 32-thread local JVM (measured round 10; short:
-# post-sweep probes of three sessions 0.553 / 0.600 / 0.600; sustained:
-# idle-box min-of-3). The absolute values only anchor the host-load
-# RATIO; re-measure and update if the probes or hardware change.
-CALIB_IDLE_SEC = 0.58
-CALIB_SUSTAINED_IDLE_SEC = 0.86  # best observed min across r10 sessions
-
-
-def _calibration_probe(spark, rows: int) -> float:
-    """Fixed CPU-bound workload (md5 over ``rows``, hash-agg) whose code
-    never changes round to round: its wall time moves ONLY with host
-    load, so it converts 'is this sample noisy?' from a judgment call
-    into a recorded number. min-of-3 like every bench entry. TWO sizes
-    are probed: a short burst (4M rows, ~0.6 s idle) that sees ambient
-    contention, and a SUSTAINED one (16M rows, ~2.1 s idle) that also
-    sees sustained-CPU throttling/steal — round 10 found several
-    seconds-long CPU-bound queries uniformly ~1.7x slower while
-    sub-second queries and the short probe barely moved, a class the
-    short probe alone cannot expose."""
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.monotonic()
-        (
-            spark.range(rows)
-            .selectExpr("md5(cast(id as string)) AS h")
-            .selectExpr("count(distinct substring(h, 1, 4)) AS n")
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
-        best = min(best, time.monotonic() - t0)
-    return round(best, 3)
-
-
-def _sweep_once(spark, sf_dir: str) -> dict:
-    """One full calibrated timing sweep: pre-probes, min-of-3 per
-    headline query, post-probes. Returns the artifact dict (sans
-    metric/sf framing) with its own host_load_factor."""
-    calib_pre = _calibration_probe(spark, 4_000_000)
-    calib_sustained_pre = _calibration_probe(spark, 16_000_000)
-
+def _time_queries(spark, sf_dir: str, names: list[str]) -> tuple[dict, dict]:
+    """Min-of-3 wall time per query, plus each query's max/min spread."""
     qs = catalog.queries()
     timings: dict[str, float] = {}
+    spread: dict[str, float] = {}
     # min of 3 runs per query: single-run local-JVM timings jitter +-20%
     # from GC/codegen, and a heavy plan's FIRST execution pays its
     # whole-stage-codegen JIT compile (observed 9.2 s cold vs 2.4 s warm
     # on the minhash plan) — with 2 runs the min can still be a
     # half-warm sample. The min of 3 is the stable engine-cost estimate.
-    for name in HEADLINE:
+    for name in names:
         fn = qs[name]
-        best = float("inf")
+        runs = []
         for _ in range(3):
             t0 = time.monotonic()
             df = fn(spark, sf_dir)
             df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.monotonic() - t0)
+            runs.append(time.monotonic() - t0)
         # drop frames the query persisted (cache.track_persist) AFTER the
         # 3 runs, not between them: Spark's canonicalized-plan cache lookup
         # lets runs 2-3 reuse run 1's materialization (as every recorded
         # bench round did), so releasing between runs would inflate the
         # min-of-3; releasing after bounds live cache to one query's frames
         release_tracked()
-        timings[name] = round(best, 3)
-
-    calib_post = _calibration_probe(spark, 4_000_000)
-    calib_sustained_post = _calibration_probe(spark, 16_000_000)
-
-    # per probe the factor uses the SMALLER of pre/post (the pre probe
-    # can still be paying JIT min-of-3 didn't fully absorb; overstating
-    # load would excuse real regressions); the overall factor is the
-    # MAX across the two probe sizes, so sustained-CPU throttling that
-    # spares short bursts still marks the artifact
-    factor = round(
-        max(
-            min(calib_pre, calib_post) / CALIB_IDLE_SEC,
-            min(calib_sustained_pre, calib_sustained_post)
-            / CALIB_SUSTAINED_IDLE_SEC,
-        ),
-        2,
-    )
-    # pre/post DISAGREEMENT is its own signal: a load transient that
-    # starts or dies MID-SWEEP leaves one probe clean (so the min-based
-    # factor reads idle) while half the queries ran loaded — observed
-    # round 11: pre probes 5.8/7.7 s vs post 0.69/0.99 s, factor 1.19,
-    # early-sweep queries ~3-10x inflated. Stability = max/min per probe
-    # size; the gate retries on instability exactly like on load.
-    stability = round(
-        max(
-            max(calib_pre, calib_post) / min(calib_pre, calib_post),
-            max(calib_sustained_pre, calib_sustained_post)
-            / min(calib_sustained_pre, calib_sustained_post),
-        ),
-        2,
-    )
-    return {
-        "queries": timings,
-        "calib": {
-            "probe_pre_sec": calib_pre,
-            "probe_post_sec": calib_post,
-            "idle_ref_sec": CALIB_IDLE_SEC,
-            "sustained_pre_sec": calib_sustained_pre,
-            "sustained_post_sec": calib_sustained_post,
-            "sustained_idle_ref_sec": CALIB_SUSTAINED_IDLE_SEC,
-            "host_load_factor": factor,
-            "probe_stability": stability,
-        },
-    }
+        timings[name] = round(min(runs), 3)
+        spread[name] = round(max(runs) / min(runs), 2)
+    return timings, spread
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description="Time catalog queries.")
+    ap.add_argument("names", nargs="*", help="catalog names (default: HEADLINE)")
+    args = ap.parse_args(argv)
+    names = args.names or HEADLINE
+    unknown = [n for n in names if n not in catalog.CATALOG]
+    if unknown:
+        ap.error(f"unknown query name(s): {', '.join(unknown)}")
+
     if os.environ.get("SPARK_GRAFT_SKIP_JVM_GUARD") != "1":
         _reap_stray_spark_jvms()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
 
     spark = get_spark(
@@ -519,79 +224,31 @@ def main() -> None:
         df.count()
     spark.range(100).selectExpr("md5(cast(id as string)) h").groupBy().count().collect()
     # spawn the Arrow Python-worker pool once, so the first Pandas-plane
-    # query measures its plan, not 32 interpreter startups
+    # query measures its plan, not one interpreter startup per core
     spark.range(1024).repartition(int(spark.conf.get("spark.sql.shuffle.partitions"))).mapInPandas(
         lambda it: it, schema="id long"
     ).write.mode("overwrite").format("noop").save()
 
-    # CONTENTION GATE (r10 verdict task 1): a loaded host window must
-    # never become the recorded denominator. If the sweep's own
-    # calibration says the host was > LOAD_GATE x idle, sleep out the
-    # contention and re-sweep (bounded retries); emit the attempt with
-    # the LOWEST factor either way, with every attempt's factor recorded
-    # so a still-loaded final artifact documents itself as such
-    # (BENCH_r10 stamped itself 1.43 and cost a round of false 2x
-    # breaches). Attempts reuse the warm session: the probes measure
-    # host load, not JVM state.
-    load_gate = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "1.25"))
-    stability_gate = float(os.environ.get("SPARK_GRAFT_LOAD_STABILITY", "2.0"))
-    retries = int(os.environ.get("SPARK_GRAFT_LOAD_RETRIES", "2"))
-    retry_sleep = float(os.environ.get("SPARK_GRAFT_LOAD_SLEEP", "120"))
-    attempts = []
-    attempt_stabilities = []
-    best = None
-    for attempt in range(1 + retries):
-        result = _sweep_once(spark, sf_dir)
-        factor = result["calib"]["host_load_factor"]
-        stability = result["calib"]["probe_stability"]
-        attempts.append(factor)
-        # paired with attempt_factors: documents WHICH gate (load vs
-        # stability) triggered any re-sweep (ADVICE r11)
-        attempt_stabilities.append(stability)
-        # rank attempts by (stable?, factor): an unstable sweep is worse
-        # than any stable one regardless of its min-based factor
-        key = (stability > stability_gate, factor)
-        if best is None or key < (
-            best["calib"]["probe_stability"] > stability_gate,
-            best["calib"]["host_load_factor"],
-        ):
-            best = result
-        if factor <= load_gate and stability <= stability_gate:
-            break
-        if attempt < retries:
-            print(
-                f"bench: host_load_factor {factor} (gate {load_gate}) / "
-                f"probe_stability {stability} (gate {stability_gate}) "
-                f"out of bounds; sleeping {retry_sleep:.0f}s and "
-                f"re-sweeping (attempt {attempt + 1}/{1 + retries})",
-                file=sys.stderr,
-            )
-            time.sleep(retry_sleep)
-
-    best["calib"]["load_gate"] = load_gate
-    best["calib"]["stability_gate"] = stability_gate
-    best["calib"]["attempt_factors"] = attempts
-    best["calib"]["attempt_stabilities"] = attempt_stabilities
-    timings = best["queries"]
-    total = round(sum(timings.values()), 3)
+    timings, spread = _time_queries(spark, sf_dir, names)
     line = json.dumps(
         {
             "metric": "headline_queries_wall_time",
-            "value": total,
+            "value": round(sum(timings.values()), 3),
             "unit": "sec",
             "queries": timings,
             "sf": sf,
-            "calib": best["calib"],
+            "spread": spread,
         }
     )
-    # Durable copy of the one-line contract output: a truncated stdout
-    # tail cost round 10 its entire baseline comparison (BENCH_r10
-    # parsed: null). stdout stays the contract; the file is recovery.
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_OUT.json"), "w") as f:
-            f.write(line + "\n")
-    except OSError:
-        pass
+    # Durable copy of the full headline run's one-line output: a
+    # truncated stdout tail once cost a whole baseline comparison.
+    # stdout stays the contract; the file is recovery.
+    if not args.names:
+        try:
+            with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_OUT.json"), "w") as f:
+                f.write(line + "\n")
+        except OSError:
+            pass
     print(line)
 
 

@@ -55,14 +55,22 @@ def _stage_concurrent(table, frames: list[DataFrame]) -> None:
     transactions carry no expected_base, so concurrent staging has no
     conflict window; constraint Observations ride each write unchanged.
     The final table (files, stats, blooms, version order) is identical
-    to the sequential loop's."""
+    to the sequential loop's. If any insert or commit raises, every
+    transaction not yet finished is aborted (its staging dir removed)
+    before the error propagates."""
     from concurrent.futures import ThreadPoolExecutor
 
     txns = [table.begin() for _ in frames]
-    with ThreadPoolExecutor(max_workers=min(4, max(1, len(frames)))) as pool:
-        list(pool.map(lambda tf: tf[0].insert(tf[1]), zip(txns, frames)))
-    for t in txns:
-        t.commit()
+    try:
+        with ThreadPoolExecutor(max_workers=min(4, max(1, len(frames)))) as pool:
+            list(pool.map(lambda tf: tf[0].insert(tf[1]), zip(txns, frames)))
+        for t in txns:
+            t.commit()
+    except BaseException:
+        for t in txns:
+            if not t._done:  # committed, or auto-aborted by a constraint
+                t.abort()
+        raise
 
 
 def q_source_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

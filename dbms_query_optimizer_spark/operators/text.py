@@ -1418,7 +1418,7 @@ LIMIT {RAKE_TOP_K}
 """
 
 
-CALIB_BINS = 10
+CALIBRATION_BINS = 10
 
 
 def q_model_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1450,8 +1450,8 @@ def q_model_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     p6 = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
     p_micro = F.round(p6 * F.lit(1000000.0)).cast("long")
     bin_id = F.least(
-        (p_micro * CALIB_BINS / F.lit(1000000)).cast("long"),
-        F.lit(CALIB_BINS - 1),
+        (p_micro * CALIBRATION_BINS / F.lit(1000000)).cast("long"),
+        F.lit(CALIBRATION_BINS - 1),
     ).cast("int")
     scored = t["documents"].select(
         bin_id.alias("bin"),
@@ -1484,8 +1484,8 @@ def _oracle_model_calibration_report() -> str:
     return f"""
 WITH scored AS (
     SELECT LEAST(CAST(CAST(ROUND({p6} * 1000000.0) AS BIGINT)
-                      * {CALIB_BINS} // 1000000 AS BIGINT),
-                 {CALIB_BINS - 1}) AS bin,
+                      * {CALIBRATION_BINS} // 1000000 AS BIGINT),
+                 {CALIBRATION_BINS - 1}) AS bin,
            CAST(ROUND({p6} * 1000000.0) AS BIGINT) AS p_micro,
            CAST(lang = 'en' AS BIGINT) AS y
     FROM documents

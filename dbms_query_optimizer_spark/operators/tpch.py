@@ -207,8 +207,8 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6 forecast revenue change: single filtered scan, one global sum.
 
     The pushdown showcase: all three predicates and the two needed columns
-    reach the parquet reader (PushedFilters + ReadSchema in PLANS.md), so
-    at 100 TB the scan reads two columns of row groups whose min/max
+    reach the parquet reader (PushedFilters + ReadSchema, pinned by
+    tests/test_plan_properties.py), so at 100 TB the scan reads two columns of row groups whose min/max
     statistics pass the shipdate window.
     """
     li = load_tables(spark, sf_dir)["lineitem"]

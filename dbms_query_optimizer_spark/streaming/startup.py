@@ -57,17 +57,21 @@ def start_and_drain(
     for attempt in range(attempts):
         if attempt and reset is not None:
             reset()
-        q = start()
+        q = None
         try:
+            # start() itself can raise the flake (the source's planner
+            # worker is spawned there), so it retries like the drain
+            q = start()
             q.processAllAvailable()
             return
         except Exception as e:
             if attempt + 1 >= attempts or not is_worker_spawn_flake(e):
                 raise
         finally:
-            try:
-                q.stop()
-            except Exception:
-                # stop() on an already-dead query can rethrow the stream
-                # error; the drain above already adjudicated it.
-                pass
+            if q is not None:
+                try:
+                    q.stop()
+                except Exception:
+                    # stop() on an already-dead query can rethrow the
+                    # stream error; the drain above already adjudicated it.
+                    pass

@@ -9,8 +9,12 @@ ConflictError (rewrites). These tests race REAL threads through the
 whole path to pin that arbitration down.
 """
 
+import os
 from concurrent.futures import ThreadPoolExecutor
 
+import pytest
+
+from dbms_query_optimizer_spark.operators.sources_queries import _stage_concurrent
 from dbms_query_optimizer_spark.sources.manifest import TransactionalTable
 
 N_WRITERS = 8
@@ -69,3 +73,19 @@ def test_concurrent_merges_one_wins_one_conflicts(spark, tmp_path):
         m2.commit()
     got = sorted((r.id, r.val) for r in TransactionalTable(root).read(spark).collect())
     assert got == [(1, 10.0), (2, 2.0)]  # m2's update never half-applied
+
+
+def test_failed_concurrent_staging_leaves_no_orphans(spark, tmp_path):
+    root = str(tmp_path / "staged_table")
+    table = TransactionalTable.create(
+        root, spark.range(0).selectExpr("id").schema
+    )
+    good = spark.range(4).coalesce(1)
+    bad = spark.range(4).selectExpr(
+        "IF(id = 2, raise_error('staging write failed'), id) AS id"
+    )
+    with pytest.raises(Exception, match="staging write failed"):
+        _stage_concurrent(table, [good, bad, good])
+    # the siblings' staging dirs are aborted, not left for vacuum
+    assert os.listdir(os.path.join(root, "data")) == []
+    assert table.latest_version() == 0

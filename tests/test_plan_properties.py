@@ -1,10 +1,11 @@
 """Physical-plan property regression tests.
 
-PLANS.md documents the plan shape each representative query must exhibit;
-these tests pin the load-bearing properties programmatically so a
-regression (lost pushdown, a dimension join degrading to SortMergeJoin, a
-window sneaking in before a limit, an accidental cartesian product) fails
-CI instead of silently shipping a 100×-worse plan.
+Each representative query's expected plan shape lives here, as the
+assertions themselves: a regression (lost pushdown, a dimension join
+degrading to SortMergeJoin, a window sneaking in before a limit, an
+accidental cartesian product) fails CI instead of silently shipping a
+100×-worse plan. To read a whole plan, call ``.explain("formatted")`` on
+the catalog entry.
 
 Assertions target the formatted explain string — the same artifact a human
 reads. Presence/absence checks run over the whole explain; ORDERING
@@ -196,15 +197,18 @@ def test_global_ranks_never_single_partition(explain, name):
 
 
 # ---------------------------------------------------------------------------
-# Per-headline structural pins. Every query benched in bench.py HEADLINE
-# carries at least the default gate (no cartesian product, no
-# row-at-a-time Python eval) plus, where listed, the load-bearing
-# property of ITS plan — so a Spark upgrade or refactor that silently
-# de-optimizes a headline plan fails here instead of surfacing as an
-# unexplained bench regression rounds later.
+# Per-query structural pins. Every query benched in bench.py HEADLINE,
+# and each representative non-headline plan listed at the end, carries
+# at least the default gate (no cartesian product, no row-at-a-time
+# Python eval) plus, where listed, the load-bearing property of ITS plan
+# — so a Spark upgrade or refactor that silently de-optimizes a plan
+# fails here instead of surfacing as an unexplained bench regression.
 #
 # must_have entries match the full formatted explain; entries prefixed
 # with "tree:" match only the operator diagram. A leading "!" negates.
+# An entry starting with an upper-case letter is matched as a whole
+# word (a regex, so keep it free of brackets); any other entry is a
+# plain substring.
 
 _DEFAULT_MUST_NOT = ("CartesianProduct", "BatchEvalPython")
 
@@ -621,6 +625,108 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     # argmax collects); the returned merge table is driver metadata — a
     # parquet scan here would mean a round re-read the corpus
     "bpe_train_steps": ["!Scan parquet"],
+    # ---- representative non-headline plans
+    # Hive-partitioned read: the event_type predicate prunes directories
+    # (PartitionFilters), so no residual Filter runs over the rows
+    "source_partitioned_scan": [
+        "PartitionFilters", "(click,purchase)", "!tree:Filter",
+    ],
+    # snapshot + delta partials: each side's shipdate cut is pushed to
+    # its scan, the partial aggregates meet in a Union, then one final
+    "incremental_agg_merge": [
+        "tree:Union", "tree:HashAggregate", "partial_",
+        "LessThan", "GreaterThanOrEqual",
+    ],
+    # dynamic partition pruning: the fact scan's partition filter is
+    # decided at run time from the dim side
+    "dpp_join_pruned": [
+        "PartitionFilters", "dynamicpruningexpression(",
+        "tree:BroadcastHashJoin",
+    ],
+    # constant-size band dim: a broadcast nested loop with the two range
+    # predicates as its join condition, right for any fact scale
+    "band_join_lookup": [
+        "tree:BroadcastNestedLoopJoin Inner BuildRight", ">= lo#", "< hi#",
+        "!tree:SortMergeJoin",
+    ],
+    # widest join in the TPC-H suite: dimensions broadcast, the
+    # customer-region restriction as a left-semi broadcast join, the
+    # conditional market-share aggregate as one partial+final pair
+    "tpch_q8": [
+        "tree:BroadcastHashJoin LeftSemi", "tree:BroadcastHashJoin",
+        "partial_",
+    ],
+    # decontamination: eval spans probed map-side by a left-semi
+    # broadcast (the corpus span explosion is never shuffled against
+    # the eval set), then a left outer join back to the doc list
+    "decontaminate_ngram": [
+        "tree:Generate", "tree:BroadcastHashJoin LeftSemi",
+        "tree:LeftOuter",
+    ],
+    # BM25: df table as a broadcast equi-join, the 1-row N/avgdl stats
+    # as a broadcast nested loop, no shuffled pair join
+    "bm25_score": [
+        "tree:BroadcastHashJoin", "tree:BroadcastNestedLoopJoin",
+        "!tree:SortMergeJoin",
+    ],
+    # ARG_MAX as partial+final max(struct) SortAggregate, never a
+    # rank-1 window over every customer row
+    "argmax_per_group": [
+        "tree:SortAggregate", "partial_max(struct(", "!tree:Window",
+    ],
+    # Pareto frontier: a running-max Window over the per-price maxima,
+    # never a quadratic self-join
+    "skyline_pareto": [
+        "tree:Window", "!tree:BroadcastNestedLoopJoin", "!tree:SortMergeJoin",
+    ],
+    # native WITH RECURSIVE: the engine's fixpoint operator, not N
+    # unrolled joins; partial+final aggregate over its output
+    "recursive_cte_ancestors": [
+        "tree:UnionLoop", "tree:HashAggregate", "partial_",
+        "!tree:BroadcastHashJoin", "!tree:SortMergeJoin",
+    ],
+    # post-OPTIMIZE read: the range predicate is pushed to a scan of
+    # one compacted file (a second path would print ".parquet, ...")
+    "txn_compact_scan": [
+        "tree:Scan parquet", "GreaterThanOrEqual", "!.parquet, ",
+    ],
+    # sketches: HLL and approx-percentile in one ObjectHashAggregate;
+    # the median rank-check is a broadcast nested loop on 1-row stats
+    "approx_aggs": [
+        "tree:ObjectHashAggregate", "partial_approx_count_distinct",
+        "partial_percentile_approx", "tree:BroadcastNestedLoopJoin",
+    ],
+    # two-stage reservoir: stage 1 ranks per (source, _salt) shard and
+    # keeps k rows each, stage 2 ranks per source over those
+    "sample_reservoir_per_group": [
+        "tree:Window", "tree:WindowGroupLimit", "hashpartitioning(source#",
+        "_salt",
+    ],
+    # point-in-time SCD2: the dimension is a per-user lead() Window, the
+    # interval rides a left-outer equi-join, never a nested loop
+    "scd2_point_in_time": [
+        "tree:Window", "lead(", "tree:LeftOuter",
+        "!tree:BroadcastNestedLoopJoin",
+    ],
+    # cogrouped pandas: both inputs hash-partitioned on o_custkey into
+    # one FlatMapCoGroupsInPandas; cents computed JVM-side
+    "cogroup_reconcile": [
+        "tree:FlatMapCoGroupsInPandas", "hashpartitioning(o_custkey",
+        "!ArrowEvalPython", "!tree:SortMergeJoin",
+    ],
+    # frozen logistic gate: features and sigmoid fused into the scan
+    # projection over a pruned schema; no Python, no shuffle but the sort
+    "quality_classifier_score": [
+        "ReadSchema: struct<doc_id:bigint,text:string,lang:string>",
+        "!ArrowEvalPython", "!MapInPandas", "!tree:HashAggregate",
+        "!hashpartitioning",
+    ],
+    # mixed-language ID: round-robin exchanges are deliberate barriers
+    # against projection collapse re-inlining regexp_replace into every
+    # marker count (measured 5.6 s vs 1.8 s at sf0.1 without them)
+    "text_mixed_language": [
+        "RoundRobinPartitioning", "!ArrowEvalPython", "!MapInPandas",
+    ],
 }
 
 

@@ -62,6 +62,21 @@ def test_retries_flake_with_reset_between_attempts():
     assert log == ["start", "stop", "reset", "start", "stop", "reset", "start", "stop"]
 
 
+def test_flake_raised_by_start_itself_retries():
+    log = []
+    outcomes = [FLAKE, None]
+
+    def start():
+        log.append("start")
+        exc = outcomes.pop(0)
+        if exc is not None:
+            raise exc
+        return _StubQuery(log=log)
+
+    start_and_drain(start, reset=lambda: log.append("reset"), attempts=3)
+    assert log == ["start", "reset", "start", "stop"]
+
+
 def test_exhausted_attempts_reraise():
     with pytest.raises(Exception, match="connect back"):
         start_and_drain(lambda: _StubQuery(exc=FLAKE), attempts=2)
