@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from ..cache import track_persist
 from ..engine import load_tables
 from ..functions.text import fingerprint_md5, norm_text, tokens, word_ngrams
+from .graph import weakly_connected_components
 
 NUM_PERM = 16  # minhash permutations
 LSH_BANDS = 4  # bands of NUM_PERM // LSH_BANDS rows each
@@ -267,7 +268,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     band buckets, so work is sum over buckets of |bucket|^2, not n^2.
     """
     t = load_tables(spark, sf_dir)
-    sh = _doc_shingles(t["documents"]).cache()
+    sh = track_persist(_doc_shingles(t["documents"]))
     sig = _minhash_sig(sh)
     bands = _sig_bands(sig)
 
@@ -343,7 +344,7 @@ def q_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall = n_verified / n_exact.
     """
     t = load_tables(spark, sf_dir)
-    sh = _doc_shingles(t["documents"]).cache()
+    sh = track_persist(_doc_shingles(t["documents"]))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
     def jaccard_pairs(cand: DataFrame) -> DataFrame:
@@ -581,7 +582,7 @@ def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_tables(spark, sf_dir)["documents"]
     incoming = docs.filter(F.col("doc_id") % INCR_MOD == 0)
-    in_sh = _doc_shingles(incoming).cache()
+    in_sh = track_persist(_doc_shingles(incoming))
     in_bands = _sig_bands(_minhash_sig(in_sh))
 
     cand = (
@@ -599,7 +600,7 @@ def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex_matched = docs.join(
         cand.select(F.col("ex_id").alias("doc_id")).distinct(), "doc_id", "semi"
     )
-    ex_sh = _doc_shingles(ex_matched).cache()
+    ex_sh = track_persist(_doc_shingles(ex_matched))
 
     # r11 (guide §2.3): verify over compact per-doc arrays (the
     # q_dedup_minhash_lsh rewrite) — one reduction per side yields the
@@ -857,111 +858,27 @@ def _oracle_simhash_pairs() -> str:
 # 3b. duplicate clusters: connected components over near-dup pairs
 # ---------------------------------------------------------------------------
 
-COMPONENTS_MAX_ITERS = 30
-
-
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters: connected components of the SimHash near-dup
-    graph, by iterative min-label propagation.
+    graph.
 
     Pairwise dedup output is not directly actionable — keeping "one of
     each pair" over-deletes when pairs chain (a~b, b~c). The fix is
     grouping pairs into components and keeping one representative per
-    component. Labels start as each node's own id; each iteration every
-    node takes the min label among itself and its neighbors; fixpoint =
-    components labeled by their minimum doc_id.
-
-    This is the iterative-algorithm shape Spark handles with a driver
-    loop over distributed steps, with DELTA (frontier) propagation: after
-    the first round, only nodes whose label just improved send messages —
-    an unchanged node's label was already absorbed by every neighbor in
-    the round it last changed, so re-sending is pure waste. Message volume
-    therefore tracks the shrinking frontier, not the full edge list; on a
-    billion-edge graph the late rounds join a frontier of stragglers
-    against their incident edges instead of rescanning everything.
-    localCheckpoint truncates the lineage each round so plan depth stays
-    constant; the frontier count doubles as the convergence test.
-    Iterations = graph diameter — small for near-dup clusters, log-bounded
-    variants (large-star/small-star) exist for adversarial graphs.
+    component, labeled by its minimum doc_id. The components come from
+    the shared ``graph.weakly_connected_components`` loop (min-label
+    propagation with frontier messaging and pointer jumping).
 
     The DuckDB oracle computes the same components with a recursive CTE
     (transitive closure then per-node min) — full value parity for an
     operator SQL alone cannot express without recursion.
     """
-    from ..session import state_width
-
-    edges = q_dedup_simhash_pairs(spark, sf_dir).select("id_a", "id_b").cache()
-    width = state_width(edges)
-    # persisted hash-partitioned on src (r11, the graph._undirected_
-    # persisted discipline): the message join re-reads this frame every
-    # round on src equality, so a partitioning the planner can see means
-    # only the shrinking frontier re-exchanges per round. Width derives
-    # from the session's shuffle parallelism (session.state_width) so
-    # the loop never pins to a constant at cluster scale.
-    und = (
-        edges.union(
-            edges.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-        )
-        .toDF("src", "dst")
-        .repartition(width, "src")
-        .persist()
-    )
-    # materializes the corpus-scale pair plan (and the und persist) at
-    # the ambient shuffle width — only the node-domain rounds run narrow
-    labels = (
-        edges.select(F.col("id_a").alias("node"))
-        .union(edges.select("id_b"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
-    )
-    frontier = labels  # round 1: every node announces its own label
-    from ..session import loop_width_conf
-
-    with loop_width_conf(spark, width):
-        for _ in range(COMPONENTS_MAX_ITERS):
-            # min message per receiver FIRST (map-side combine collapses
-            # the edge fan-in before the shuffle), then ONE left join
-            # against the current labels computes both the new label and
-            # the improved flag — the flag rides inside the checkpointed
-            # frame, so the frontier filter and the convergence count
-            # both scan cached partitions instead of re-running the
-            # round's joins (the previous union → groupBy → re-join
-            # shape paid one full extra round of stages per iteration
-            # just to measure the frontier).
-            msg_min = (
-                und.join(
-                    frontier.toDF("f_node", "f_label"),
-                    und.src == F.col("f_node"),
-                )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("f_label").alias("m"))
-            )
-            new_labels = (
-                labels.join(msg_min, "node", "left")
-                .select(
-                    "node",
-                    F.least("label", F.coalesce("m", "label")).alias("new_label"),
-                    (F.col("m") < F.col("label")).alias("improved"),
-                )
-                .select("node", F.col("new_label").alias("label"), "improved")
-                .coalesce(width)
-                .localCheckpoint()
-            )
-            frontier = new_labels.filter("improved").select("node", "label")
-            labels = new_labels.select("node", "label")
-            if frontier.count() == 0:
-                break
-        else:
-            und.unpersist()
-            raise RuntimeError(
-                f"components did not converge in {COMPONENTS_MAX_ITERS} iterations"
-            )
-    und.unpersist()
+    edges = q_dedup_simhash_pairs(spark, sf_dir).select("id_a", "id_b")
     w = W.partitionBy("component_id")
     return (
-        labels.select(
-            F.col("node").alias("doc_id"), F.col("label").alias("component_id")
+        weakly_connected_components(edges.toDF("src", "dst"))
+        .select(
+            F.col("node").alias("doc_id"), F.col("component").alias("component_id")
         )
         .withColumn("component_size", F.count(F.lit(1)).over(w))
         .orderBy("doc_id")
@@ -1010,7 +927,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract.
     """
     t = load_tables(spark, sf_dir)
-    sh = _doc_shingles(t["documents"]).cache()
+    sh = track_persist(_doc_shingles(t["documents"]))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -1080,7 +997,7 @@ def q_dedup_keep_superset(spark: SparkSession, sf_dir: str) -> DataFrame:
     contrast with ``dup_of`` chains in q_dedup_semantic.
     """
     t = load_tables(spark, sf_dir)
-    sh = _doc_shingles(t["documents"]).cache()
+    sh = track_persist(_doc_shingles(t["documents"]))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -1181,7 +1098,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting list — the honest baseline minhash-LSH approximates.
     """
     t = load_tables(spark, sf_dir)
-    sh = _doc_shingles(t["documents"]).cache()
+    sh = track_persist(_doc_shingles(t["documents"]))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -1639,11 +1556,12 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
        q_fuzzy_join_blocked stage — dedup-before-join, broadcast name
        table, per-block pair bound).
     2. CLUSTER: pairwise matches chain (a~b, b~c), so merge decisions
-       need CONNECTED COMPONENTS, not pairs — min-label propagation over
-       the match graph (the q_dedup_components shape; the name graph
-       after DISTINCT is tiny relative to the fact table, and variant
-       clusters have single-digit diameter, so the loop runs on a
-       names-sized frame for a handful of rounds).
+       need CONNECTED COMPONENTS, not pairs — the shared
+       ``graph.weakly_connected_components`` loop over the match graph,
+       bounded at ER_MAX_ITERS rounds (the name graph after DISTINCT is
+       tiny relative to the fact table, and variant clusters have
+       single-digit diameter, so the loop runs on a names-sized frame
+       for a handful of rounds).
     3. CANONICALIZE: each cluster's lexicographic-min name is the
        surviving record; every variant maps to it with its row count, so
        the output IS the merge plan a catalog-cleaning job applies.
@@ -1665,82 +1583,16 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("name_a") < F.col("name_b"))
         .filter(F.levenshtein("name_a", "name_b") <= FUZZY_MAX_DIST)
         .select("name_a", "name_b")
-        .cache()
     )
-    from ..session import loop_width_conf, state_width
-
-    width = state_width(pairs)
-    # r11 loop shape (the graph_wcc discipline, guide §2.2/§2.4): the
-    # symmetric edge frame persists HASH-PARTITIONED on src at the loop
-    # state width — the planner sees the cached layout, so each round's
-    # message join re-exchanges only the labels side, never the edges —
-    # and the rounds run under loop_width_conf so the names-domain
-    # exchanges plan `width` tasks, not the session's full shuffle
-    # width. Edges/labels materialize BEFORE the scope so the upstream
-    # corpus-scale name aggregation keeps ambient parallelism.
-    und = (
-        pairs.union(pairs.select(F.col("name_b"), F.col("name_a")))
-        .toDF("src", "dst")
-        .repartition(width, "src")
-        .persist()
+    comp = weakly_connected_components(
+        pairs.toDF("src", "dst"), max_iters=ER_MAX_ITERS
     )
-    labels = (
-        pairs.select(F.col("name_a").alias("node"))
-        .union(pairs.select("name_b"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
-    )
-    # propagate to a FIXED POINT, not a blind round count: a match-graph
-    # component with diameter > any fixed constant would otherwise leave
-    # labels unconverged and clusters diverging from the transitive
-    # closure. Each round is one names-sized join; the changed-count is a
-    # cheap action over the just-checkpointed frame, and real variant
-    # clusters converge in single-digit rounds.
-    try:
-        with loop_width_conf(pairs.sparkSession, width):
-            for _ in range(ER_MAX_ITERS):
-                msg = (
-                    und.join(
-                        labels.toDF("l_node", "l_label"),
-                        und.src == F.col("l_node"),
-                    )
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(F.min("l_label").alias("m"))
-                )
-                stepped = (
-                    labels.join(msg, "node", "left")
-                    .select(
-                        "node",
-                        F.col("label").alias("_old"),
-                        F.least(
-                            "label", F.coalesce("m", "label")
-                        ).alias("label"),
-                    )
-                    .localCheckpoint()
-                )
-                changed = stepped.filter(
-                    F.col("label") != F.col("_old")
-                ).count()
-                labels = stepped.select("node", "label")
-                if changed == 0:
-                    break
-            else:
-                raise RuntimeError(
-                    f"entity_resolution: labels not converged after "
-                    f"{ER_MAX_ITERS} rounds — match-graph diameter exceeds "
-                    "the safety bound"
-                )
-    finally:
-        # release on EVERY exit path — a failed count action must not
-        # leak the persisted edge frame for the session (ADVICE r11)
-        und.unpersist()
     w = W.partitionBy("canonical_name")
     return (
-        labels.join(counts, labels.node == counts.p_name)
+        comp.join(counts, comp.node == counts.p_name)
         .select(
             F.col("node").alias("name"),
-            F.col("label").alias("canonical_name"),
+            F.col("component").alias("canonical_name"),
             "n_rows",
         )
         .withColumn("cluster_size", F.count(F.lit(1)).over(w))
@@ -1817,7 +1669,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached: every Lloyd's iteration re-reads this frame (assign joins it
     # against the new centroids); without the cache the corpus would be
     # re-scanned SEMDEDUP_ITERS+2 times
-    e = t["embeddings"].select("vec_id", "embedding").cache()
+    e = track_persist(t["embeddings"].select("vec_id", "embedding"))
 
     def means(assigned: DataFrame) -> DataFrame:
         return (
@@ -2195,13 +2047,13 @@ def q_dedup_set_similarity_prefix(spark: SparkSession, sf_dir: str) -> DataFrame
     t = load_tables(spark, sf_dir)
     # cached: the tokenizing explode feeds both the df count and the
     # per-doc reduction; without the cache it runs twice.
-    sh = _doc_shingles(t["documents"]).cache()
+    sh = track_persist(_doc_shingles(t["documents"]))
     df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # ONE per-doc reduction yields both the df-ascending prefix and the
     # full set as a compact array — the only corpus-wide shuffles are the
     # df count and this groupBy; everything after runs on the 1-row-per-doc
     # frame (cached: it is touched by the index build and both verify sides).
-    docs = (
+    docs = track_persist(
         sh.join(df, "shingle")
         .groupBy("doc_id")
         .agg(
@@ -2228,7 +2080,6 @@ def q_dedup_set_similarity_prefix(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.slice("arr", F.lit(1), F.col("L")), lambda s: s.shingle
             ).alias("pre"),
         )
-        .cache()
     )
     # candidate pairs straight from the prefix inverted index, generated
     # with the no-self-join bucket-pair explode (signature plan runs once)
@@ -2389,10 +2240,10 @@ def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
     # cache: three readers (frequency agg + both pair-join sides) would
     # otherwise re-run the corpus-wide Python fingerprint stage — the
-    # dominant cost — three times (the _doc_shingles .cache() pattern)
-    wf = winnow_fingerprints_arrow(
-        _fan_out(docs.select("doc_id", "text"))
-    ).cache()
+    # dominant cost — three times (the _doc_shingles cache pattern)
+    wf = track_persist(
+        winnow_fingerprints_arrow(_fan_out(docs.select("doc_id", "text")))
+    )
     shared = (
         wf.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_docs"))

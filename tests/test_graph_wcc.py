@@ -12,8 +12,8 @@ from dbms_query_optimizer_spark.operators.graph import (
 )
 
 
-def _components(spark, edges: list[tuple[int, int]]) -> dict[int, int]:
-    df = spark.createDataFrame(edges, "src long, dst long")
+def _components(spark, edges: list[tuple], schema: str = "src long, dst long") -> dict:
+    df = spark.createDataFrame(edges, schema)
     return {
         r["node"]: r["component"]
         for r in weakly_connected_components(df).collect()
@@ -24,6 +24,16 @@ def test_chain_propagates_min_label_multi_hop(spark):
     # path 1-2-3-4-5: diameter 4 forces >1 propagation round
     comp = _components(spark, [(2, 1), (3, 2), (4, 3), (5, 4)])
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
+
+
+def test_string_chain_takes_lexicographic_min_name(spark):
+    # entity_resolution runs WCC over part names: the min sits at the far
+    # end of the chain, and "apple" < "apple pie" < "banana" by string order
+    names = ["kiwi", "banana", "fig", "apple pie", "apple"]
+    comp = _components(
+        spark, list(zip(names, names[1:])), "src string, dst string"
+    )
+    assert comp == {n: "apple" for n in names}
 
 
 def test_two_components_and_direction_independence(spark):

@@ -1,6 +1,8 @@
 """Lineage-bounding contract for iterative operators: raising the
-iteration count must NOT grow the logical plan. dedup_components
-truncates with localCheckpoint every round; graph_pagerank (r11) runs
+iteration count must NOT grow the logical plan. The shared
+graph.weakly_connected_components loop (behind graph_wcc,
+dedup_components and entity_resolution) truncates with localCheckpoint
+every round; graph_pagerank (r11) runs
 its power iteration driver-local over the collected |types|^2 transition
 matrix, so its plan is a constant-size createDataFrame regardless of
 iteration count — the same contract, satisfied structurally."""
@@ -11,6 +13,7 @@ from dbms_query_optimizer_spark.operators.graph import (
     PR_ITERATIONS,
     _pagerank,
     q_graph_pagerank,
+    weakly_connected_components,
 )
 
 
@@ -34,3 +37,17 @@ def test_pagerank_checkpoint_preserves_values(spark, sf_dir):
     b = {r["node"]: r["pagerank"] for r in q_graph_pagerank(spark, sf_dir).collect()}
     assert a == b and len(a) > 0
     assert abs(sum(a.values()) - 1.0) < 1e-3  # ranks form a distribution
+
+
+def test_wcc_plan_depth_bounded(spark):
+    # a 20-node path takes more rounds than a 4-node one; the returned
+    # labels must not carry those rounds in their plan
+    def path(n):
+        edges = [(i, i + 1) for i in range(n - 1)]
+        return weakly_connected_components(
+            spark.createDataFrame(edges, "src long, dst long")
+        )
+
+    short = _plan_size(path(4))
+    long = _plan_size(path(20))
+    assert long <= short * 1.5, (short, long)

@@ -206,11 +206,16 @@ def test_global_ranks_never_single_partition(explain, name):
 #
 # must_have entries match the full formatted explain; entries prefixed
 # with "tree:" match only the operator diagram. A leading "!" negates.
-# An entry starting with an upper-case letter is matched as a whole
-# word (a regex, so keep it free of brackets); any other entry is a
-# plain substring.
+# An entry starting with an upper-case letter or "[" is a regex matched
+# as a whole word (keep literal brackets out of it); any other entry is
+# a plain substring.
 
 _DEFAULT_MUST_NOT = ("CartesianProduct", "BatchEvalPython")
+
+# No join operator of any strategy in the tree. A bare whole-word "Join"
+# names no Spark operator, so it never matches BroadcastHashJoin,
+# ShuffledHashJoin, SortMergeJoin or BroadcastNestedLoopJoin.
+NO_JOIN = "!tree:[A-Za-z]*Join"
 
 HEADLINE_PROPS: dict[str, list[str]] = {
     # relational core: partial (map-side) aggregation before the shuffle
@@ -250,7 +255,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     "asof_join_salted": ["tree:Window"],
     "range_join_bucketed": ["!tree:BroadcastNestedLoopJoin"],  # bucket equi-join
     "interval_overlap_join": ["!tree:SortMergeJoin"],  # census, no pair join
-    "tpch_q1": ["tree:HashAggregate", "partial_", "!tree:Join"],
+    "tpch_q1": ["tree:HashAggregate", "partial_", NO_JOIN],
     "tpch_q3": ["BroadcastHashJoin"],
     "tpch_q5": ["BroadcastHashJoin"],
     "tpch_q6": [],  # bespoke test above
@@ -294,16 +299,16 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     "flagship_join_agg": [],  # bespoke test above
     # PII masking is a single codegen projection: no Python eval plane,
     # no join, no shuffle before the presentation sort
-    "pii_redact": ["!ArrowEvalPython", "!MapInPandas", "!tree:Join"],
+    "pii_redact": ["!ArrowEvalPython", "!MapInPandas", NO_JOIN],
     # sequence-pattern match: ONE aggregate + a codegen regexp — no join,
     # no window, no Python eval plane
-    "event_pattern_match": ["!tree:Join", "!tree:Window", "!ArrowEvalPython", "!MapInPandas"],
+    "event_pattern_match": [NO_JOIN, "!tree:Window", "!ArrowEvalPython", "!MapInPandas"],
     # CDC chunking: map-only JVM higher-order chunker + one hash agg —
     # no join, no Python eval plane
-    "dedup_cdc_chunks": ["tree:HashAggregate", "!tree:Join", "!MapInPandas"],
+    "dedup_cdc_chunks": ["tree:HashAggregate", NO_JOIN, "!MapInPandas"],
     # EWMA: ONE data shuffle (both windows share the user_id partitioning),
     # no self-join (that's the oracle's naive plan), JVM array fold only
-    "ewma_smooth": ["tree:Window", "!tree:Join", "!MapInPandas", "!ArrowEvalPython"],
+    "ewma_smooth": ["tree:Window", NO_JOIN, "!MapInPandas", "!ArrowEvalPython"],
     # histogram sketch: bin counts combine map-side (partial_) and every
     # planned join is a broadcast (the tiny final sel==exact SMJ pair is
     # AQE-converted at runtime; the pin is that nothing row-heavy shuffles
@@ -327,12 +332,12 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     "txn_scd2_apply": [],
     # rolling median: ONE user-partitioned window (array select), never
     # the oracle's fan-out self-join; JVM higher-order funcs only
-    "rolling_median": ["tree:Window", "!tree:Join", "!MapInPandas", "!ArrowEvalPython"],
+    "rolling_median": ["tree:Window", NO_JOIN, "!MapInPandas", "!ArrowEvalPython"],
     # Lindley balance: two stacked windows on one shuffle — no recursion,
     # no join, no Python plane
-    "running_balance_clamped": ["tree:Window", "!tree:Join", "!MapInPandas", "!ArrowEvalPython"],
+    "running_balance_clamped": ["tree:Window", NO_JOIN, "!MapInPandas", "!ArrowEvalPython"],
     # all 10 correlations from ONE map-side-combining aggregate pass
-    "correlation_matrix": ["tree:HashAggregate", "partial_", "!tree:Join"],
+    "correlation_matrix": ["tree:HashAggregate", "partial_", NO_JOIN],
     # LSH-composed contrastive mining: candidate generation is a bucket
     # EQUI-join — only the exploded anchor table broadcasts, the corpus
     # is never fed through a nested loop
@@ -367,7 +372,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     # window, map-side partials, NO join anywhere in the plan
     "model_auc_roc": [
         "tree:Window", "tree:HashAggregate", "partial_",
-        "!tree:Join", "!MapInPandas", "!ArrowEvalPython",
+        NO_JOIN, "!MapInPandas", "!ArrowEvalPython",
     ],
     # PR-AUC: same machinery plus domain-sized equi-joins; no Python plane
     "model_pr_auc": ["tree:Window", "!MapInPandas", "!ArrowEvalPython"],
@@ -384,7 +389,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     # combine (struct keys aren't hash-aggregable, so Spark plans
     # SortAggregate — still partial+final) — no window, no join at all
     "events_ohlc_bars": [
-        "tree:SortAggregate", "partial_", "!tree:Window", "!tree:Join",
+        "tree:SortAggregate", "partial_", "!tree:Window", NO_JOIN,
     ],
     # PERCENTILE_CONT: probe targets broadcast onto the value domain as
     # an EQUI-join; the only windows partition by event_type
@@ -414,7 +419,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     # compiled tree ensemble: a pure codegen projection — no join, no
     # window, no Python eval plane
     "gbt_inference_sql": [
-        "!tree:Join", "!tree:Window", "!MapInPandas", "!ArrowEvalPython",
+        NO_JOIN, "!tree:Window", "!MapInPandas", "!ArrowEvalPython",
     ],
     # connector write path: the returned frame is the checkpointed
     # read-back aggregate; default gates apply
@@ -448,7 +453,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     # a distributed top-k — never a global sort or window over the cells
     "geo_grid_density": [
         "tree:TakeOrderedAndProject", "tree:HashAggregate", "partial_",
-        "!tree:Window", "!tree:Join",
+        "!tree:Window", NO_JOIN,
     ],
     # ACF: the corpus collapses to (type, day) in one partial-agg pass;
     # the lag window and moment join-back run on the days-sized frame
@@ -457,7 +462,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     # gaps-and-islands: distinct + per-user window + aggregate — no join
     # anywhere in the plan
     "activity_islands": [
-        "tree:Window", "tree:HashAggregate", "partial_", "!tree:Join",
+        "tree:Window", "tree:HashAggregate", "partial_", NO_JOIN,
     ],
     # time-decay attribution: equi-join pairing, per-conversion Σw
     # window, integer credit — no Python eval plane
@@ -482,7 +487,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     # count, distributed top-k — no join, no global sort
     "event_trigram_mining": [
         "tree:Window", "tree:TakeOrderedAndProject", "partial_",
-        "!tree:Join",
+        NO_JOIN,
     ],
     # cluster evolution: the read half is two zone-pruned manifest
     # scans + 1-row aggregates; no corpus window, no Python plane
@@ -491,7 +496,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     "txn_vacuum_report": ["!tree:Window", "!MapInPandas"],
     # trajectory: one per-user lag window, map-side-combined aggregate
     "geo_trajectory_length": [
-        "tree:Window", "partial_", "!tree:Join", "!MapInPandas",
+        "tree:Window", "partial_", NO_JOIN, "!MapInPandas",
     ],
     "cluster_key_advisor": [
         "tree:Window", "tree:HashAggregate", "partial_", "!MapInPandas",
@@ -506,7 +511,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     "streaming_sessionized": [],
     # trajectory as-of: ONE union-sort-window pass — no join operator of
     # any kind in the plan, no Python plane
-    "geo_position_asof": ["tree:Window", "!tree:Join", "!MapInPandas"],
+    "geo_position_asof": ["tree:Window", NO_JOIN, "!MapInPandas"],
     # BFS: the returned frame is the visited union + level-count window
     # over checkpointed node-domain state; no Python plane
     "graph_bfs_hops": ["tree:Window", "!MapInPandas", "!ArrowEvalPython"],
@@ -564,17 +569,17 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     ],
     # padding audit: scan-fused projection + one constant-size aggregate
     "pad_waste_report": [
-        "tree:HashAggregate", "partial_", "!tree:Join", "!MapInPandas",
+        "tree:HashAggregate", "partial_", NO_JOIN, "!MapInPandas",
     ],
     # readability: map-only scorer — regexp counts fused into the scan,
     # nothing but the presentation sort after
-    "text_readability": ["!tree:Join", "!tree:HashAggregate", "!MapInPandas"],
+    "text_readability": [NO_JOIN, "!tree:HashAggregate", "!MapInPandas"],
     # CDF-fed index maintenance runs at construction (manifest commits +
     # dynamic-overwrite cell rewrite); the returned tail is one
     # map-side-combined per-cell aggregate over the refreshed inverted
     # file — no join, no Python plane
     "index_refresh": [
-        "tree:HashAggregate", "partial_", "!tree:Join", "!MapInPandas",
+        "tree:HashAggregate", "partial_", NO_JOIN, "!MapInPandas",
     ],
     # hybrid RRF fusion: per-leg global ranks are _pid-partitioned
     # windows (distributed_row_number — never a single-partition
@@ -593,7 +598,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     # the streamed fold runs at construction; the returned tail is the
     # same per-cell aggregate over the batch=*/cell=* inverted file
     "streaming_index_upsert": [
-        "tree:HashAggregate", "partial_", "!tree:Join", "!MapInPandas",
+        "tree:HashAggregate", "partial_", NO_JOIN, "!MapInPandas",
     ],
     # the greedy selection ran at construction (K 1-row argmax rounds,
     # k-center discipline); the returned frame is driver metadata — a
@@ -608,7 +613,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     ],
     # Luhn audit: salting + candidate split + checksum lambdas all fuse
     # into the scan projection — map-only, like the other PII/text pins
-    "pii_luhn_audit": ["!tree:Join", "!tree:HashAggregate", "!MapInPandas"],
+    "pii_luhn_audit": [NO_JOIN, "!tree:HashAggregate", "!MapInPandas"],
     # winnowing: the fingerprint stage is the Arrow map (one MapInPandas),
     # the stop-cap filter is a partial-agg'd HashAggregate, and the pair
     # stage is an EQUI join on fp — a nested-loop here would mean the
@@ -620,7 +625,7 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     # JL projection: 16 x 64 literal BIGINT terms in one projection over
     # ONE scan — map-only + the output sort; a join here would mean the
     # norm column went back to being a join-back (the round-10 review)
-    "embedding_random_projection": ["!tree:Join", "!MapInPandas"],
+    "embedding_random_projection": [NO_JOIN, "!MapInPandas"],
     # BPE training ran at construction (4 vocab-bounded rounds, 1-row
     # argmax collects); the returned merge table is driver metadata — a
     # parquet scan here would mean a round re-read the corpus
@@ -748,6 +753,19 @@ def test_every_headline_query_has_a_property_entry():
     assert not missing, f"headline queries without a plan pin: {missing}"
 
 
+def _holds(plan: str, prop: str) -> bool:
+    """Whether one HEADLINE_PROPS entry holds for a formatted explain."""
+    negate = prop.startswith("!")
+    pat = prop.lstrip("!")
+    hay = _tree(plan) if pat.startswith("tree:") else plan
+    pat = pat.removeprefix("tree:")
+    if pat[0].isupper() or pat[0] == "[":
+        found = bool(_op_spans(hay, pat))
+    else:
+        found = pat in hay
+    return found != negate
+
+
 @pytest.mark.parametrize("name", sorted(HEADLINE_PROPS))
 def test_headline_plan_properties(explain, name):
     plan = explain(name)
@@ -755,9 +773,14 @@ def test_headline_plan_properties(explain, name):
     for op in _DEFAULT_MUST_NOT:
         assert op not in tree, f"{name}: forbidden operator {op}"
     for prop in HEADLINE_PROPS[name]:
-        negate = prop.startswith("!")
-        pat = prop.lstrip("!")
-        hay = tree if pat.startswith("tree:") else plan
-        pat = pat.removeprefix("tree:")
-        found = bool(_op_spans(hay, pat)) if pat[0].isupper() else pat in hay
-        assert found != negate, f"{name}: property {prop!r} violated"
+        assert _holds(plan, prop), f"{name}: property {prop!r} violated"
+
+
+def test_no_join_pin_rejects_every_join_operator(explain):
+    # a real plan with a broadcast join fails the pin ...
+    assert not _holds(explain("join_multiway"), NO_JOIN)
+    # ... and so does a tree holding any other join strategy
+    for op in ("ShuffledHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin"):
+        tree = f"== Physical Plan ==\n* Project (3)\n+- {op} Inner (2)\n"
+        assert not _holds(tree, NO_JOIN), op
+    assert _holds(explain("tpch_q1"), NO_JOIN)
