@@ -1679,9 +1679,11 @@ def q_cbo_plan_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     join_optimizer.cc:76-92). Raw modeled COSTS are page-geometry
     dependent (parquet byte sizes) and deliberately NOT in the hash;
     their invariant rides in ``cost_ge_prefix`` instead. Stats are the
-    distributed two-job build; the DP itself is driver-side
-    microseconds, O(2^n) in joins, never in data.
+    distributed two-job build; the DP itself runs on the driver in tens
+    of microseconds for these 3 joins, O(2^n) in joins, never in data.
     """
+    from itertools import combinations
+
     from ..engine import TABLES
     from ..plans.cbo_compare import table_order_of_plan
     from ..plans.planner import JoinOptimizer, LogicalJoinNode
@@ -1704,7 +1706,7 @@ def q_cbo_plan_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = []
     for size in range(1, len(joins) + 1):
-        for subset in opt.enumerate_subsets(joins, size):
+        for subset in map(frozenset, combinations(joins, size)):
             key = " & ".join(
                 sorted(f"{j.left_table}={j.right_table}" for j in subset)
             )

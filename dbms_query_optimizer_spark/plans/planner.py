@@ -20,8 +20,14 @@ Deviations from the reference (deliberate, recorded in SURVEY.md):
 - The memo is shared, not copied per call (the reference passes its
   PlanCache by value — join_optimizer.cc:199 — an accidental
   copy-per-invocation).
-- Subset enumeration uses itertools.combinations rather than
-  next_permutation over a bitmask (join_optimizer.cc:153-168).
+- Subsets are bitmasks over the joins, as in join_optimizer.cc:153-168,
+  but visited in increasing numeric order (every subset after all of its
+  proper subsets) rather than size by size with next_permutation. A memo
+  entry keeps its last join, not the whole plan; the plan is rebuilt by
+  following these back-pointers once, at the end.
+- Candidates inside a subset are tried in input order, so a cost tie goes
+  to the earliest join in the input list and the plan is the same in every
+  process (it does not depend on set iteration order or PYTHONHASHSEED).
 - When the operand swap wins, the reference swaps the PK flags but NOT the
   cardinalities before estimating join cardinality
   (join_optimizer.cc:274-287), so its PK branch can return the PK side's
@@ -29,8 +35,10 @@ Deviations from the reference (deliberate, recorded in SURVEY.md):
   estimate_join_cardinality's contract consistent; the reference's own
   assertions (optimizer_test.cc:396-408) hold either way.
 
-The DP is O(2^n) in the number of JOINS, not in data size — it runs on the
-driver in microseconds for realistic plans and never touches an executor.
+The DP is O(2^n) in the number of JOINS, not in data size, and never
+touches an executor. On a 4-core x86 VM it takes about 33 us for 3 joins,
+about 9 ms for a 13-join chain or binary tree and about 38 ms for a
+13-join star, whose 8191 subsets are all connected.
 The chosen order is then emitted as an explicit left-deep DataFrame
 composition (emitter.py), where Catalyst picks the physical algorithms.
 """
@@ -38,7 +46,6 @@ composition (emitter.py), where Catalyst picks the physical algorithms.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from itertools import combinations
 
 from .stats import PredicateType, TableStats
 
@@ -74,17 +81,40 @@ class CostCard:
 
 
 class PlanCache:
-    """DP memo: best (order, cost, card) per join-subset
-    (reference join_optimizer.h:64-112)."""
+    """DP memo: best (cost, card, last join) per join subset
+    (reference join_optimizer.h:64-112). A subset is a bitmask over
+    ``joins``; its plan is rebuilt by following the last-join
+    back-pointers."""
 
-    def __init__(self) -> None:
-        self._best: dict[frozenset[LogicalJoinNode], CostCard] = {}
+    def __init__(
+        self,
+        joins: list[LogicalJoinNode],
+        best: dict[int, tuple[float, int, int]],
+    ) -> None:
+        self.joins = joins
+        self._bit = {j: 1 << i for i, j in enumerate(joins)}
+        # subset mask -> (cost, card, 2 * last join index + 1 if swapped)
+        self._best = best
 
-    def add_plan(self, s: frozenset[LogicalJoinNode], cc: CostCard) -> None:
-        self._best[s] = cc
+    def plan(self, s: int) -> list[LogicalJoinNode]:
+        """The memoized left-deep order for subset mask ``s``."""
+        plan = []
+        while s:
+            step = self._best[s][2]
+            j = self.joins[step >> 1]
+            plan.append(j.swap_inner_outer() if step & 1 else j)
+            s ^= 1 << (step >> 1)
+        plan.reverse()
+        return plan
 
     def get(self, s: frozenset[LogicalJoinNode]) -> CostCard | None:
-        return self._best.get(s)
+        if not all(j in self._bit for j in s):
+            return None
+        mask = sum(self._bit[j] for j in s)
+        best = self._best.get(mask)
+        if best is None:
+            return None
+        return CostCard(cost=best[0], card=best[1], plan=self.plan(mask))
 
 
 class JoinOptimizer:
@@ -142,16 +172,7 @@ class JoinOptimizer:
                 return True
         return False
 
-    @staticmethod
-    def _does_join(plan: list[LogicalJoinNode], table: str) -> bool:
-        return any(table in (j.left_table, j.right_table) for j in plan)
-
     # -- search -------------------------------------------------------------
-
-    @staticmethod
-    def enumerate_subsets(v: list[LogicalJoinNode], size: int):
-        """All size-k subsets (reference join_optimizer.cc:153-168)."""
-        return [frozenset(c) for c in combinations(v, size)]
 
     def order_joins(
         self,
@@ -159,33 +180,99 @@ class JoinOptimizer:
         filter_selectivities: dict[str, float],
     ) -> list[LogicalJoinNode]:
         """Bottom-up DP; returns the best left-deep join order
-        (reference join_optimizer.cc:108-137)."""
-        pc = PlanCache()
-        best_overall: CostCard | None = None
-        n = len(self.joins)
-        for size in range(1, n + 1):
-            for subset in self.enumerate_subsets(self.joins, size):
-                best: CostCard | None = None
-                best_cost = float("inf")
-                for j in subset:
-                    cc = self._compute_cost_and_card_of_subplan(
-                        stats, filter_selectivities, j, subset, best_cost, pc
-                    )
-                    if cc is not None:
-                        best_cost = cc.cost
-                        best = cc
-                if best is not None:
-                    pc.add_plan(subset, best)
-                    if size == n:
-                        best_overall = best
+        (reference join_optimizer.cc:108-137).
+
+        Join ``i`` of the de-duplicated input is bit ``i`` of a subset
+        (join_optimizer.cc:153-168). Each subset extends the memoized best
+        plan of ``subset - {j}`` by ``j`` (join_optimizer.cc:195-292), with
+        ``j`` tried in input order, so cost ties go to the earliest join.
+        """
+        joins = list(dict.fromkeys(self.joins))  # equal nodes are one join
+        n = len(joins)
+        table_bit: dict[str, int] = {}
+        for j in joins:
+            for t in (j.left_table, j.right_table):
+                table_bit.setdefault(t, 1 << len(table_bit))
+        sels = filter_selectivities
+
+        def side(table: str, field: str) -> tuple[int, float, int, bool]:
+            return (
+                table_bit[table],
+                stats[table].estimate_scan_cost(),
+                stats[table].estimate_table_cardinality(sels.get(table, 1.0)),
+                self._is_pk(table, field),
+            )
+
+        # per join: (table bit, scan cost, scan card, PK flag) of each side
+        left = [side(j.left_table, j.left_field) for j in joins]
+        right = [side(j.right_table, j.right_field) for j in joins]
+        ops = [j.op for j in joins]
+        touched = [left[i][0] | right[i][0] for i in range(n)]
+        # joins touching a PK column: _has_pkey of a subplan depends only
+        # on which joins it holds, so it is ``pk_mask & subset``
+        pk_mask = sum(1 << i for i in range(n) if left[i][3] or right[i][3])
+        join_cost = self.estimate_join_cost
+        join_card = self.estimate_join_cardinality
+
+        full = (1 << n) - 1
+        tables = [0] * (full + 1)  # table bits a subset's joins touch
+        # memo: subset -> (cost, card, 2 * last join + 1 if it was swapped)
+        memo: dict[int, tuple[float, int, int]] = {}
+        for s in range(1, full + 1):
+            low = s & -s
+            tables[s] = tables[s ^ low] | touched[low.bit_length() - 1]
+            best: tuple[float, int, int] | None = None
+            best_cost = float("inf")
+            m = s
+            while m:
+                low = m & -m
+                m ^= low
+                rest = s ^ low
+                i = low.bit_length() - 1
+                if not rest:  # base case: both operands are base relations
+                    _, t1_cost, t1_card, left_pkey = left[i]
+                    _, t2_cost, t2_card, right_pkey = right[i]
+                else:
+                    cached = memo.get(rest)
+                    if cached is None:
+                        continue  # subset needed a cross product (cc:232-234)
+                    # the sub-plan is the outer operand if it holds the left
+                    # table (so a cycle edge keeps its left orientation)
+                    if tables[rest] & left[i][0]:
+                        t1_cost, t1_card, _ = cached
+                        left_pkey = bool(pk_mask & rest)
+                        _, t2_cost, t2_card, right_pkey = right[i]
+                    elif tables[rest] & right[i][0]:
+                        t2_cost, t2_card, _ = cached
+                        right_pkey = bool(pk_mask & rest)
+                        _, t1_cost, t1_card, left_pkey = left[i]
+                    else:
+                        continue  # neither side connects -> cross product (cc:262-266)
+                # cost both operand orders; keep the cheaper (cc:270-281)
+                cost1 = join_cost(t1_card, t2_card, t1_cost, t2_cost)
+                cost2 = join_cost(t2_card, t1_card, t2_cost, t1_cost)
+                step = 2 * i
+                if cost2 < cost1:
+                    cost1, step = cost2, step + 1
+                    t1_card, t2_card = t2_card, t1_card
+                    left_pkey, right_pkey = right_pkey, left_pkey
+                if cost1 >= best_cost:
+                    continue  # prune (cc:282-283)
+                best_cost = cost1
+                best = (cost1, join_card(ops[i], t1_card, t2_card, left_pkey, right_pkey), step)
+            if best is not None:
+                memo[s] = best
         # the winning plan's modeled cost and the full DP memo, observable
         # for tests/comparisons and the EXPLAIN-style memo dump
         # (q_cbo_plan_memo) — the reference keeps its PlanCache internal;
         # surfacing it makes the core artifact inspectable, not just
         # exercised.
-        self.last_plan_cost = best_overall.cost if best_overall else 0.0
-        self.last_plan_cache = pc
-        return best_overall.plan if best_overall else []
+        self.last_plan_cache = PlanCache(joins, memo)
+        if full not in memo:  # no joins, or no plan without a cross product
+            self.last_plan_cost = 0.0
+            return []
+        self.last_plan_cost = memo[full][0]
+        return self.last_plan_cache.plan(full)
 
     def order_joins_greedy(
         self,
@@ -269,8 +356,10 @@ class JoinOptimizer:
         self.last_plan_cost = acc_cost
         return plan
 
-    # DP above this size would enumerate >2^14 subsets; the greedy path
-    # keeps planning sub-millisecond for machine-generated join graphs.
+    # DP above this size would enumerate >2^14 subsets; at 13 joins it
+    # takes about 38 ms for a star (all 8191 subsets connected) on a 4-core
+    # x86 VM, and the greedy path keeps planning sub-millisecond for
+    # machine-generated join graphs.
     DP_MAX_JOINS = 13
 
     def order_joins_auto(
@@ -282,69 +371,3 @@ class JoinOptimizer:
         if len(self.joins) <= self.DP_MAX_JOINS:
             return self.order_joins(stats, filter_selectivities)
         return self.order_joins_greedy(stats, filter_selectivities)
-
-    def _compute_cost_and_card_of_subplan(
-        self,
-        stats: dict[str, TableStats],
-        filter_selectivities: dict[str, float],
-        join_to_remove: LogicalJoinNode,
-        join_set: frozenset[LogicalJoinNode],
-        best_cost_so_far: float,
-        pc: PlanCache,
-    ) -> CostCard | None:
-        """Cost of joining ``join_to_remove`` onto the best plan for
-        ``join_set - {join_to_remove}`` (reference join_optimizer.cc:195-292).
-        Returns None when the subplan would require a cross product or can't
-        beat ``best_cost_so_far``."""
-        j = join_to_remove
-        rest = frozenset(join_set - {j})
-
-        if not rest:  # base case: both operands are base relations
-            prev_best: list[LogicalJoinNode] = []
-            t1_cost = stats[j.left_table].estimate_scan_cost()
-            t1_card = stats[j.left_table].estimate_table_cardinality(
-                filter_selectivities.get(j.left_table, 1.0)
-            )
-            left_pkey = self._is_pk(j.left_table, j.left_field)
-            t2_cost = stats[j.right_table].estimate_scan_cost()
-            t2_card = stats[j.right_table].estimate_table_cardinality(
-                filter_selectivities.get(j.right_table, 1.0)
-            )
-            right_pkey = self._is_pk(j.right_table, j.right_field)
-        else:
-            cached = pc.get(rest)
-            if cached is None or not cached.plan:
-                return None  # subset needed a cross product (cc:232-234)
-            prev_best = cached.plan
-            if self._does_join(prev_best, j.left_table):
-                t1_cost, t1_card = cached.cost, cached.card
-                left_pkey = self._has_pkey(prev_best, self.pk_columns)
-                t2_cost = stats[j.right_table].estimate_scan_cost()
-                t2_card = stats[j.right_table].estimate_table_cardinality(
-                    filter_selectivities.get(j.right_table, 1.0)
-                )
-                right_pkey = self._is_pk(j.right_table, j.right_field)
-            elif self._does_join(prev_best, j.right_table):
-                t2_cost, t2_card = cached.cost, cached.card
-                right_pkey = self._has_pkey(prev_best, self.pk_columns)
-                t1_cost = stats[j.left_table].estimate_scan_cost()
-                t1_card = stats[j.left_table].estimate_table_cardinality(
-                    filter_selectivities.get(j.left_table, 1.0)
-                )
-                left_pkey = self._is_pk(j.left_table, j.left_field)
-            else:
-                return None  # neither side connects -> cross product (cc:262-266)
-
-        # cost both operand orders; keep the cheaper (cc:270-281)
-        cost1 = self.estimate_join_cost(t1_card, t2_card, t1_cost, t2_cost)
-        j2 = j.swap_inner_outer()
-        cost2 = self.estimate_join_cost(t2_card, t1_card, t2_cost, t1_cost)
-        if cost2 < cost1:
-            j, cost1 = j2, cost2
-            t1_card, t2_card = t2_card, t1_card
-            left_pkey, right_pkey = right_pkey, left_pkey
-        if cost1 >= best_cost_so_far:
-            return None  # prune (cc:282-283)
-
-        card = self.estimate_join_cardinality(j.op, t1_card, t2_card, left_pkey, right_pkey)
-        return CostCard(cost=cost1, card=card, plan=[*prev_best, j])

@@ -7,8 +7,13 @@ Pure Python — the DP never touches Spark.
 
 from __future__ import annotations
 
+import json
+import os
 import random
+import subprocess
+import sys
 import time
+from pathlib import Path
 
 from dbms_query_optimizer_spark.plans.planner import JoinOptimizer, LogicalJoinNode
 from dbms_query_optimizer_spark.plans.stats import PredicateType, TableStats
@@ -227,3 +232,82 @@ def test_greedy_scales_to_wide_join_graphs():
     assert reference_cost_of_order(
         table_order_of_plan(plan), joins, stats, sels, pk
     ) < float("inf")
+
+
+def _star(n_leaves: int) -> tuple[list[LogicalJoinNode], dict[str, TableStats]]:
+    """Non-PK equi-join star over tables whose sizes repeat, the shape of
+    perfbench's cbo_plan stars: many candidates tie on cost."""
+    tables = [f"t{i}" for i in range(n_leaves + 1)]
+    sizes = [(1_000, 10), (5_000, 50)]
+    stats = {t: _stats(*sizes[i % 2]) for i, t in enumerate(tables)}
+    joins = [LogicalJoinNode(t, "t0", f"{t}_c2", "t0_c2", EQ) for t in tables[1:]]
+    return joins, stats
+
+
+def _star_plan() -> list[tuple[str, str]]:
+    joins, stats = _star(8)
+    plan = JoinOptimizer(joins, {}).order_joins(stats, {})
+    return [(j.left_table, j.right_table) for j in plan]
+
+
+def test_plan_does_not_depend_on_hash_seed():
+    """Cost ties go to the earliest join in the input, so every process
+    plans the same star whatever its PYTHONHASHSEED."""
+    root = Path(__file__).resolve().parents[1]
+    code = "import json; from tests.test_planner import _star_plan; print(json.dumps(_star_plan()))"
+    plans = []
+    for seed in ("0", "1", "2", "3"):
+        env = {**os.environ, "PYTHONHASHSEED": seed}
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=root, env=env, capture_output=True, text=True, check=True
+        ).stdout
+        plans.append([tuple(step) for step in json.loads(out)])
+    assert all(p == plans[0] for p in plans)
+    assert plans[0] == _star_plan()
+
+
+def test_memo_holds_every_connected_subset():
+    """The memo has one entry per connected join subset: 2^n - 1 for an
+    n-join star, n(n+1)/2 (the contiguous runs) for an n-join chain."""
+    for n in (1, 4, 7):
+        joins, stats = _star(n)
+        opt = JoinOptimizer(joins, {})
+        assert len(opt.order_joins(stats, {})) == n
+        assert len(opt.last_plan_cache._best) == 2**n - 1
+
+        tables = [f"t{i}" for i in range(n + 1)]
+        chain = [LogicalJoinNode(a, b, "id", "fk", EQ) for a, b in zip(tables, tables[1:])]
+        opt = JoinOptimizer(chain, {t: "id" for t in tables})
+        assert len(opt.order_joins(stats, {})) == n
+        assert len(opt.last_plan_cache._best) == n * (n + 1) // 2
+
+
+def test_disconnected_graph_has_no_full_plan():
+    """Two components: each connected subset is memoized, the full set is
+    not, and the plan is empty."""
+    stats = {t: _stats(100, 1) for t in "abcde"}
+    joins = [
+        LogicalJoinNode("a", "b", "c0", "c0", EQ),
+        LogicalJoinNode("b", "c", "c0", "c0", EQ),
+        LogicalJoinNode("d", "e", "c0", "c0", EQ),
+    ]
+    opt = JoinOptimizer(joins, {})
+    assert opt.order_joins(stats, {}) == []
+    assert opt.last_plan_cost == 0.0
+    assert len(opt.last_plan_cache._best) == 4  # ab, bc, de, ab+bc
+    assert opt.last_plan_cache.get(frozenset(joins)) is None
+    assert opt.last_plan_cache.get(frozenset(joins[:2])) is not None
+
+
+def test_repeated_join_is_planned_once():
+    """Equal LogicalJoinNodes are one join: [j1, j2, j1] plans two joins
+    and memoizes the three subsets of {j1, j2}."""
+    stats = {t: _stats(100 * (i + 1), i + 1) for i, t in enumerate("abc")}
+    j1 = LogicalJoinNode("a", "b", "c0", "c0", EQ)
+    j2 = LogicalJoinNode("b", "c", "c0", "c0", EQ)
+    opt = JoinOptimizer([j1, j2, j1], {})
+    plan = opt.order_joins(stats, {})
+    assert len(plan) == 2
+    assert {j1, j2} == {j if j in (j1, j2) else j.swap_inner_outer() for j in plan}
+    assert len(opt.last_plan_cache._best) == 3
+    assert opt.last_plan_cache.get(frozenset([j1, j2])).plan == plan
