@@ -24,6 +24,12 @@ manifests (the core idea of Delta Lake / Iceberg, reduced to its minimum):
   link semantics give first-committer-wins: a version collision (another
   writer committed concurrently) retries against the new tip, which is
   safe because staged file sets are disjoint.
+- A transaction holds inserts only, or ONE rewrite (merge, delete,
+  delete_mor, delete_keys, replace_where, compact, materialize_dvs) first
+  and then inserts. The rewrite pins the snapshot it is computed against,
+  and that snapshot never holds the transaction's own staged work, so a
+  second rewrite, or a rewrite after staged inserts, raises RuntimeError
+  instead of publishing lost or duplicated rows.
 - Readers resolve the highest committed manifest and read exactly its
   file list → snapshot isolation; crash recovery is a no-op (re-open and
   resolve — nothing to replay).
@@ -95,6 +101,20 @@ _ZONE_PRED_OPS = {
     "<": lambda c, v: c < v, "<=": lambda c, v: c <= v,
     ">": lambda c, v: c > v, ">=": lambda c, v: c >= v,
 }
+
+
+def _predicate(where):
+    """``where`` (one ``(column, op, value)`` tuple or a list of them) as
+    one ANDed Column; None for an empty conjunct list."""
+    pred = None
+    for col, op, value in _as_conjuncts(where):
+        term = _ZONE_PRED_OPS[op](F.col(col), value)
+        pred = term if pred is None else pred & term
+    return pred
+
+
+def _schema(snap: dict) -> StructType:
+    return StructType.fromJson(json.loads(snap["schema"]))
 
 
 def _ts_micros(v) -> int:
@@ -239,13 +259,12 @@ def _as_conjuncts(where) -> list[tuple]:
     return conj
 
 
-def _bloom_may_match(bloom_b64: str | None, op: str, value) -> bool:
-    """Can a file with this bloom satisfy ``col op value``? Only ``=``
-    is bloom-answerable; a bloom "no" is a proof of absence (no false
-    negatives), so pruning on it is exact."""
-    if bloom_b64 is None or op != "=" or value is None:
-        return True
-    return BloomFilter.from_b64(bloom_b64).might_contain(value)
+def _bloom_admits_any(bloom_b64: str | None, values) -> bool:
+    """Can a file with this bloom hold ``col = v`` for any of ``values``?
+    The filter is decoded once for the whole set. A bloom "no" is a proof
+    of absence (no false negatives), so pruning on it is exact."""
+    bloom = None if bloom_b64 is None else BloomFilter.from_b64(bloom_b64)
+    return any(bloom is None or v is None or bloom.might_contain(v) for v in values)
 
 
 def prune_files(snapshot: dict, where) -> tuple[list[str], list[str]]:
@@ -263,7 +282,7 @@ def prune_files(snapshot: dict, where) -> tuple[list[str], list[str]]:
         fblooms = blooms.get(f, {})
         ok = all(
             _zone_may_match(zones.get(c), op, v)
-            and _bloom_may_match(fblooms.get(c), op, v)
+            and (op != "=" or _bloom_admits_any(fblooms.get(c), [v]))
             for c, op, v in conj
         )
         (kept if ok else skipped).append(f)
@@ -404,6 +423,48 @@ class Transaction:
             if f.startswith("part-") and not f.endswith(".crc")
         )
 
+    def _pin_base(self) -> dict:
+        """Pin and return the snapshot this transaction's rewrite is
+        computed against; ``commit`` refuses to publish past it
+        (first-committer-wins). The rewrite must be the first write: that
+        snapshot lacks anything this transaction already staged, so a
+        second rewrite or a rewrite after inserts raises."""
+        assert not self._done, "transaction already finished"
+        if self._base_version is not None or self.staged_files():
+            raise RuntimeError(
+                "a transaction holds inserts only, or one rewrite first "
+                "and then inserts"
+            )
+        snap = self._table.snapshot()
+        self._base_version = snap["version"]
+        return snap
+
+    def _rewrite_keys(
+        self, spark: SparkSession, snap: dict, files: list[str], keys: DataFrame,
+        key_cols: list[str],
+    ) -> DataFrame | None:
+        """The key rewrite shared by ``merge`` and ``delete_keys``: a
+        distributed semi-join of ``files`` against the distinct ``keys``
+        collects the paths of the files holding any key (O(files), not
+        O(rows)); those files become ``_replaced`` and their anti-join
+        survivors are returned for staging, or None if no file holds a
+        key. The target scan applies deletion vectors, so rewriting a
+        vectored file folds its vector in instead of resurrecting rows."""
+        target = _scan_with_dvs(
+            spark, _schema(snap), files, snap.get("dvs", {}), keep_meta=True
+        ).drop("__pos")
+        hits = target.join(keys, key_cols, "semi").select("__file").distinct()
+        affected_uris = [r["__file"] for r in hits.collect()]
+        paths = {urlparse(f).path or f for f in affected_uris}
+        self._replaced = [f for f in files if f in paths]
+        if not affected_uris:
+            return None
+        return (
+            target.filter(F.col("__file").isin(affected_uris))
+            .join(keys, key_cols, "anti")
+            .drop("__file")
+        )
+
     def merge(self, spark: SparkSession, source: DataFrame, key) -> None:
         """Stage a copy-on-write MERGE (upsert by ``key``): source rows
         with a matching key REPLACE the target rows; unmatched source rows
@@ -420,46 +481,26 @@ class Transaction:
         leaves the previous version fully intact, and afterwards it stays
         readable via time travel.
 
-        Scale: the affected-file discovery is a semi-join of the target
-        against the (distinct) source keys — distributed, with only the
-        matched FILE PATHS collected (O(files), not O(rows)); the rewrite
-        reads just those files. A merge touching k of N files costs
-        O(k·file_size + |source|), never a full-table rewrite. Conflict
+        Scale: the affected-file discovery is ``_rewrite_keys``' semi-join
+        of the target against the (distinct) source keys — distributed,
+        with only the matched FILE PATHS collected (O(files), not
+        O(rows)); the rewrite reads just those files. A merge touching k
+        of N files costs O(k·file_size + |source|), never a full-table
+        rewrite. Conflict
         rule: first-committer-wins — commit raises ConflictError if the
         tip moved past the snapshot the rewrite was computed against
         (insert-only transactions still rebase and retry automatically).
         """
-        assert not self._done, "transaction already finished"
-        assert not self._replaced, "one merge per transaction"
         keys = [key] if isinstance(key, str) else list(key)
-        snap = self._table.snapshot()
-        self._base_version = snap["version"]
-        schema = StructType.fromJson(json.loads(snap["schema"]))
+        snap = self._pin_base()
         src = source.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in _schema(snap)]
         )
         if snap["files"]:
-            # DV-aware target scan: rewriting a vectored file must fold
-            # its deletion vector in, not resurrect the deleted rows
-            target = _scan_with_dvs(
-                spark, schema, snap["files"], snap.get("dvs", {}), keep_meta=True
-            ).drop("__pos")
-            src_keys = src.select(*keys).distinct()
-            affected_uris = [
-                r["__file"]
-                for r in target.join(src_keys, keys, "semi")
-                .select("__file")
-                .distinct()
-                .collect()
-            ]
-            by_path = {urlparse(f).path or f: f for f in affected_uris}
-            self._replaced = [f for f in snap["files"] if f in by_path]
-            if affected_uris:
-                survivors = (
-                    target.filter(F.col("__file").isin(affected_uris))
-                    .join(src_keys, keys, "anti")
-                    .drop("__file")
-                )
+            survivors = self._rewrite_keys(
+                spark, snap, snap["files"], src.select(*keys).distinct(), keys
+            )
+            if survivors is not None:
                 src = survivors.unionByName(src)
         self.insert(src)
 
@@ -479,22 +520,14 @@ class Transaction:
         src/heap/heap_file.cc:151-257); the old version stays
         time-travel-readable until vacuumed. First-committer-wins via
         the snapshot base version, like merge."""
-        assert not self._done, "transaction already finished"
-        assert not self._replaced, "one merge/delete per transaction"
-        snap = self._table.snapshot()
-        self._base_version = snap["version"]
+        snap = self._pin_base()
         candidates, _ = prune_files(snap, where)
         self._replaced = candidates
         if not candidates:
             return  # provably nothing to delete: commit is a no-op version
-        schema = StructType.fromJson(json.loads(snap["schema"]))
-        pred = None
-        for col, op, value in _as_conjuncts(where):
-            term = _ZONE_PRED_OPS[op](F.col(col), value)
-            pred = term if pred is None else pred & term
         survivors = _scan_with_dvs(
-            spark, schema, candidates, snap.get("dvs", {})
-        ).filter(~F.coalesce(pred, F.lit(False)))
+            spark, _schema(snap), candidates, snap.get("dvs", {})
+        ).filter(~F.coalesce(_predicate(where), F.lit(False)))
         self.insert(survivors)
 
     def delete_mor(self, spark: SparkSession, where) -> None:
@@ -516,27 +549,17 @@ class Transaction:
         column. Commit/crash semantics are unchanged: the DV is staged
         invisible and becomes visible only at the manifest link.
         """
-        assert not self._done, "transaction already finished"
-        assert not self._replaced and not self._dv_adds, (
-            "one merge/delete per transaction"
-        )
-        snap = self._table.snapshot()
-        self._base_version = snap["version"]
+        snap = self._pin_base()
         candidates, _ = prune_files(snap, where)
         if not candidates:
             return  # provably nothing to delete: commit is a no-op version
-        schema = StructType.fromJson(json.loads(snap["schema"]))
-        pred = None
-        for col, op, value in _as_conjuncts(where):
-            term = _ZONE_PRED_OPS[op](F.col(col), value)
-            pred = term if pred is None else pred & term
         # scan applies EXISTING vectors so already-deleted positions are
         # not re-recorded — vectors stay minimal as deletes stack
         matches = (
             _scan_with_dvs(
-                spark, schema, candidates, snap.get("dvs", {}), keep_meta=True
+                spark, _schema(snap), candidates, snap.get("dvs", {}), keep_meta=True
             )
-            .filter(F.coalesce(pred, F.lit(False)))
+            .filter(F.coalesce(_predicate(where), F.lit(False)))
             .select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
         )
         dv_dir = os.path.join(self._staging, "dv")
@@ -557,25 +580,22 @@ class Transaction:
         in ``keys`` — the right-to-be-forgotten primitive a training-data
         store needs (erase ALL of a user's/document's rows, however many
         files they straddle). The same two-phase shape as ``merge`` minus
-        the insert: a distributed semi-join against the (distinct) key set
-        discovers the affected FILES (only matched file paths are
-        collected, O(files) not O(rows)); those files are rewritten as
-        their anti-join survivors. Files holding none of the keys are
-        untouched and unread, so erasing k keys from a 100 TB table costs
-        O(files-containing-k + |keys|). On a bloom-indexed key column
+        the insert, through the same ``_rewrite_keys``: a distributed
+        semi-join against the (distinct) key set discovers the affected
+        FILES (only matched file paths are collected, O(files) not
+        O(rows)); those files are rewritten as their anti-join survivors.
+        Files holding none of the keys are untouched and unread, so
+        erasing k keys from a 100 TB table costs O(files-containing-k +
+        |keys|). On a bloom-indexed key column
         (``bloom_columns`` at create) the discovery itself is pre-pruned
         driver-side: only files whose bloom admits AT LEAST ONE key are
         scanned at all (``discovery_files`` records the pruned count).
         Old versions remain readable until ``vacuum`` — a compliance flow
         runs erase → vacuum to physically drop the bytes."""
-        assert not self._done, "transaction already finished"
-        assert not self._replaced, "one merge/delete per transaction"
         key_cols = [key] if isinstance(key, str) else list(key)
-        snap = self._table.snapshot()
-        self._base_version = snap["version"]
+        snap = self._pin_base()
         if not snap["files"]:
             return
-        schema = StructType.fromJson(json.loads(snap["schema"]))
         ks = keys.select(*key_cols).distinct()
         # Bloom pre-prune: if the (single) key column carries per-file
         # blooms and the key set is driver-collectable, test every key
@@ -592,36 +612,15 @@ class Transaction:
             vals = [r[0] for r in ks.limit(_ERASE_BLOOM_MAX_KEYS + 1).collect()]
             if len(vals) <= _ERASE_BLOOM_MAX_KEYS:
                 files = [
-                    f
-                    for f in files
-                    if any(
-                        _bloom_may_match(blooms.get(f, {}).get(col), "=", v)
-                        for v in vals
-                    )
+                    f for f in files
+                    if _bloom_admits_any(blooms.get(f, {}).get(col), vals)
                 ]
         self.discovery_files = len(files)
         if not files:
             return  # every file bloom-proven key-free: no-op version
-        target = _scan_with_dvs(
-            spark, schema, files, snap.get("dvs", {}), keep_meta=True
-        ).drop("__pos")
-        affected_uris = [
-            r["__file"]
-            for r in target.join(ks, key_cols, "semi")
-            .select("__file")
-            .distinct()
-            .collect()
-        ]
-        by_path = {urlparse(f).path or f: f for f in affected_uris}
-        self._replaced = [f for f in files if f in by_path]
-        if not affected_uris:
-            return  # no file holds any key: commit is a no-op version
-        survivors = (
-            target.filter(F.col("__file").isin(affected_uris))
-            .join(ks, key_cols, "anti")
-            .drop("__file")
-        )
-        self.insert(survivors)
+        survivors = self._rewrite_keys(spark, snap, files, ks, key_cols)
+        if survivors is not None:  # None: no file holds any key, no-op version
+            self.insert(survivors)
 
     def replace_where(self, spark: SparkSession, where, df: DataFrame) -> None:
         """Atomic INSERT OVERWRITE by predicate (Delta's ``replaceWhere``):
@@ -639,22 +638,13 @@ class Transaction:
         not have deleted makes the backfill non-idempotent."""
         assert not self._done, "transaction already finished"
         self.delete(spark, where)
-        ops = {
-            "=": lambda c, v: c == v, "!=": lambda c, v: c != v,
-            "<": lambda c, v: c < v, "<=": lambda c, v: c <= v,
-            ">": lambda c, v: c > v, ">=": lambda c, v: c >= v,
-        }
-        pred = None
-        for col, op, value in _as_conjuncts(where):
-            term = ops[op](F.col(col), value)
-            pred = term if pred is None else pred & term
         from pyspark.sql import Observation
 
         obs = Observation()
         df = df.observe(
             obs,
             F.sum(
-                F.when(~F.coalesce(pred, F.lit(False)), 1).otherwise(0)
+                F.when(~F.coalesce(_predicate(where), F.lit(False)), 1).otherwise(0)
             ).alias("outside"),
         )
         self.insert(df)
@@ -753,6 +743,22 @@ class TransactionalTable:
     def begin(self) -> Transaction:
         return Transaction(self)
 
+    def _commit(self, build) -> int:
+        """The one commit loop: read the tip, let ``build(tip, version)``
+        derive the manifest for ``version`` = tip + 1, and hard-link it.
+        Losing the link to another writer retries on top of the new tip;
+        ``build`` raises ConflictError where that tip invalidates what it
+        publishes."""
+        while True:
+            tip = self.snapshot()
+            version = tip["version"] + 1
+            manifest = build(tip, version)
+            try:
+                _write_manifest_atomic(self._manifest_dir, version, manifest)
+                return version
+            except FileExistsError:
+                continue  # lost the race: retry on top of the new tip
+
     def _publish(
         self,
         new_files: list[str],
@@ -763,30 +769,24 @@ class TransactionalTable:
         dvs: dict | None = None,
     ) -> int:
         gone = set(replaced or [])
-        while True:
-            base = self.snapshot()
+
+        def build(base: dict, version: int) -> dict:
             if expected_base is not None and base["version"] != expected_base:
                 raise ConflictError(
-                    f"table advanced to v{base['version']} past the merge's "
-                    f"base v{expected_base}; rewritten files may be stale"
+                    f"table advanced to v{base['version']} past the "
+                    f"transaction's base v{expected_base}; rewritten files "
+                    f"may be stale"
                 )
-            version = base["version"] + 1
-            merged_stats = {
-                f: s for f, s in base.get("stats", {}).items() if f not in gone
-            }
-            merged_stats.update(stats or {})
-            merged_blooms = {
-                f: b for f, b in base.get("blooms", {}).items() if f not in gone
-            }
-            merged_blooms.update(blooms or {})
+
+            def kept(entry: str) -> dict:  # per-file entries of live files
+                return {f: x for f, x in base.get(entry, {}).items() if f not in gone}
+
+            merged_stats = {**kept("stats"), **(stats or {})}
+            merged_blooms = {**kept("blooms"), **(blooms or {})}
             # deletion vectors: entries for replaced files die with them
             # (a COW rewrite folds the DV in); new DVs STACK on a file's
             # existing list so repeated MOR deletes compose
-            merged_dvs = {
-                f: list(d)
-                for f, d in base.get("dvs", {}).items()
-                if f not in gone
-            }
+            merged_dvs = {f: list(d) for f, d in kept("dvs").items()}
             for f, dirs in (dvs or {}).items():
                 merged_dvs[f] = merged_dvs.get(f, []) + list(dirs)
             manifest = {
@@ -803,11 +803,9 @@ class TransactionalTable:
                 manifest["blooms"] = merged_blooms
             if base.get("constraints"):
                 manifest["constraints"] = base["constraints"]
-            try:
-                _write_manifest_atomic(self._manifest_dir, version, manifest)
-                return version
-            except FileExistsError:
-                continue  # lost the race: retry on top of the new tip
+            return manifest
+
+        return self._commit(build)
 
     # ------------------------------------------------------------- reader
     def read(
@@ -824,21 +822,13 @@ class TransactionalTable:
         fewer files opened. ``last_scan`` records {files_total,
         files_read} for observability."""
         snap = self.snapshot(version)
-        schema = StructType.fromJson(json.loads(snap["schema"]))
         files = snap["files"]
         residual = None
         if where is not None:
             files, _skipped = prune_files(snap, where)
-            ops = {
-                "=": lambda c, v: c == v, "!=": lambda c, v: c != v,
-                "<": lambda c, v: c < v, "<=": lambda c, v: c <= v,
-                ">": lambda c, v: c > v, ">=": lambda c, v: c >= v,
-            }
-            for col, op, value in _as_conjuncts(where):
-                term = ops[op](F.col(col), value)
-                residual = term if residual is None else residual & term
+            residual = _predicate(where)
         self.last_scan = {"files_total": len(snap["files"]), "files_read": len(files)}
-        df = _scan_with_dvs(spark, schema, files, snap.get("dvs", {}))
+        df = _scan_with_dvs(spark, _schema(snap), files, snap.get("dvs", {}))
         return df.filter(residual) if residual is not None else df
 
     # ------------------------------------------------------- schema change
@@ -853,18 +843,9 @@ class TransactionalTable:
 
         Scale: O(KB) manifest write; a 100 TB table changes shape in
         milliseconds. First-committer-wins like any other commit."""
-        while True:
-            base = self.snapshot()
-            manifest = dict(base)
-            manifest["version"] = base["version"] + 1
-            manifest["schema"] = new_schema.json()
-            try:
-                _write_manifest_atomic(
-                    self._manifest_dir, manifest["version"], manifest
-                )
-                return manifest["version"]
-            except FileExistsError:
-                continue
+        return self._commit(
+            lambda tip, v: {**tip, "version": v, "schema": new_schema.json()}
+        )
 
     # ------------------------------------------------------------ history
     def history(self, spark: SparkSession) -> DataFrame:
@@ -916,7 +897,8 @@ class TransactionalTable:
         First-committer-wins: raises ConflictError if the tip moved past
         the snapshot the rewrite was computed against.
         """
-        snap = self.snapshot()
+        txn = self.begin()
+        snap = txn._pin_base()
         sizes: dict[str, int] = {}
         for f in snap["files"]:
             local = urlparse(f).path or f
@@ -930,20 +912,17 @@ class TransactionalTable:
         n_out = target_files or max(
             1, -(-sum(sizes[f] for f in small) // target_file_bytes)
         )
-        schema = StructType.fromJson(json.loads(snap["schema"]))
         # apply any deletion vectors on the files being rewritten — a
         # plain scan would resurrect MOR-deleted rows; replaced files
         # shed their DV entries in _publish, so compaction doubles as
         # materialization for the files it touches
-        df = _scan_with_dvs(spark, schema, small, snap.get("dvs", {}))
+        df = _scan_with_dvs(spark, _schema(snap), small, snap.get("dvs", {}))
         if sort_by is not None:
             df = df.repartitionByRange(n_out, F.col(sort_by)).sortWithinPartitions(
                 sort_by
             )
         else:
             df = df.coalesce(n_out)
-        txn = self.begin()
-        txn._base_version = snap["version"]
         txn._replaced = small
         txn.insert(df)
         return txn.commit()
@@ -960,15 +939,13 @@ class TransactionalTable:
         if the table carries no vectors. Production systems piggyback
         this on OPTIMIZE; it is equally valid standalone.
         """
-        snap = self.snapshot()
+        txn = self.begin()
+        snap = txn._pin_base()
         dvs = snap.get("dvs", {})
         vectored = [f for f in snap["files"] if dvs.get(f)]
         if not vectored:
             return None
-        schema = StructType.fromJson(json.loads(snap["schema"]))
-        survivors = _scan_with_dvs(spark, schema, vectored, dvs)
-        txn = self.begin()
-        txn._base_version = snap["version"]
+        survivors = _scan_with_dvs(spark, _schema(snap), vectored, dvs)
         txn._replaced = vectored
         txn.insert(survivors)
         return txn.commit()
@@ -1041,30 +1018,20 @@ class TransactionalTable:
                 f"branch forked from {fork['root']}, not {self.root}; "
                 "refusing to publish a foreign branch"
             )
-        while True:
-            base = self.snapshot()
-            if base["version"] != fork["version"]:
+
+        def build(tip: dict, version: int) -> dict:
+            if tip["version"] != fork["version"]:
                 raise ConflictError(
-                    f"main advanced to v{base['version']} past the branch's "
+                    f"main advanced to v{tip['version']} past the branch's "
                     f"fork point v{fork['version']}; rebase the branch "
                     f"(re-clone and replay) before publishing"
                 )
-            manifest = dict(src)
+            manifest = {**src, "version": version}
             manifest.pop("forked_from", None)  # branch bookkeeping, not state
-            manifest["version"] = base["version"] + 1
             # table policies stay MAIN's: the branch is a data vehicle
-            for policy in ("bloom_columns", "constraints"):
-                if base.get(policy):
-                    manifest[policy] = base[policy]
-                else:
-                    manifest.pop(policy, None)
-            try:
-                _write_manifest_atomic(
-                    self._manifest_dir, manifest["version"], manifest
-                )
-                return manifest["version"]
-            except FileExistsError:
-                continue
+            return _with_tip_policies(manifest, tip)
+
+        return self._commit(build)
 
     # ------------------------------------------------------------ restore
     def restore(self, to_version: int) -> int:
@@ -1095,24 +1062,9 @@ class TransactionalTable:
                 f"cannot restore to v{to_version}: {len(missing)} file(s) "
                 f"vacuumed, e.g. {missing[0]}"
             )
-        while True:
-            base = self.snapshot()
-            manifest = dict(target)
-            manifest["version"] = base["version"] + 1
-            # table-wide POLICIES (bloom declarations, CHECK constraints)
-            # are not data: the tip's declarations survive the rollback
-            for policy in ("bloom_columns", "constraints"):
-                if base.get(policy):
-                    manifest[policy] = base[policy]
-                else:
-                    manifest.pop(policy, None)
-            try:
-                _write_manifest_atomic(
-                    self._manifest_dir, manifest["version"], manifest
-                )
-                return manifest["version"]
-            except FileExistsError:
-                continue
+        return self._commit(
+            lambda tip, version: _with_tip_policies({**target, "version": version}, tip)
+        )
 
     # ------------------------------------------------------------ changes
     def changes(
@@ -1141,19 +1093,15 @@ class TransactionalTable:
         as NULL / are pruned, matching time-travel read semantics)."""
         a = self.snapshot(v_from)
         b = self.snapshot(v_to)
-        schema = StructType.fromJson(json.loads(b["schema"]))
+        schema = _schema(b)
         fa, fb = set(a["files"]), set(b["files"])
         dva, dvb = a.get("dvs", {}), b.get("dvs", {})
         # a file is UNCHANGED only if present in both versions with the
         # same deletion-vector stack; a DV-delete changes rows without
         # changing the file list, so DV-churned files re-enter the diff
         same = {f for f in fa & fb if dva.get(f, []) == dvb.get(f, [])}
-
-        def scan(files: list[str], dvs: dict) -> DataFrame:
-            return _scan_with_dvs(spark, schema, files, dvs)
-
-        added = scan(sorted(fb - same), dvb)
-        removed = scan(sorted(fa - same), dva)
+        added = _scan_with_dvs(spark, schema, sorted(fb - same), dvb)
+        removed = _scan_with_dvs(spark, schema, sorted(fa - same), dva)
         inserts = added.exceptAll(removed).withColumn(
             "_change_type", F.lit("insert")
         )
@@ -1184,6 +1132,18 @@ class TransactionalTable:
                 shutil.rmtree(full, ignore_errors=True)
                 removed.append(full)
         return removed
+
+
+def _with_tip_policies(manifest: dict, tip: dict) -> dict:
+    """Table-wide POLICIES (bloom declarations, CHECK constraints) are not
+    data: a manifest adopted from another version (``restore``) or table
+    (``publish_from``) carries the tip's policies, not its own."""
+    for policy in ("bloom_columns", "constraints"):
+        if tip.get(policy):
+            manifest[policy] = tip[policy]
+        else:
+            manifest.pop(policy, None)
+    return manifest
 
 
 def _write_manifest_atomic(mdir: str, version: int, manifest: dict) -> None:

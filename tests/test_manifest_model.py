@@ -2,8 +2,9 @@
 
 Hypothesis drives random sequences of the table's write operations
 (insert / COW merge / predicate DELETE / merge-on-read DV delete /
-DV materialization / replaceWhere / key erasure / RESTORE) against both the real TransactionalTable and a trivial
-in-memory multiset model; after every commit the table's read must
+DV materialization / compaction / replaceWhere / key erasure / RESTORE)
+against both the real TransactionalTable and a trivial in-memory
+multiset model; after every commit the table's read must
 equal the model, and time travel must reproduce every historical model
 state. This is the test shape that catches OPERATION INTERACTIONS no
 per-feature test enumerates (delete after restore, erase of a key a
@@ -65,13 +66,17 @@ def _op_materialize():
     return st.tuples(st.just("materialize"))
 
 
+def _op_compact():
+    return st.tuples(st.just("compact"))
+
+
 def _op_restore():
     # target version picked as a fraction of history at execution time
     return st.tuples(st.just("restore"), st.floats(min_value=0.0, max_value=1.0))
 
 
 OPS = st.lists(
-    st.one_of(_op_insert(), _op_merge(), _op_delete(), _op_replace(), _op_erase(), _op_restore(), _op_delete_mor(), _op_materialize()),
+    st.one_of(_op_insert(), _op_merge(), _op_delete(), _op_replace(), _op_erase(), _op_restore(), _op_delete_mor(), _op_materialize(), _op_compact()),
     min_size=1,
     max_size=6,
 )
@@ -149,6 +154,12 @@ def test_random_op_sequences_match_model(spark, tmp_path_factory, ops):
         elif kind == "materialize":
             txn.abort()  # table-level, not a staged txn
             if table.materialize_dvs(spark) is not None:
+                history.append(Counter(model))  # content unchanged
+            assert _read_multiset(spark, root) == model
+            continue
+        elif kind == "compact":
+            txn.abort()  # table-level, not a staged txn
+            if table.compact(spark) is not None:
                 history.append(Counter(model))  # content unchanged
             assert _read_multiset(spark, root) == model
             continue
