@@ -118,25 +118,9 @@ def _reap_stray_spark_jvms() -> None:
                 ppid = int(f.read().split(")")[-1].split()[1])
         except OSError:
             continue
-        # repo identification: the origin-marker conf (every get_spark
-        # JVM since round 10), plus the legacy app names for JVMs
-        # launched by pre-marker checkouts — without the legacy list a
-        # stray from an older build would silently skip the reap and
-        # reintroduce the round-8 contention class
-        ours = b"spark.dbms_query_optimizer_spark.origin" in cmd or any(
-            b"spark.app.name=" + n in cmd
-            for n in (
-                b"bench",
-                b"verify",
-                b"pytest-dbms-qos",
-                b"dbms_query_optimizer_spark",
-                b"check_eager_flags",
-                b"pq_recall_sweep",
-            )
-        )
         if (
             b"org.apache.spark.deploy.SparkSubmit" in cmd
-            and ours
+            and b"spark.dbms_query_optimizer_spark.origin" in cmd
             and ppid == 1
         ):
             strays.append(int(pid_dir))

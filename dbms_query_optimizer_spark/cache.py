@@ -18,9 +18,20 @@ query's result. One query's caches never outlive its own evaluation.
 Interactive/ad-hoc callers that never call :func:`release_tracked` are no
 worse off than before: the registry holds plain references and Spark's LRU
 still applies.
+
+:func:`build_once` is the on-disk counterpart: artifacts that outlive a
+session (ANN indexes, the LSH store), keyed on what they were built from.
 """
 
 from __future__ import annotations
+
+import functools
+import hashlib
+import json
+import os
+import shutil
+import tempfile
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 
@@ -56,3 +67,63 @@ def release_tracked() -> int:
             pass  # session already stopped — nothing to release
         n += 1
     return n
+
+
+@functools.lru_cache(maxsize=None)
+def _source_digest() -> str:
+    """sha256 of the package's ``.py`` sources, once per process: builders
+    depend on constants, literals and helpers across modules, which no
+    hand-kept parameter list covers."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    h = hashlib.sha256()
+    for base, dirs, files in os.walk(pkg):
+        dirs.sort()
+        for f in sorted(f for f in files if f.endswith(".py")):
+            h.update(os.path.relpath(os.path.join(base, f), pkg).encode())
+            with open(os.path.join(base, f), "rb") as fh:
+                h.update(fh.read())
+    return h.hexdigest()
+
+
+def build_once(
+    kind: str, sf_dir: str, tables: Iterable[str], build: Callable[[str], dict]
+) -> str:
+    """Directory of the ``kind`` artifact built from ``sf_dir``'s ``tables``:
+    ``gettempdir()/spark_graft_artifacts/<kind>-<hash of kind, real sf_dir,
+    each input file's (path, size, mtime_ns), _source_digest()>``.
+
+    On a miss, ``build(tmp)`` fills a private temp directory whose returned
+    dict becomes ``_BUILT`` (JSON); the rename into place is the publish,
+    so no reader sees half an artifact, and a concurrent build of the same
+    key that publishes first wins."""
+    sf_dir = os.path.realpath(sf_dir)
+    files = []
+    for t in tables:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(path):
+            files += [
+                os.path.join(path, f) for f in sorted(os.listdir(path))
+                if not f.startswith((".", "_"))
+            ]
+        else:
+            files.append(path)
+    stats = [(f, st.st_size, st.st_mtime_ns) for f, st in zip(files, map(os.stat, files))]
+    key = json.dumps([kind, sf_dir, stats, _source_digest()]).encode()
+    parent = os.path.join(tempfile.gettempdir(), "spark_graft_artifacts")
+    root = os.path.join(parent, f"{kind}-{hashlib.sha256(key).hexdigest()[:16]}")
+    if os.path.exists(os.path.join(root, "_BUILT")):
+        return root
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=os.path.basename(root) + ".tmp-", dir=parent)
+    try:
+        meta = build(tmp)
+        with open(os.path.join(tmp, "_BUILT"), "w") as fh:
+            json.dump(meta, fh)
+        try:
+            os.rename(tmp, root)
+        except OSError:
+            if not os.path.exists(os.path.join(root, "_BUILT")):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return root

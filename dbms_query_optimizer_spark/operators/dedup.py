@@ -11,6 +11,8 @@ training-data-pipeline technique:
 - n-gram Jaccard  : shingle-blocked pairwise Jaccard (no signatures).
 - embedding cosine: near-dup pairs above a cosine threshold.
 
+Incremental dedup probes an LSH signature store built by ``cache.build_once``.
+
 Scale design (100 TB corpora):
 - every strategy is shuffle-bounded by (doc, shingle) or (band, key)
   pairs, never by doc x doc; candidate generation is always blocked
@@ -32,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..cache import track_persist
+from ..cache import build_once, track_persist
 from ..engine import load_tables
 from ..functions.text import fingerprint_md5, norm_text, tokens, word_ngrams
 from .graph import weakly_connected_components
@@ -511,24 +513,13 @@ def _oracle_minhash_lsh() -> str:
 
 INCR_MOD = 5  # doc_id % 5 == 0 plays the "incoming batch" role
 
-_LSH_STORE_ROOT = None  # default resolved lazily (tempdir)
 
-
-def lsh_store_dir(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    root = _LSH_STORE_ROOT or os.path.join(
-        tempfile.gettempdir(), "spark_graft_lsh_store"
-    )
-    return os.path.join(root, os.path.basename(sf_dir.rstrip("/")))
-
-
-def build_lsh_store(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
+def build_lsh_store(spark: SparkSession, sf_dir: str) -> str:
     """Shingle + minhash the EXISTING corpus once and persist its LSH
     band keys as the signature store: one parquet table (band, key,
-    doc_id), repartitioned on key so probe joins co-locate. Idempotent
-    via a _BUILT marker — the one-off O(corpus) build is separated from
+    doc_id), repartitioned on key so probe joins co-locate. Built once
+    through ``cache.build_once`` (keyed on the documents file and the
+    engine source) — the one-off O(corpus) build is separated from
     the per-batch probe cost, exactly the split a 100 TB deployment
     makes (there the store is bucketed on key so the daily probe join
     is shuffle-free on the corpus side, and each day's accepted batch
@@ -536,27 +527,23 @@ def build_lsh_store(spark: SparkSession, sf_dir: str, force: bool = False) -> st
     """
     import os
 
-    root = lsh_store_dir(sf_dir)
-    marker = os.path.join(root, "_BUILT")
-    if os.path.exists(marker) and not force:
-        return root
-
-    docs = load_tables(spark, sf_dir)["documents"].filter(
-        F.col("doc_id") % INCR_MOD != 0
-    )
     from ..session import state_width
 
-    # key-partitioned store layout: width tracks the session's shuffle
-    # parallelism (the state_width discipline), not a constant — at
-    # cluster scale the band store is the probe join's build side and a
-    # fixed 8 files would pin its read parallelism
-    bands = _sig_bands(_minhash_sig(_doc_shingles(docs)))
-    bands.repartition(state_width(bands), "key").write.mode("overwrite").parquet(
-        os.path.join(root, "bands")
-    )
-    with open(marker, "w") as fh:
-        fh.write(sf_dir)
-    return root
+    def build(out: str) -> dict:
+        docs = load_tables(spark, sf_dir)["documents"].filter(
+            F.col("doc_id") % INCR_MOD != 0
+        )
+        # key-partitioned store layout: width tracks the session's shuffle
+        # parallelism (the state_width discipline), not a constant — at
+        # cluster scale the band store is the probe join's build side and a
+        # fixed 8 files would pin its read parallelism
+        bands = _sig_bands(_minhash_sig(_doc_shingles(docs)))
+        bands.repartition(state_width(bands), "key").write.mode("overwrite").parquet(
+            os.path.join(out, "bands")
+        )
+        return {}
+
+    return build_once("lsh_store", sf_dir, ("documents",), build)
 
 
 def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -575,10 +562,9 @@ def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs (shingle, sign, store write) happened once at build. The same
     store serves every subsequent batch.
     """
-    build_lsh_store(spark, sf_dir)
     import os
 
-    store = spark.read.parquet(os.path.join(lsh_store_dir(sf_dir), "bands"))
+    store = spark.read.parquet(os.path.join(build_lsh_store(spark, sf_dir), "bands"))
 
     docs = load_tables(spark, sf_dir)["documents"]
     incoming = docs.filter(F.col("doc_id") % INCR_MOD == 0)

@@ -12,6 +12,8 @@ Two paths:
   SQL-expressible, so it gets a full value-level oracle; its recall versus
   the exact baseline is measured in tests/test_similarity.py.
 
+The trained ANN indexes (IVF, PQ, IVF+PQ) persist through ``cache.build_once``.
+
 Ranking determinism: rank orders by cosine ROUNDED to 6 dp (then vec_id
 as tie-break) on both engines, so a 1-ulp float divergence can't flip
 neighbor ranks across engines.
@@ -23,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..cache import build_once
 from ..engine import load_tables
 from .dedup import cosine_expr
 
@@ -174,18 +177,9 @@ ORACLE_KNN_LSH_BUCKETED = f"""
 
 IVF_K = 8  # coarse-quantizer cells
 IVF_NPROBE = 3  # cells searched per query
-_IVF_INDEX_ROOT = None  # default resolved lazily (tempdir)
 
 
-def ivf_index_dir(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    root = _IVF_INDEX_ROOT or os.path.join(tempfile.gettempdir(), "spark_graft_ivf")
-    return os.path.join(root, os.path.basename(sf_dir.rstrip("/")))
-
-
-def build_ivf_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
+def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Train the IVF coarse quantizer ONCE and persist the inverted file.
 
     Build: k-means (MLlib, fixed seed) coarse-quantizes the corpus into
@@ -193,49 +187,46 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, force: bool = False) -> st
     rows) and ``corpus`` — every vector with its cell id, WRITTEN
     PARTITIONED BY cell, so the inverted lists are physical partitions
     and a probe equi-join against the broadcast probe set prunes to the
-    nprobe cells via dynamic partition pruning. Idempotent: a _BUILT
-    marker skips retraining, separating the one-off O(corpus) build from
-    the per-query probe cost (the serving-path split any 100 TB ANN
-    deployment makes; at that scale train on a sample — the quantizer
-    only needs cell geometry, not every row).
+    nprobe cells via dynamic partition pruning. Built once through
+    ``cache.build_once`` (keyed on the embeddings file and the engine
+    source), separating the one-off O(corpus) build from the per-query
+    probe cost (the serving-path split any 100 TB ANN deployment makes;
+    at that scale train on a sample — the quantizer only needs cell
+    geometry, not every row).
     """
     import os
 
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    root = ivf_index_dir(sf_dir)
-    marker = os.path.join(root, "_BUILT")
-    if os.path.exists(marker) and not force:
-        return root
+    def build(out: str) -> dict:
+        t = load_tables(spark, sf_dir)
+        e = (
+            t["embeddings"]
+            .select("vec_id", "embedding", array_to_vector("embedding").alias("features"))
+            .cache()
+        )
+        # random init halves training wall-time vs k-means||'s extra init
+        # passes; coarse-quantizer quality is equivalent here (recall gate in
+        # tests/test_similarity.py holds with margin either way)
+        model = KMeans(k=IVF_K, seed=42, maxIter=10, initMode="random").fit(e)
+        assigned = model.transform(e).select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("vc"),
+            F.col("prediction").alias("cell"),
+        )
+        cent = spark.createDataFrame(
+            [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
+            "cell int, cvec array<double>",
+        )
+        assigned.write.mode("overwrite").partitionBy("cell").parquet(
+            os.path.join(out, "corpus")
+        )
+        cent.write.mode("overwrite").parquet(os.path.join(out, "centroids"))
+        e.unpersist()
+        return {}
 
-    t = load_tables(spark, sf_dir)
-    e = (
-        t["embeddings"]
-        .select("vec_id", "embedding", array_to_vector("embedding").alias("features"))
-        .cache()
-    )
-    # random init halves training wall-time vs k-means||'s extra init
-    # passes; coarse-quantizer quality is equivalent here (recall gate in
-    # tests/test_similarity.py holds with margin either way)
-    model = KMeans(k=IVF_K, seed=42, maxIter=10, initMode="random").fit(e)
-    assigned = model.transform(e).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("vc"),
-        F.col("prediction").alias("cell"),
-    )
-    cent = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, cvec array<double>",
-    )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(root, "corpus")
-    )
-    cent.write.mode("overwrite").parquet(os.path.join(root, "centroids"))
-    e.unpersist()
-    with open(marker, "w") as fh:
-        fh.write(sf_dir)
-    return root
+    return build_once("ivf", sf_dir, ("embeddings",), build)
 
 
 def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -563,25 +554,6 @@ def _pq_subvectors(e: DataFrame) -> DataFrame:
     ).select("vec_id", F.col("s.sub").alias("sub"), F.col("s.subvec").alias("subvec"))
 
 
-def _pq_source_fingerprint(sf_dir: str) -> str:
-    """Cheap identity of the embeddings source (total bytes + max mtime
-    over the parquet file or directory) — lets the index marker detect a
-    regenerated corpus without running a Spark job."""
-    import os
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if os.path.isdir(path):
-        files = [
-            os.path.join(path, f) for f in sorted(os.listdir(path))
-            if not f.startswith((".", "_"))
-        ]
-    else:
-        files = [path]
-    total = sum(os.path.getsize(f) for f in files)
-    mtime = max((int(os.path.getmtime(f)) for f in files), default=0)
-    return f"{total}:{mtime}"
-
-
 def _pq_lloyd(sub: DataFrame, k: int) -> DataFrame:
     """Train per-subspace PQ codebooks over ``sub`` (vec_id, sub, subvec)
     rows: NOT M separate fits — all subspaces run Lloyd's iterations
@@ -628,18 +600,7 @@ def _pq_encode(sub: DataFrame, codebook: DataFrame) -> DataFrame:
     )
 
 
-_PQ_INDEX_ROOT = None  # default resolved lazily (tempdir)
-
-
-def pq_index_dir(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    root = _PQ_INDEX_ROOT or os.path.join(tempfile.gettempdir(), "spark_graft_pq")
-    return os.path.join(root, os.path.basename(sf_dir.rstrip("/")))
-
-
-def build_pq_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
+def build_pq_index(spark: SparkSession, sf_dir: str) -> str:
     """Train the PQ codebooks ONCE and persist codebook + code table.
 
     Build: the 64-dim embedding splits into PQ_M=16 subvectors and each
@@ -656,50 +617,27 @@ def build_pq_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str
     doesn't compound. The persisted artifacts are ``codebook`` (M·K
     rows) and ``codes`` — the corpus compressed 16× (one byte-sized code
     per subspace vs 4-byte floats), which is the whole point of PQ: the
-    compressed table is what serves. Idempotent via a _BUILT marker —
-    the same build-once/probe-many split as build_ivf_index.
+    compressed table is what serves. Built once through
+    ``cache.build_once`` like build_ivf_index; ``_BUILT`` records the
+    corpus size ``n`` that sizes the probe's shortlist.
     """
-    import json
     import os
 
-    root = pq_index_dir(sf_dir)
-    marker = os.path.join(root, "_BUILT")
-    src_fp = _pq_source_fingerprint(sf_dir)
-    if os.path.exists(marker) and not force:
-        # reuse only if the on-disk index was built with the parameters
-        # the current derivation would pick AND from the same source
-        # files — a marker from an older build (pre-density-aware) or a
-        # regenerated corpus (the source fingerprint is bytes+mtime of
-        # the embeddings parquet, checked without a Spark job) forces
-        # rebuild
-        try:
-            meta = json.load(open(marker))
-            if (
-                meta.get("k") == _pq_k(meta["n"])
-                and meta.get("m") == PQ_M
-                and meta.get("src") == src_fp
-            ):
-                return root
-        except (ValueError, KeyError):
-            pass  # legacy plain-text marker — rebuild
+    def build(out: str) -> dict:
+        t = load_tables(spark, sf_dir)
+        emb = t["embeddings"].select("vec_id", "embedding")
+        n_corpus = emb.count()
+        k = _pq_k(n_corpus)
+        sub = _pq_subvectors(emb).cache()
 
-    t = load_tables(spark, sf_dir)
-    emb = t["embeddings"].select("vec_id", "embedding")
-    n_corpus = emb.count()
-    k = _pq_k(n_corpus)
-    sub = _pq_subvectors(emb).cache()
+        codebook = _pq_lloyd(sub, k)
+        codes = _pq_encode(sub, codebook)
+        codes.write.mode("overwrite").parquet(os.path.join(out, "codes"))
+        codebook.write.mode("overwrite").parquet(os.path.join(out, "codebook"))
+        sub.unpersist()
+        return {"n": n_corpus}
 
-    codebook = _pq_lloyd(sub, k)
-    codes = _pq_encode(sub, codebook)
-    codes.write.mode("overwrite").parquet(os.path.join(root, "codes"))
-    codebook.write.mode("overwrite").parquet(os.path.join(root, "codebook"))
-    sub.unpersist()
-    with open(marker, "w") as fh:
-        json.dump(
-            {"sf_dir": sf_dir, "n": n_corpus, "k": k, "m": PQ_M, "src": src_fp},
-            fh,
-        )
-    return root
+    return build_once("pq", sf_dir, ("embeddings",), build)
 
 
 PQ_SHORTLIST_MULT = 4  # base shortlist multiplier at the reference corpus
@@ -738,7 +676,8 @@ def q_embedding_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = build_pq_index(spark, sf_dir)
     codebook = spark.read.parquet(os.path.join(root, "codebook"))
     codes = spark.read.parquet(os.path.join(root, "codes"))
-    n_corpus = json.load(open(os.path.join(root, "_BUILT")))["n"]
+    with open(os.path.join(root, "_BUILT")) as fh:
+        n_corpus = json.load(fh)["n"]
     shortlist_size = _pq_shortlist(n_corpus)
     d2 = _pq_sq_l2()
 
@@ -807,20 +746,9 @@ def q_embedding_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # _index cells + _pq_lloyd codebooks) into ONE artifact.
 
 IVFPQ_RECALL_FLOOR = IVF_NPROBE / IVF_K  # probe beats chance cell coverage
-_IVFPQ_INDEX_ROOT = None  # default resolved lazily (tempdir)
 
 
-def ivfpq_index_dir(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    root = _IVFPQ_INDEX_ROOT or os.path.join(
-        tempfile.gettempdir(), "spark_graft_ivfpq"
-    )
-    return os.path.join(root, os.path.basename(sf_dir.rstrip("/")))
-
-
-def build_ivfpq_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
+def build_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     """Train the composed IVF+PQ index ONCE and persist it.
 
     Build: (1) the IVF coarse quantizer (build_ivf_index — reused, not
@@ -833,59 +761,41 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str, force: bool = False) -> 
     code is read — and ``codebook`` (M·K rows). Total serving state is
     the corpus compressed ~16x plus two centroid tables; the float
     vectors are read again only by the exact rerank's key-join.
-    Idempotent via the same density-aware JSON marker as
-    build_pq_index (k = _pq_k(N), source fingerprint)."""
-    import json
+    Built once through ``cache.build_once`` like build_pq_index; a
+    rewritten corpus misses both keys, so the IVF cells retrain too."""
     import os
 
-    root = ivfpq_index_dir(sf_dir)
-    marker = os.path.join(root, "_BUILT")
-    src_fp = _pq_source_fingerprint(sf_dir)
-    if os.path.exists(marker) and not force:
-        try:
-            meta = json.load(open(marker))
-            if (
-                meta.get("k") == _pq_k(meta["n"])
-                and meta.get("m") == PQ_M
-                and meta.get("src") == src_fp
-            ):
-                return root
-        except (ValueError, KeyError):
-            pass
-
-    ivf_root = build_ivf_index(spark, sf_dir)
-    assigned = spark.read.schema(
-        "neighbor_id bigint, vc array<float>, cell int"
-    ).parquet(os.path.join(ivf_root, "corpus"))
-    cent = spark.read.schema("cell int, cvec array<double>").parquet(
-        os.path.join(ivf_root, "centroids")
-    )
-    residual = assigned.join(F.broadcast(cent), "cell").select(
-        F.col("neighbor_id").alias("vec_id"),
-        "cell",
-        F.zip_with(
-            "vc", "cvec", lambda x, y: x.cast("double") - y
-        ).alias("embedding"),
-    )
-    n_corpus = residual.count()
-    k = _pq_k(n_corpus)
-    sub = _pq_subvectors(residual).cache()
-
-    codebook = _pq_lloyd(sub, k)
-    codes = _pq_encode(sub, codebook).join(
-        residual.select("vec_id", "cell"), "vec_id"
-    )
-    codes.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(root, "codes")
-    )
-    codebook.write.mode("overwrite").parquet(os.path.join(root, "codebook"))
-    sub.unpersist()
-    with open(marker, "w") as fh:
-        json.dump(
-            {"sf_dir": sf_dir, "n": n_corpus, "k": k, "m": PQ_M, "src": src_fp},
-            fh,
+    def build(out: str) -> dict:
+        ivf_root = build_ivf_index(spark, sf_dir)
+        assigned = spark.read.schema(
+            "neighbor_id bigint, vc array<float>, cell int"
+        ).parquet(os.path.join(ivf_root, "corpus"))
+        cent = spark.read.schema("cell int, cvec array<double>").parquet(
+            os.path.join(ivf_root, "centroids")
         )
-    return root
+        residual = assigned.join(F.broadcast(cent), "cell").select(
+            F.col("neighbor_id").alias("vec_id"),
+            "cell",
+            F.zip_with(
+                "vc", "cvec", lambda x, y: x.cast("double") - y
+            ).alias("embedding"),
+        )
+        n_corpus = residual.count()
+        k = _pq_k(n_corpus)
+        sub = _pq_subvectors(residual).cache()
+
+        codebook = _pq_lloyd(sub, k)
+        codes = _pq_encode(sub, codebook).join(
+            residual.select("vec_id", "cell"), "vec_id"
+        )
+        codes.write.mode("overwrite").partitionBy("cell").parquet(
+            os.path.join(out, "codes")
+        )
+        codebook.write.mode("overwrite").parquet(os.path.join(out, "codebook"))
+        sub.unpersist()
+        return {"n": n_corpus}
+
+    return build_once("ivfpq", sf_dir, ("embeddings",), build)
 
 
 def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -922,7 +832,8 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = spark.read.schema("vec_id bigint, sub int, code int, cell int").parquet(
         os.path.join(root, "codes")
     )
-    n_corpus = json.load(open(os.path.join(root, "_BUILT")))["n"]
+    with open(os.path.join(root, "_BUILT")) as fh:
+        n_corpus = json.load(fh)["n"]
     shortlist_size = _pq_shortlist(n_corpus)
     ivf_root = build_ivf_index(spark, sf_dir)
     cent = spark.read.schema("cell int, cvec array<double>").parquet(

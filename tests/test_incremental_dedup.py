@@ -11,7 +11,6 @@ incremental-vs-full consistency.
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,10 +19,8 @@ from dbms_query_optimizer_spark.operators import dedup as D
 
 
 @pytest.fixture(scope="module")
-def store_root(sf_dir):
-    root = D.lsh_store_dir(sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
-    yield root
+def store_root(spark, sf_dir):
+    return D.build_lsh_store(spark, sf_dir)
 
 
 def test_store_built_once(spark, sf_dir, store_root):

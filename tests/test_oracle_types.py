@@ -58,8 +58,9 @@ def _warm_footers(spark, sf_dir):
 @pytest.fixture(scope="module", autouse=True)
 def _warm_ivf_index(spark, sf_dir):
     """Pre-build the persisted IVF index. ``knn_ivf``'s construction is
-    build-once/probe-many: on a machine whose tempdir has never seen this
-    sf_dir it TRAINS the quantizer (eager, ~19 jobs) and on every later
+    build-once/probe-many: on a machine whose tempdir holds no index for
+    this sf_dir and engine source (``cache.build_once`` keys on both) it
+    TRAINS the quantizer (eager, ~19 jobs) and on every later
     construction it is lazy — so without this warmup the type gate's
     zero-jobs assertion is a coin flip on host state (failed on a fresh
     /tmp, round 8). Building here pins the gate to the steady-state
