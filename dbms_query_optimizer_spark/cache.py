@@ -89,13 +89,17 @@ def build_once(
     kind: str, sf_dir: str, tables: Iterable[str], build: Callable[[str], dict]
 ) -> str:
     """Directory of the ``kind`` artifact built from ``sf_dir``'s ``tables``:
-    ``gettempdir()/spark_graft_artifacts/<kind>-<hash of kind, real sf_dir,
-    each input file's (path, size, mtime_ns), _source_digest()>``.
+    ``gettempdir()/spark_graft_artifacts/<kind>-<hash of kind, real
+    sf_dir>-<hash of kind, real sf_dir, each input file's (path, size,
+    mtime_ns), _source_digest()>``.
 
     On a miss, ``build(tmp)`` fills a private temp directory whose returned
     dict becomes ``_BUILT`` (JSON); the rename into place is the publish,
     so no reader sees half an artifact, and a concurrent build of the same
-    key that publishes first wins."""
+    key that publishes first wins. Once its own rename publishes, the
+    build removes the superseded roots of the same kind and ``sf_dir``
+    (an older input or engine source); temp directories of builds still
+    in flight stay."""
     sf_dir = os.path.realpath(sf_dir)
     files = []
     for t in tables:
@@ -110,7 +114,8 @@ def build_once(
     stats = [(f, st.st_size, st.st_mtime_ns) for f, st in zip(files, map(os.stat, files))]
     key = json.dumps([kind, sf_dir, stats, _source_digest()]).encode()
     parent = os.path.join(tempfile.gettempdir(), "spark_graft_artifacts")
-    root = os.path.join(parent, f"{kind}-{hashlib.sha256(key).hexdigest()[:16]}")
+    family = f"{kind}-{hashlib.sha256(json.dumps([kind, sf_dir]).encode()).hexdigest()[:16]}-"
+    root = os.path.join(parent, family + hashlib.sha256(key).hexdigest()[:16])
     if os.path.exists(os.path.join(root, "_BUILT")):
         return root
     os.makedirs(parent, exist_ok=True)
@@ -124,6 +129,11 @@ def build_once(
         except OSError:
             if not os.path.exists(os.path.join(root, "_BUILT")):
                 raise
+        else:  # published: drop the superseded roots of this kind and sf_dir
+            for name in os.listdir(parent):
+                path = os.path.join(parent, name)
+                if name.startswith(family) and ".tmp-" not in name and path != root:
+                    shutil.rmtree(path, ignore_errors=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return root

@@ -69,8 +69,9 @@ def q_cbo_ordered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats built by Spark jobs (table_stats.cc:156-213), filter selectivity
     from the histogram (table_stats.cc:262-268), Selinger DP join ordering
     (join_optimizer.cc:108-137), and the chosen left-deep order emitted as
-    an explicit DataFrame join chain. The result is order-independent, so
-    the DuckDB oracle checks semantics while the plan shape is checked by
+    one Catalyst join plan without hints, so Spark's own size estimate picks
+    each join's algorithm. The result is order-independent, so the DuckDB
+    oracle checks semantics while the plan shape is checked by
     tests/test_emitter.py.
     """
     from ..engine import TABLES

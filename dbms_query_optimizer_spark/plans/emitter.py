@@ -1,91 +1,88 @@
 """Plan emitter: ordered join list + filters -> one composed DataFrame.
 
 The reference stops at returning the join order (join_optimizer.h:105-106);
-executing it is out of its scope. Here the order becomes an explicit
-left-deep ``df.join`` chain:
+executing it is out of its scope. Here the order becomes one left-deep
+Catalyst logical plan, built on the JVM side and analysed once:
 
-- Filters are applied to base relations before joining (Catalyst would push
-  them down anyway; doing it in the emitter keeps the logical plan aligned
+- Each base relation is its DataFrame's logical plan; a per-table filter
+  (SQL predicate text) wraps it in a ``Filter`` before joining (Catalyst
+  would push it down anyway; doing it here keeps the logical plan aligned
   with the DP's filtered-cardinality inputs).
-- Spark preserves user-specified join order when CBO join reordering is off
-  (the default), so the emitted shape IS the executed logical shape; AQE
-  may still convert shuffle joins to broadcast at runtime, which changes
-  the algorithm, not the order.
-- Sides whose estimated cardinality is below ``broadcast_threshold`` get an
-  explicit ``broadcast()`` hint — at 100 TB the difference between
-  broadcasting a dimension and shuffling a fact table on it is the whole
-  game.
+- Each join is an inner ``Join`` on a parsed ``l <op> r`` condition, with
+  no hint: Spark's own size estimate against
+  ``autoBroadcastJoinThreshold`` (and AQE at runtime) picks the algorithm.
+- A join whose tables are both already joined is an extra edge and
+  becomes a ``Filter`` over the chain.
+- ``Dataset.ofRows`` wraps the finished plan, which is the one analysis.
+  Building the chain with ``DataFrame.join`` instead would analyse a new
+  Dataset per join, and every ``F.col`` and Column operator costs Py4J
+  round trips for its call-site record.
+
+Spark preserves user-specified join order when CBO join reordering is off
+(the default), so the emitted shape IS the executed logical shape; AQE may
+still convert shuffle joins to broadcast at runtime, which changes the
+algorithm, not the order.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from py4j.java_gateway import JavaClass
+from pyspark.sql import DataFrame
 
 from .planner import LogicalJoinNode
-from .stats import PredicateType, TableStats
 
-_OP_FN = {
-    PredicateType.EQ: lambda a, b: a == b,
-    PredicateType.NE: lambda a, b: a != b,
-    PredicateType.LT: lambda a, b: a < b,
-    PredicateType.LE: lambda a, b: a <= b,
-    PredicateType.GT: lambda a, b: a > b,
-    PredicateType.GE: lambda a, b: a >= b,
-}
 
-DEFAULT_BROADCAST_ROWS = 1_000_000  # dimension-sized; ~tens of MB at TPC-H widths
+def quote(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def emit_plan(
     tables: dict[str, DataFrame],
     plan: list[LogicalJoinNode],
-    filters: dict[str, Column] | None = None,
-    stats: dict[str, TableStats] | None = None,
-    filter_selectivities: dict[str, float] | None = None,
-    broadcast_threshold: int = DEFAULT_BROADCAST_ROWS,
+    filters: dict[str, str] | None = None,
 ) -> DataFrame:
     """Fold a left-deep join order into a single DataFrame.
 
     ``tables``  name -> base DataFrame.
     ``plan``    output of :meth:`JoinOptimizer.order_joins` (left-deep).
-    ``filters`` optional per-table filter Columns, applied pre-join.
-    ``stats``   optional; enables broadcast hints for estimated-small sides.
+    ``filters`` optional per-table SQL predicates, applied pre-join.
     """
     if not plan:
         raise ValueError("empty plan")
     filters = filters or {}
-    sels = filter_selectivities or {}
+    spark = tables[plan[0].left_table].sparkSession
+    jsession = spark._jsparkSession
+    client = spark._jvm._gateway_client
 
-    def base(name: str) -> DataFrame:
-        df = tables[name]
+    def jclass(name: str) -> JavaClass:
+        return JavaClass(name, client)
+
+    parse = jsession.sessionState().sqlParser().parseExpression
+    Filter = jclass("org.apache.spark.sql.catalyst.plans.logical.Filter")
+    Join = jclass("org.apache.spark.sql.catalyst.plans.logical.Join")
+    Some = jclass("scala.Some")
+    inner = jclass("org.apache.spark.sql.catalyst.plans.JoinType").apply("inner")
+    no_hint = jclass("org.apache.spark.sql.catalyst.plans.logical.JoinHint").NONE()
+
+    def base(name: str):
+        node = tables[name]._jdf.logicalPlan()
         if name in filters:
-            df = df.filter(filters[name])
-        return df
+            node = Filter(parse(filters[name]), node)
+        return node
 
-    def est_card(name: str) -> int | None:
-        if stats is None or name not in stats:
-            return None
-        return stats[name].estimate_table_cardinality(sels.get(name, 1.0))
-
-    def maybe_broadcast(name: str, df: DataFrame) -> DataFrame:
-        card = est_card(name)
-        if card is not None and card <= broadcast_threshold:
-            return F.broadcast(df)
-        return df
+    def cond(j: LogicalJoinNode):
+        return parse(f"{quote(j.left_field)} {j.op.value} {quote(j.right_field)}")
 
     first = plan[0]
     joined_tables = {first.left_table, first.right_table}
-    cond = _OP_FN[first.op](F.col(first.left_field), F.col(first.right_field))
-    # outer side unhinted (it is the DP's chosen probe/stream side)
-    current = base(first.left_table).join(
-        maybe_broadcast(first.right_table, base(first.right_table)), cond
+    current = Join(
+        base(first.left_table), base(first.right_table), inner, Some(cond(first)), no_hint
     )
-
     for j in plan[1:]:
         if j.left_table in joined_tables and j.right_table in joined_tables:
             # both sides already joined: this predicate is an extra edge
-            current = current.filter(_OP_FN[j.op](F.col(j.left_field), F.col(j.right_field)))
+            current = Filter(cond(j), current)
             continue
         if j.left_table in joined_tables:
             new_table = j.right_table
@@ -93,11 +90,11 @@ def emit_plan(
             new_table = j.left_table
         else:
             raise ValueError(f"plan is not left-deep connected at {j}")
-        cond = _OP_FN[j.op](F.col(j.left_field), F.col(j.right_field))
-        current = current.join(maybe_broadcast(new_table, base(new_table)), cond)
+        current = Join(current, base(new_table), inner, Some(cond(j)), no_hint)
         joined_tables.add(new_table)
 
-    return current
+    jdf = jclass("org.apache.spark.sql.classic.Dataset").ofRows(jsession, current)
+    return DataFrame(jdf, spark)
 
 
 def explain_string(df: DataFrame, mode: str = "formatted") -> str:

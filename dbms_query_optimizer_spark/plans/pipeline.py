@@ -3,7 +3,8 @@
 This is the full reference lifecycle (SURVEY.md §3) in one call:
 ``TableStats`` built by Spark jobs (entry point 1), ``order_joins`` on the
 driver (entry point 2), and the emitter producing the executable DataFrame
-— the piece the reference leaves abstract.
+— the piece the reference leaves abstract. Filters travel as SQL predicate
+text (one ANDed predicate per table), so no Column is built on the way.
 
 Filter selectivities are estimated from our own histograms, exactly as the
 reference's caller would do with ``TableStats::estimate_selectivity``
@@ -14,23 +15,12 @@ reference's caller would do with ``TableStats::estimate_selectivity``
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from .emitter import emit_plan
+from .emitter import emit_plan, quote
 from .planner import JoinOptimizer, LogicalJoinNode
 from .stats import PredicateType, TableStats
-
-_OP_FN = {
-    PredicateType.EQ: lambda c, v: c == v,
-    PredicateType.NE: lambda c, v: c != v,
-    PredicateType.LT: lambda c, v: c < v,
-    PredicateType.LE: lambda c, v: c <= v,
-    PredicateType.GT: lambda c, v: c > v,
-    PredicateType.GE: lambda c, v: c >= v,
-}
 
 
 @dataclass(frozen=True)
@@ -44,8 +34,8 @@ class FilterSpec:
     op: PredicateType
     constant: int
 
-    def to_column(self) -> Column:
-        return _OP_FN[self.op](F.col(self.column), F.lit(self.constant))
+    def sql(self) -> str:
+        return f"{quote(self.column)} {self.op.value} {self.constant}"
 
 
 @dataclass
@@ -113,26 +103,15 @@ def plan_and_emit(
 
     # per-table combined filter selectivity from our own histograms
     sels: dict[str, float] = {name: 1.0 for name in involved}
-    filter_cols: dict[str, Column] = {}
+    predicates: dict[str, list[str]] = {}
     for spec in filters:
         sels[spec.table] *= stats[spec.table].estimate_selectivity(
             spec.column, spec.op, spec.constant
         )
-        col = spec.to_column()
-        filter_cols[spec.table] = (
-            filter_cols[spec.table] & col if spec.table in filter_cols else col
-        )
+        predicates.setdefault(spec.table, []).append(spec.sql())
 
     plan = JoinOptimizer(joins, pk_columns or {}).order_joins(stats, sels)
     df = emit_plan(
-        tables,
-        plan,
-        filters=filter_cols,
-        stats=stats,
-        filter_selectivities=sels,
+        tables, plan, filters={t: " AND ".join(p) for t, p in predicates.items()}
     )
     return PlannedQuery(df=df, plan=plan, filter_selectivities=sels, stats=stats)
-
-
-def conjoin(columns: list[Column]) -> Column:
-    return reduce(lambda a, b: a & b, columns)

@@ -39,8 +39,8 @@ The DP is O(2^n) in the number of JOINS, not in data size, and never
 touches an executor. On a 4-core x86 VM it takes about 33 us for 3 joins,
 about 9 ms for a 13-join chain or binary tree and about 38 ms for a
 13-join star, whose 8191 subsets are all connected.
-The chosen order is then emitted as an explicit left-deep DataFrame
-composition (emitter.py), where Catalyst picks the physical algorithms.
+The chosen order is then emitted as one left-deep Catalyst logical plan
+(emitter.py), where Catalyst picks the physical algorithms.
 """
 
 from __future__ import annotations

@@ -6,7 +6,8 @@ directory, each input file's (path, size, mtime_ns) and the package source
 digest, so a rewritten input, a second data directory with the same
 basename or an engine edit never reuses a stale artifact; publishing is
 one rename, so a failed build leaves nothing behind and a concurrent
-build of the same key that publishes first wins.
+build of the same key that publishes first wins. A published build removes
+the superseded roots of its own kind and data directory, and nothing else.
 """
 
 from __future__ import annotations
@@ -79,6 +80,40 @@ def test_root_moves_with_input_size_mtime_and_source(artifacts, tmp_path, monkey
     assert len({r0, r1, r2, r3}) == 4
     # the kind is part of the key as well
     assert cache.build_once("pq", d, ("embeddings",), lambda out: {}) != r3
+
+
+def test_digest_change_removes_superseded_root(artifacts, tmp_path, monkeypatch):
+    d = _data_dir(tmp_path / "data")
+    old = cache.build_once("ivf", d, ("embeddings",), lambda out: {})
+    monkeypatch.setattr(cache, "_source_digest", lambda: "edited-engine")
+    new = cache.build_once("ivf", d, ("embeddings",), lambda out: {})
+    assert new != old
+    assert os.listdir(artifacts) == [os.path.basename(new)]
+
+
+def test_prune_spares_other_sf_dir_and_other_kind(artifacts, tmp_path, monkeypatch):
+    d = _data_dir(tmp_path / "data")
+    other = _data_dir(tmp_path / "other")
+    other_dir = cache.build_once("ivf", other, ("embeddings",), lambda out: {})
+    other_kind = cache.build_once("pq", d, ("embeddings",), lambda out: {})
+    cache.build_once("ivf", d, ("embeddings",), lambda out: {})
+    monkeypatch.setattr(cache, "_source_digest", lambda: "edited-engine")
+    new = cache.build_once("ivf", d, ("embeddings",), lambda out: {})
+    assert sorted(os.listdir(artifacts)) == sorted(
+        os.path.basename(p) for p in (other_dir, other_kind, new)
+    )
+
+
+def test_prune_spares_build_in_flight(artifacts, tmp_path, monkeypatch):
+    d = _data_dir(tmp_path / "data")
+    old = cache.build_once("ivf", d, ("embeddings",), lambda out: {})
+    # a concurrent build of the same kind and directory, not yet published
+    in_flight = tempfile.mkdtemp(prefix=os.path.basename(old) + ".tmp-", dir=artifacts)
+    monkeypatch.setattr(cache, "_source_digest", lambda: "edited-engine")
+    new = cache.build_once("ivf", d, ("embeddings",), lambda out: {})
+    assert sorted(os.listdir(artifacts)) == sorted(
+        os.path.basename(p) for p in (in_flight, new)
+    )
 
 
 def test_same_basename_in_two_dirs_gets_two_roots(artifacts, tmp_path):
