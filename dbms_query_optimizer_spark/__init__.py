@@ -12,9 +12,8 @@ Layout
 ------
 - ``session``   : SparkSession factory tuned for local testing and
                   cluster-scale defaults (AQE, Arrow, shuffle sizing).
-- ``engine``    : table registry + stats catalog (name -> DataFrame,
-                  TableStats) — the Spark analog of the reference's
-                  ``Catalog.txt`` + ``TableStats`` map.
+- ``engine``    : table registry (name -> DataFrame, primary key) — the
+                  Spark analog of the reference's ``Catalog.txt``.
 - ``plans``     : pure-Python statistics (IntHistogram / TableStats
                   estimation formulas), the Selinger DP join orderer,
                   and the plan emitter that folds an ordered join list

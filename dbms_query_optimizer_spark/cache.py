@@ -21,10 +21,14 @@ still applies.
 
 :func:`build_once` is the on-disk counterpart: artifacts that outlive a
 session (ANN indexes, the LSH store), keyed on what they were built from.
+:func:`fixture_dir` is its private twin: inputs a query stages before it
+reads them back, in a directory no other process can see or share.
+Between them they own every path the engine puts under ``gettempdir()``.
 """
 
 from __future__ import annotations
 
+import atexit
 import functools
 import hashlib
 import json
@@ -137,3 +141,50 @@ def build_once(
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return root
+
+
+_FIXTURE_ROOTS: dict[str, str] = {}  # fixtures parent -> this process's root
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except OSError:
+        pass  # exists, owned by another user
+    return True
+
+
+def _fixture_root() -> str:
+    """``gettempdir()/spark_graft_fixtures/<pid>``, made on first use and
+    removed at exit. The first use also removes the roots of processes
+    that no longer exist, so a killed run leaves nothing behind for long."""
+    parent = os.path.join(tempfile.gettempdir(), "spark_graft_fixtures")
+    if parent not in _FIXTURE_ROOTS:
+        os.makedirs(parent, exist_ok=True)
+        for name in os.listdir(parent):
+            if name.isdigit() and not _pid_alive(int(name)):
+                shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+        root = os.path.join(parent, str(os.getpid()))
+        os.makedirs(root, exist_ok=True)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _FIXTURE_ROOTS[parent] = root
+    return _FIXTURE_ROOTS[parent]
+
+
+def fixture_dir(sf_dir: str, *parts: str) -> str:
+    """Path, private to this process, at which a query stages the input it
+    reads back: ``<process root>/<sf basename>-<hash of real sf_dir>/<parts>``.
+
+    Nothing exists at the returned path: whatever an earlier call with the
+    same ``sf_dir`` and ``parts`` left there is removed, so a query built
+    again starts from empty files and a fresh streaming checkpoint. What
+    the query writes there stays until that happens or the process exits,
+    so the frames that read it stay lazy."""
+    sf_dir = os.path.realpath(sf_dir)
+    tag = f"{os.path.basename(sf_dir)}-{hashlib.sha256(sf_dir.encode()).hexdigest()[:8]}"
+    path = os.path.join(_fixture_root(), tag, *parts)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    return path

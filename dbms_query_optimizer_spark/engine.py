@@ -1,12 +1,12 @@
-"""Engine: table registry + statistics catalog.
+"""Engine: table registry.
 
-The Spark analog of the reference's catalog + per-table ``TableStats`` map
-(reference: ``src/include/optimizer/catalog.h:13-21``,
-``src/optimizer/table_stats.cc:156-268``). Where the reference identifies a
-table by an integer segment id and tracks ``(table_id, page_count)``, we
-identify a table by name, back it with a Parquet-scanned DataFrame, and track
-a :class:`~dbms_query_optimizer_spark.plans.stats.TableStats` built by Spark
-jobs.
+The Spark analog of the reference's catalog
+(reference: ``src/include/optimizer/catalog.h:13-21``). Where the reference
+identifies a table by an integer segment id and tracks ``(table_id,
+page_count)``, we identify a table by name and back it with a
+Parquet-scanned DataFrame. The per-table ``TableStats`` map
+(``src/optimizer/table_stats.cc:156-268``) lives with the planner:
+``plans.pipeline`` builds and caches it per session and table plan.
 
 The registry also records each table's primary key. The reference hard-codes
 "field 0 is the primary key" (``join_optimizer.cc:220,224``); in a
@@ -76,12 +76,11 @@ class TableEntry:
     df: DataFrame
     path: str
     primary_key: str | None = None
-    stats: object | None = None  # plans.stats.TableStats, built lazily
 
 
 @dataclass
 class Engine:
-    """Session + named-table registry + stats catalog."""
+    """Session + named-table registry."""
 
     spark: SparkSession
     tables: dict[str, TableEntry] = field(default_factory=dict)
@@ -139,17 +138,6 @@ class Engine:
 
     def primary_key(self, name: str) -> str | None:
         return self.tables[name].primary_key
-
-    def analyze(self, name: str, io_cost_per_page: int = 100, buckets: int = 100):
-        """Build (and cache) TableStats for ``name`` via Spark jobs."""
-        from .plans.stats import TableStats
-
-        entry = self.tables[name]
-        if entry.stats is None:
-            entry.stats = TableStats.from_dataframe(
-                entry.df, io_cost_per_page=io_cost_per_page, buckets=buckets
-            )
-        return entry.stats
 
 
 # sf_dir -> (session, name -> DataFrame). DataFrames are immutable logical

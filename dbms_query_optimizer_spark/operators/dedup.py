@@ -1323,8 +1323,8 @@ def q_dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``F.aggregate`` fold this replaced (SCALING.md also records the
     statically-unrolled codegen chain losing 5× to BOTH; a 64-float dot
     per row is exactly the shape expression interpreters and codegen are
-    bad at and BLAS is built for). The explicit round-robin
-    ``repartition(P)`` on the tiny pair frame pins the verify stage's
+    bad at and BLAS is built for). The round-robin ``_fan_out`` to P
+    partitions on the tiny pair frame pins the verify stage's
     task count BEFORE the Python plane: the pair frame is a few MB (AQE
     would coalesce it to ~3 tasks) but each row costs a 64-dim dot, so
     partition count must follow CPU, not bytes.
@@ -1332,7 +1332,6 @@ def q_dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
     t = load_tables(spark, sf_dir)
     e = t["embeddings"].select("vec_id", "embedding")
     bands = F.array(
@@ -1351,7 +1350,7 @@ def q_dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SLOWER here (the signature is cheap case-whens, so the grid
     # machinery cost more than the duplicate derivation it removed).
     bk = track_persist(
-        e.repartition(par)
+        _fan_out(e)
         .select("vec_id", F.explode(bands).alias("bk"))
         .select("vec_id", "bk.band", "bk.key")
     )
@@ -1363,7 +1362,7 @@ def q_dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()  # a pair agreeing in several bands is one candidate
     )
     hydrated = (
-        cand.repartition(par)
+        _fan_out(cand)
         .join(e.toDF("id_a", "va"), "id_a")
         .join(e.toDF("id_b", "vb"), "id_b")
     )

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..cache import build_once
+from ..cache import build_once, fixture_dir
 from ..engine import load_tables
 from .dedup import cosine_expr
 
@@ -2125,13 +2125,10 @@ def q_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_index_refresh.py.
     """
     import os
-    import shutil
 
     from ..sources.manifest import TransactionalTable
-    from .sources_queries import _roundtrip_dir
 
-    root = _roundtrip_dir(sf_dir, "txn_ivf_refresh", "embeddings")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_ivf_refresh", "embeddings")
     table_root = os.path.join(root, "table")
     idx_dir = os.path.join(root, "index")
 
@@ -2532,10 +2529,9 @@ def q_streaming_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.manifest import TransactionalTable
     from ..sources.manifest_stream import register
     from ..streaming.startup import start_and_drain
-    from .sources_queries import _roundtrip_dir, _stage_concurrent
+    from .sources_queries import _stage_concurrent
 
-    root = _roundtrip_dir(sf_dir, "txn_ivf_stream", "embeddings")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_ivf_stream", "embeddings")
     table_root = os.path.join(root, "table")
 
     emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")

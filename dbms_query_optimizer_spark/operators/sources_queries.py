@@ -11,12 +11,11 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import track_persist
+from ..cache import fixture_dir, track_persist
 from ..engine import load_tables
 from ..functions.numeric import dec, dsum_double
 from ..sources import (
@@ -30,14 +29,6 @@ from ..sources import (
     write_parquet,
 )
 from ..streaming.startup import start_and_drain
-
-_ROUNDTRIP_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_sources")
-
-
-def _roundtrip_dir(sf_dir: str, fmt: str, table: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(_ROUNDTRIP_ROOT, tag, fmt, table)
-
 
 def _stage_concurrent(table, frames: list[DataFrame]) -> None:
     """Insert each frame as its own committed transaction, with the
@@ -77,8 +68,8 @@ def q_source_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nation + region through the CSV sink/source, then a broadcast join
     and per-region nation count."""
     t = load_tables(spark, sf_dir)
-    nation_dir = _roundtrip_dir(sf_dir, "csv", "nation")
-    region_dir = _roundtrip_dir(sf_dir, "csv", "region")
+    nation_dir = fixture_dir(sf_dir, "csv", "nation")
+    region_dir = fixture_dir(sf_dir, "csv", "region")
     write_csv(t["nation"], nation_dir, target_files=1)
     write_csv(t["region"], region_dir, target_files=1)
     nation = read_csv(spark, nation_dir, TESTDATA_SCHEMAS["nation"])
@@ -104,7 +95,7 @@ def q_source_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Doubles survive JSON because Spark prints them round-trip
     (shortest repr that parses back exactly)."""
     t = load_tables(spark, sf_dir)
-    cust_dir = _roundtrip_dir(sf_dir, "json", "customer")
+    cust_dir = fixture_dir(sf_dir, "json", "customer")
     write_json(t["customer"], cust_dir, target_files=4)
     customer = read_json(spark, cust_dir, TESTDATA_SCHEMAS["customer"])
     return (
@@ -138,7 +129,7 @@ def q_source_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan to the matching directories before any file is opened.
     """
     t = load_tables(spark, sf_dir)
-    ev_dir = _roundtrip_dir(sf_dir, "parquet_part", "events")
+    ev_dir = fixture_dir(sf_dir, "parquet_part", "events")
     write_parquet(
         t["events"], ev_dir, partition_by=["event_type"], target_files=4
     )
@@ -169,7 +160,7 @@ def q_source_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     format), then a per-nation aggregate. Exercises the vectorized ORC
     reader + its predicate pushdown the same way the parquet path does."""
     t = load_tables(spark, sf_dir)
-    supp_dir = _roundtrip_dir(sf_dir, "orc", "supplier")
+    supp_dir = fixture_dir(sf_dir, "orc", "supplier")
     write_orc(t["supplier"], supp_dir, target_files=2)
     supplier = read_orc(spark, supp_dir, TESTDATA_SCHEMAS["supplier"])
     return (
@@ -217,7 +208,7 @@ def q_dpp_join_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     dynamicpruning expression is present in the executed plan.
     """
     t = load_tables(spark, sf_dir)
-    ev_dir = _roundtrip_dir(sf_dir, "parquet_part", "events")
+    ev_dir = fixture_dir(sf_dir, "parquet_part", "events")
     write_parquet(
         t["events"], ev_dir, partition_by=["event_type"], target_files=4
     )
@@ -268,14 +259,8 @@ def q_source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's read path is fully distributed.
     """
     t = load_tables(spark, sf_dir)
-    out_dir = _roundtrip_dir(sf_dir, "binaryfile", "documents")
-    # defensive cleanup (as in q_bucketed_colocated_join): stale *.txt from
-    # a previous run with different doc ids would match the glob and
-    # silently break oracle parity
-    import shutil
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
+    out_dir = fixture_dir(sf_dir, "binaryfile", "documents")
+    os.makedirs(out_dir)
     rows = (
         t["documents"]
         .filter(F.col("doc_id") < N_BINARY_DOCS)
@@ -329,7 +314,7 @@ def q_source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     intact per generation.
     """
     t = load_tables(spark, sf_dir)
-    out_dir = _roundtrip_dir(sf_dir, "evolve", "orders")
+    out_dir = fixture_dir(sf_dir, "evolve", "orders")
     gen1 = (
         t["orders"]
         .filter(F.col("o_orderkey") % 2 == 1)
@@ -435,40 +420,33 @@ def q_source_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completes the connector surface: batch read + stream read
     (``source_python_datasource`` / ``source_python_stream``) + write.
     """
-    import shutil
-    import tempfile
-
     from ..sources.python_datasource import register
 
     register(spark)
-    out = tempfile.mkdtemp(prefix="spark_graft_pysink_")
-    try:
-        docs = load_tables(spark, sf_dir)["documents"].select(
-            "doc_id", "lang", F.col("n_chars").cast("long").alias("n_chars")
+    out = fixture_dir(sf_dir, "pysink", "documents")
+    docs = load_tables(spark, sf_dir)["documents"].select(
+        "doc_id", "lang", F.col("n_chars").cast("long").alias("n_chars")
+    )
+    (
+        docs.repartition(8)
+        .write.format("jsondirsink")
+        .mode("append")
+        .option("path", out)
+        .save()
+    )
+    landed = spark.read.schema("doc_id long, lang string, n_chars long").json(
+        f"{out}/*.jsonl"
+    )
+    return (
+        landed.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("sum_chars"),
+            F.min("doc_id").alias("min_doc_id"),
+            F.max("doc_id").alias("max_doc_id"),
         )
-        (
-            docs.repartition(8)
-            .write.format("jsondirsink")
-            .mode("append")
-            .option("path", out)
-            .save()
-        )
-        landed = spark.read.schema("doc_id long, lang string, n_chars long").json(
-            f"{out}/*.jsonl"
-        )
-        return (
-            landed.groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_chars").alias("sum_chars"),
-                F.min("doc_id").alias("min_doc_id"),
-                F.max("doc_id").alias("max_doc_id"),
-            )
-            .orderBy("lang")
-            .localCheckpoint()  # materialize before the dir is removed
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+        .orderBy("lang")
+    )
 
 
 ORACLE_SOURCE_PYTHON_DATASINK = """
@@ -717,7 +695,7 @@ def q_source_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import write_zorder_parquet
 
     t = load_tables(spark, sf_dir)
-    zdir = _roundtrip_dir(sf_dir, "zorder", "orders")
+    zdir = fixture_dir(sf_dir, "zorder", "orders")
     write_zorder_parquet(
         t["orders"].select("o_orderkey", "o_custkey", "o_totalprice"),
         zdir,
@@ -908,12 +886,9 @@ def q_txn_write_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the data plane is ordinary distributed parquet writes; only
     the O(KB) manifest commit serializes through the driver.
     """
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -952,12 +927,9 @@ def q_txn_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     base table, so matched-update, unmatched-insert, and untouched-row
     semantics are all value-checked.
     """
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_merge", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_merge", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1000,12 +972,9 @@ def q_txn_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     result must be the ORIGINAL v1 rows; n_versions=3 is emitted as a
     column and pinned by the oracle, proving the rollback was an
     auditable forward commit, not a manifest rewrite."""
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_restore", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_restore", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1050,12 +1019,9 @@ def q_txn_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten byte-identical into new files during the merge; the
     exceptAll row diff cancels them. Only the changed files are ever
     scanned, so the feed costs O(churn), not O(table)."""
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_changes", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_changes", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1111,12 +1077,9 @@ def q_txn_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows' aggregate — wrong rows deleted or wrong files touched both
     flip the hash. At 100 TB on a key-clustered layout a DELETE costs
     O(matching files), never a table scan."""
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_delete", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_delete", "orders")
 
     # cached (r11): the max-key probe and all four quartile insert jobs
     # scan this 3-column projection — five parquet decodes become one
@@ -1189,12 +1152,9 @@ def q_txn_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join), and ``n_rows_after_materialize`` (``materialize_dvs``
     folds the vectors through a COW rewrite and must not change a single
     row — the compaction half of the bargain)."""
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_delete_mor", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_delete_mor", "orders")
 
     # cached (r11): the max-key probe and all four quartile insert jobs
     # scan this 3-column projection — five parquet decodes become one
@@ -1273,12 +1233,9 @@ def q_txn_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     nightly full-table scan. files_rewritten/files_total are pinned at
     2/4 by the oracle alongside the survivors' aggregate."""
     import datetime as dt
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_retention", "events")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_retention", "events")
 
     # INT96 (the legacy parquet default) writes no timestamp min/max, which
     # would blind the time zone maps — force stats-bearing micros under any
@@ -1377,12 +1334,9 @@ def q_txn_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row multiplicity AND the membership of each bucket are
     value-checked. Versions are integers — no date nondeterminism.
     """
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_scd2", "customer")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_scd2", "customer")
 
     cust = load_tables(spark, sf_dir)["customer"].select(
         "c_custkey", "c_mktsegment"
@@ -1461,12 +1415,9 @@ def q_txn_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     CHECK constraints (`txn_constraint_gate`) are the schema-side
     complement.
     """
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_wap", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_wap", "orders")
 
     # cached (r11): the base/bad/good insert jobs each scanned this
     # 3-column projection — three parquet decodes become one
@@ -1541,12 +1492,9 @@ def q_txn_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     open; the oracle recomputes lower-half-unchanged +
     upper-half-doubled, so both the delete scope and the insert content
     are value-checked."""
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_replace", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_replace", "orders")
 
     # cached (r11): the max-key probe and all four quartile insert jobs
     # scan this 3-column projection — five parquet decodes become one
@@ -1608,12 +1556,9 @@ def q_txn_erase_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     that no bystander row was touched. Erase → vacuum physically drops
     the bytes; pre-erasure versions stay time-travel-readable until
     then (tested in tests/test_manifest_delete_clone.py)."""
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_erase", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_erase", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1648,14 +1593,10 @@ def q_txn_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared base plus only their own divergent commit; any metadata
     bleed between the tables (shared tip, wrong file list) flips the
     hash. Cloning is O(KB) regardless of table size."""
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_clone_src", "orders")
-    clone_root = _roundtrip_dir(sf_dir, "txn_clone_dst", "orders")
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(clone_root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_clone_src", "orders")
+    clone_root = fixture_dir(sf_dir, "txn_clone_dst", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1705,12 +1646,9 @@ def q_txn_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the full recompute to the last digit. Cost scales with
     the CHURN (the one commit's delta), never the table — the reason
     CDF-driven refresh is how every lakehouse maintains MVs at 100 TB."""
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_mv", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_mv", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1794,14 +1732,12 @@ def q_streaming_manifest_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate must equal the batch union of the committed slices — the
     oracle recomputes it from the base table, value-checking offsets,
     file diffing, executor reads, and abort invisibility end to end."""
-    import shutil
     import uuid as _uuid
 
     from ..sources.manifest import TransactionalTable
     from ..sources.manifest_stream import register
 
-    root = _roundtrip_dir(sf_dir, "txn_tail", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_tail", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1890,12 +1826,9 @@ def q_txn_zonemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-loaded manifest; on a range-clustered 100 TB key it removes
     entire task waves before scheduling.
     """
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_zonemap", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_zonemap", "orders")
 
     # cached (r11): the max-key probe and all four quartile insert jobs
     # scan this 3-column projection — five parquet decodes become one
@@ -1971,12 +1904,9 @@ def q_txn_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1) files. Build cost is one column-pruned pass per committed file,
     folded into commit exactly where a production writer computes it.
     """
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_bloom", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_bloom", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -2038,12 +1968,9 @@ def q_txn_constraint_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     violating-row count (recomputed by the oracle from the base table),
     and the table version (1 = the rejected txn consumed no version).
     """
-    import shutil
-
     from ..sources.manifest import ConstraintViolation, TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_constraint", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_constraint", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -2116,14 +2043,11 @@ def q_txn_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape in milliseconds, which is exactly why lakehouse formats do
     schema evolution as metadata.
     """
-    import shutil
-
     from pyspark.sql.types import StringType
 
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_evolve", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_evolve", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -2203,12 +2127,9 @@ def q_txn_compact_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, no single-task funnel; old versions stay time-travel-readable
     until vacuum.
     """
-    import shutil
-
     from ..sources.manifest import TransactionalTable, prune_files
 
-    root = _roundtrip_dir(sf_dir, "txn_compact", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_compact", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -2276,12 +2197,9 @@ def q_txn_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction's 6-out/2-in swap — is hash-checked, not just final
     state.
     """
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_history", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_history", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -2324,12 +2242,9 @@ def q_txn_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a historical read plans exactly like a current read — the
     manifest pins a file list, the scan is ordinary distributed parquet.
     """
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_tt", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_tt", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select("o_orderkey", "o_totalprice")
     table = TransactionalTable.create(root, orders.schema)
@@ -2394,12 +2309,9 @@ def q_txn_cluster_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     old files — and pruning cost stays O(files) driver-side.
     """
     import datetime as dt
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_cluster_evo", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_cluster_evo", "orders")
 
     # INT96 (the legacy parquet default) writes no timestamp min/max,
     # which would blind the o_orderdate zones — force stats-bearing
@@ -2525,12 +2437,9 @@ def q_txn_vacuum_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: vacuum is driver-side metadata (set difference of dir names)
     + O(dead files) deletes — no data scan.
     """
-    import shutil
-
     from ..sources.manifest import TransactionalTable
 
-    root = _roundtrip_dir(sf_dir, "txn_vacuum", "orders")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fixture_dir(sf_dir, "txn_vacuum", "orders")
 
     orders = load_tables(spark, sf_dir)["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"

@@ -937,7 +937,6 @@ def q_text_mixed_language(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization exactly once per half — 0.9 s, 6×. The same
     materialize-don't-reinline rule any wide expression DAG needs at
     100 TB."""
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
     docs = load_tables(spark, sf_dir)["documents"]
 
     def padded(expr: str):
@@ -947,12 +946,14 @@ def q_text_mixed_language(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(" "),
         )
 
-    halves = docs.select(
-        "doc_id",
-        F.col("lang").alias("labeled_lang"),
-        padded(f"substring({SQL_MIXED_SRC}, 1, {SQL_HALF_CUT})").alias("p1"),
-        padded(f"substring({SQL_MIXED_SRC}, {SQL_HALF_CUT} + 1)").alias("p2"),
-    ).repartition(par)
+    halves = fan_out(
+        docs.select(
+            "doc_id",
+            F.col("lang").alias("labeled_lang"),
+            padded(f"substring({SQL_MIXED_SRC}, 1, {SQL_HALF_CUT})").alias("p1"),
+            padded(f"substring({SQL_MIXED_SRC}, {SQL_HALF_CUT} + 1)").alias("p2"),
+        )
+    )
 
     def score_cols(pcol: str, suffix: str):
         return [
@@ -962,9 +963,11 @@ def q_text_mixed_language(spark: SparkSession, sf_dir: str) -> DataFrame:
             for lg, markers in T.LANG_MARKERS.items()
         ]
 
-    scored = halves.select(
-        "doc_id", "labeled_lang", *score_cols("p1", "h1"), *score_cols("p2", "h2")
-    ).repartition(par)
+    scored = fan_out(
+        halves.select(
+            "doc_id", "labeled_lang", *score_cols("p1", "h1"), *score_cols("p2", "h2")
+        )
+    )
 
     def argmax(suffix: str):
         langs = list(T.LANG_MARKERS)

@@ -279,11 +279,14 @@ class JoinOptimizer:
         stats: dict[str, TableStats],
         filter_selectivities: dict[str, float],
     ) -> list[LogicalJoinNode]:
-        """Greedy O(n^2) fallback for join graphs too large for the DP.
+        """Greedy O(n^2) join order for graphs too large for the DP.
 
         The Selinger DP is O(2^n) in the join count — fine for hand-written
         queries, unusable for the 50-way star/snowflake joins machine-
-        generated pipelines produce. This is greedy operator ordering
+        generated pipelines produce. The engine plans with the DP
+        (``order_joins``); this is a separate entry point for such graphs,
+        and its cost is the bound the DP's plan is checked against
+        (perfbench, tests). This is greedy operator ordering
         (Fegaras 1998-style GOO restricted to left-deep prefixes): seed
         with the cheapest single join under the reference cost model, then
         repeatedly attach the connected join with the lowest incremental
@@ -355,19 +358,3 @@ class JoinOptimizer:
             joined.update((nxt.left_table, nxt.right_table))
         self.last_plan_cost = acc_cost
         return plan
-
-    # DP above this size would enumerate >2^14 subsets; at 13 joins it
-    # takes about 38 ms for a star (all 8191 subsets connected) on a 4-core
-    # x86 VM, and the greedy path keeps planning sub-millisecond for
-    # machine-generated join graphs.
-    DP_MAX_JOINS = 13
-
-    def order_joins_auto(
-        self,
-        stats: dict[str, TableStats],
-        filter_selectivities: dict[str, float],
-    ) -> list[LogicalJoinNode]:
-        """DP for graphs the DP can afford, greedy beyond."""
-        if len(self.joins) <= self.DP_MAX_JOINS:
-            return self.order_joins(stats, filter_selectivities)
-        return self.order_joins_greedy(stats, filter_selectivities)

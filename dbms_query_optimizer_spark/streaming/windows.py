@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..cache import fixture_dir
 from ..engine import load_tables
 from ..functions.numeric import dec, dsum_double
 
@@ -579,28 +580,21 @@ def q_streaming_foreachbatch_ingest(spark: SparkSession, sf_dir: str) -> DataFra
     exactly-once contract. Fresh checkpoint/output dirs per run so the
     entry re-executes the full drain every time.
     """
-    import shutil
-    import tempfile
-
     from .sinks import run_events_stream_to_files
 
-    root = tempfile.mkdtemp(prefix="spark_graft_fbsink_")
+    root = fixture_dir(sf_dir, "fbsink", "events")
     out_dir, ckpt_dir = f"{root}/out", f"{root}/ckpt"
-    try:
-        run_events_stream_to_files(spark, sf_dir, out_dir, ckpt_dir)
-        landed = spark.read.parquet(out_dir)
-        return (
-            landed.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.count_distinct("event_id").alias("n_distinct_events"),
-                dsum_double(dec("value"), 2).alias("sum_value"),
-            )
-            .orderBy("event_type")
-            .localCheckpoint()  # materialize before the dirs vanish
+    run_events_stream_to_files(spark, sf_dir, out_dir, ckpt_dir)
+    landed = spark.read.parquet(out_dir)
+    return (
+        landed.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.count_distinct("event_id").alias("n_distinct_events"),
+            dsum_double(dec("value"), 2).alias("sum_value"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("event_type")
+    )
 
 
 ORACLE_STREAMING_FOREACHBATCH_INGEST = """
@@ -633,12 +627,9 @@ def q_streaming_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (key-pruned by the semi-join inside merge). The oracle recomputes the
     global latest-per-user directly.
     """
-    import shutil
-    import tempfile
-
     from ..sources.manifest import TransactionalTable
 
-    root = tempfile.mkdtemp(prefix="spark_graft_upsert_")
+    root = fixture_dir(sf_dir, "upsert", "events")
     table_root = f"{root}/table"
     ckpt = f"{root}/ckpt"
 
@@ -671,21 +662,17 @@ def q_streaming_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    try:
-        return (
-            TransactionalTable(table_root)  # fresh recovery-path open
-            .read(spark)
-            .select(
-                "user_id",
-                F.col("event_id").alias("last_event_id"),
-                F.col("ts").alias("last_ts"),
-                F.col("value").alias("last_value"),
-            )
-            .orderBy("user_id")
-            .localCheckpoint()  # materialize before the dirs vanish
+    return (
+        TransactionalTable(table_root)  # fresh recovery-path open
+        .read(spark)
+        .select(
+            "user_id",
+            F.col("event_id").alias("last_event_id"),
+            F.col("ts").alias("last_ts"),
+            F.col("value").alias("last_value"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("user_id")
+    )
 
 
 ORACLE_STREAMING_UPSERT_INGEST = """
@@ -977,39 +964,33 @@ def q_streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_smoothing_sketch.py pins batch-split invariance and the
     error law against exact per-type order statistics.
     """
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="spark_graft_ddsketch_")
+    root = fixture_dir(sf_dir, "ddsketch", "events")
     src_dir, sketch_dir, ckpt = f"{root}/src", f"{root}/sketch", f"{root}/ckpt"
+    vals = load_tables(spark, sf_dir)["events"].select("event_type", "value")
+    vals.repartition(4).write.parquet(src_dir)  # 4 files -> 4 micro-batches
+    stream = (
+        spark.readStream.schema(vals.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        ddsketch_partial(batch_df).write.mode("overwrite").parquet(
+            f"{sketch_dir}/batch={batch_id}"
+        )
+
+    q = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
     try:
-        vals = load_tables(spark, sf_dir)["events"].select("event_type", "value")
-        vals.repartition(4).write.parquet(src_dir)  # 4 files -> 4 micro-batches
-        stream = (
-            spark.readStream.schema(vals.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            ddsketch_partial(batch_df).write.mode("overwrite").parquet(
-                f"{sketch_dir}/batch={batch_id}"
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return ddsketch_readout(
-            spark.read.parquet(sketch_dir).select("event_type", "bin", "pn")
-        ).localCheckpoint()  # materialize before the dirs vanish
+        q.processAllAvailable()
     finally:
-        shutil.rmtree(root, ignore_errors=True)
+        q.stop()
+    return ddsketch_readout(
+        spark.read.parquet(sketch_dir).select("event_type", "bin", "pn")
+    )
 
 
 ORACLE_STREAMING_QUANTILE_SKETCH = f"""

@@ -10,6 +10,7 @@ whole path to pin that arbitration down.
 """
 
 import os
+import re
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -89,3 +90,56 @@ def test_failed_concurrent_staging_leaves_no_orphans(spark, tmp_path):
     # the siblings' staging dirs are aborted, not left for vacuum
     assert os.listdir(os.path.join(root, "data")) == []
     assert table.latest_version() == 0
+
+
+def _normalised_history(root: str) -> list[dict]:
+    """Every committed manifest, oldest first, with each file's staging
+    directory (the txn id) and Spark's per-job part-file id stripped:
+    what is left is what serial and concurrent staging must agree on."""
+    table = TransactionalTable(root)
+
+    def norm(path: str) -> str:
+        rel = os.path.relpath(path, root).split(os.sep)
+        assert rel[0] == "data" and len(rel) == 3, path
+        return re.sub(r"^(part-\d+)-[0-9a-f-]+", r"\1", rel[2])
+
+    out = []
+    for v in range(table.latest_version() + 1):
+        m = table.snapshot(v)
+        out.append({
+            "version": m["version"],
+            "files": [norm(f) for f in m["files"]],
+            "stats": [(norm(f), s) for f, s in m.get("stats", {}).items()],
+            "blooms": [(norm(f), b) for f, b in m.get("blooms", {}).items()],
+        })
+    return out
+
+
+def test_concurrent_staging_matches_serial_commits(spark, tmp_path):
+    """``_stage_concurrent`` overlaps the staging writes only: the table
+    it leaves — versions, files per version, per-file zone maps and
+    blooms, in commit order — is the one a serial insert/commit loop
+    leaves."""
+    src = spark.range(0, 400, numPartitions=2).selectExpr(
+        "id", "id * 7 % 53 AS k", "CAST(id AS DOUBLE) / 3 AS v"
+    )
+    slices = [src.filter(f"id % 4 = {m}").repartition(2, "k") for m in range(4)]
+
+    def build(name: str, stage) -> list[dict]:
+        root = str(tmp_path / name)
+        table = TransactionalTable.create(root, src.schema, bloom_columns=["k"])
+        stage(table)
+        return _normalised_history(root)
+
+    def serial(table):
+        for df in slices:
+            t = table.begin()
+            t.insert(df)
+            t.commit()
+
+    want = build("serial", serial)
+    got = build("concurrent", lambda table: _stage_concurrent(table, slices))
+    assert [m["version"] for m in want] == list(range(5))
+    assert [len(m["files"]) for m in want[1:]] == [2, 4, 6, 8]
+    assert all(m["blooms"] for m in want[1:])
+    assert got == want

@@ -421,8 +421,8 @@ HEADLINE_PROPS: dict[str, list[str]] = {
     "gbt_inference_sql": [
         NO_JOIN, "!tree:Window", "!MapInPandas", "!ArrowEvalPython",
     ],
-    # connector write path: the returned frame is the checkpointed
-    # read-back aggregate; default gates apply
+    # connector write path: the returned frame is the read-back
+    # aggregate over the staged part files; default gates apply
     "source_python_datasink": [],
     # item-item CF: pair support counts combine map-side; the norm
     # lookups are equi-joins; re-rank window only after the limit; the
