@@ -916,13 +916,15 @@ ORACLE_TXN_WRITE_READ = """
 
 
 def q_txn_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Committed copy-on-write MERGE through the manifest log — the
+    """Committed merge-on-read MERGE through the manifest log — the
     counterpart of the reference's in-place heap update with before-image
     logging (reference: src/heap/heap_file.cc:151-257): v1 commits the
     o_orderkey%10==5 slice of orders across many small files; a second
     transaction merges a source that UPDATES half of them (%20==5, price
-    +1000) and INSERTS the %10==6 slice, rewriting only the files that
-    contain a matched key. The read is a fresh recovery-path open of the
+    +1000) and INSERTS the %10==6 slice: the source is appended and a
+    deletion vector removes the replaced rows from the files holding a
+    matched key, so no data file is rewritten and reads apply the vector.
+    The read is a fresh recovery-path open of the
     latest manifest; the oracle recomputes the post-merge state from the
     base table, so matched-update, unmatched-insert, and untouched-row
     semantics are all value-checked.
@@ -936,7 +938,7 @@ def q_txn_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     table = TransactionalTable.create(root, orders.schema)
     t1 = table.begin()
-    # many small files so the merge demonstrably rewrites a subset
+    # many small files, so the merge's vector spans several of them
     t1.insert(orders.filter(F.col("o_orderkey") % 10 == 5).repartition(8))
     t1.commit()
 
@@ -1015,10 +1017,11 @@ def q_txn_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (%20==5, price +1000) plus the %10==6 slice as inserts. The feed
     over (v1, v2] must contain the updated rows as delete+insert pairs
     (old and new values), the inserted slice as inserts, and — the sharp
-    edge — NONE of the copy-on-write survivor rows (%20==15) that were
-    rewritten byte-identical into new files during the merge; the
-    exceptAll row diff cancels them. Only the changed files are ever
-    scanned, so the feed costs O(churn), not O(table)."""
+    edge — NONE of the unchanged rows (%20==15) of the files the merge's
+    deletion vector touched: those files re-enter the diff because their
+    vector stack changed, and the exceptAll row diff cancels their
+    surviving rows. Only the changed files are ever scanned, so the feed
+    costs O(churn), not O(table)."""
     from ..sources.manifest import TransactionalTable
 
     root = fixture_dir(sf_dir, "txn_changes", "orders")
@@ -1321,8 +1324,9 @@ def q_txn_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`scd2_build` computes the history SHAPE as a query; this APPLIES a
     change batch to a dimension table transactionally). Every customer
     loads as version 1 / current; a change batch re-segments every 7th
-    customer; ONE copy-on-write merge replaces each changed key's rows
-    with its CLOSED v1 row + its new CURRENT v2 row — the merge source
+    customer; ONE merge replaces each changed key's rows (a deletion
+    vector over the old row, an append of the new ones) with its CLOSED
+    v1 row + its new CURRENT v2 row — the merge source
     carrying two rows per key is exactly what makes the existing
     key-replace merge semantics implement SCD2 without a special
     operator. Atomic: a reader sees the whole batch's history or none

@@ -58,6 +58,10 @@ def get_spark(
         # PythonWorkerFactory and NOT conf-able — streaming/startup.py
         # retries that one.
         .config("spark.python.authenticate.socketTimeout", "120s")
+        # PySpark records the Python call site of every Column op for
+        # error context (``_with_origin``): 13 Py4J round trips per F.col,
+        # 11 per ==, on plans the engine builds thousands of ops into
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # custom Python data sources implementing pushFilters need this on

@@ -60,6 +60,35 @@ def _hashes(data: bytes, m: int) -> list[int]:
     return [(h1 + i * h2) % m for i in range(NUM_HASHES)]
 
 
+def key_words(values):
+    """The blake2b digests of ``values`` as a (n, 2) array of big-endian
+    uint64 words: hashed once, then probed against any number of filters
+    (``BloomFilter.admits_any``). None if some value has no canonical
+    encoding (NULL, float, ...): no filter can exclude such a set."""
+    import numpy as np
+
+    digests = []
+    for v in values:
+        data = _canon(v)
+        if data is None:
+            return None
+        digests.append(hashlib.blake2b(data, digest_size=16).digest())
+    return np.frombuffer(b"".join(digests), dtype=">u8").reshape(-1, 2)
+
+
+def _bit_indexes(words, m: int):
+    """(NUM_HASHES, n) bit indexes of the keys hashed into ``words``,
+    equal to ``_hashes`` element for element. Identity: (h1 + i·h2) % m
+    == ((h1%m) + i·(h2%m)) % m, and with m < 2^61 the reduced operands
+    never overflow uint64."""
+    import numpy as np
+
+    m64 = np.uint64(m)
+    h1 = words[:, 0] % m64
+    h2 = (words[:, 1] | np.uint64(1)) % m64
+    return (h1 + np.arange(NUM_HASHES, dtype=np.uint64)[:, None] * h2) % m64
+
+
 class BloomFilter:
     """Fixed-size bit-array bloom filter with deterministic hashing."""
 
@@ -79,42 +108,39 @@ class BloomFilter:
         Kirsch-Mitzenmacher index derivations + bit sets per value —
         previously ~n·8 interpreted-Python mod/shift/or steps, the
         measured majority of every bloom-column commit — run as numpy
-        array ops over the packed digests. Identity: (h1 + i·h2) % m ==
-        ((h1%m) + i·(h2%m)) % m, and with m < 2^61 the reduced operands
-        never overflow uint64, so every index (hence every bit) matches
-        the scalar loop exactly (tests/test_manifest_bloom.py pins
-        this)."""
+        array ops over the packed digests (``_bit_indexes``), so every
+        index (hence every bit) matches the scalar loop exactly
+        (tests/test_manifest_bloom.py pins this)."""
         vals = list(values)
         n = n_hint if n_hint is not None else len(vals)
-        m = max(64, n * BITS_PER_KEY)
-        bf = BloomFilter(m)
-        digests = []
-        for v in vals:
-            if v is None:
-                continue  # NULL never matches an equality predicate
-            data = _canon(v)
-            if data is None:
-                return None
-            digests.append(hashlib.blake2b(data, digest_size=16).digest())
-        if not digests:
-            return bf
+        bf = BloomFilter(max(64, n * BITS_PER_KEY))
+        # NULL never matches an equality predicate: not indexed
+        words = key_words(v for v in vals if v is not None)
+        if words is None:
+            return None
         import numpy as np
 
-        d = np.frombuffer(b"".join(digests), dtype=">u8").reshape(-1, 2)
-        h1 = d[:, 0] % np.uint64(m)
-        h2 = (d[:, 1] | np.uint64(1)) % np.uint64(m)
+        idx = _bit_indexes(words, bf.m).ravel()
         bits = np.zeros(len(bf.bits), dtype=np.uint8)
-        for i in range(NUM_HASHES):
-            idx = (h1 + np.uint64(i) * h2) % np.uint64(m)
-            np.bitwise_or.at(
-                bits,
-                (idx >> np.uint64(3)).astype(np.int64),
-                np.left_shift(
-                    np.uint8(1), (idx & np.uint64(7)).astype(np.uint8)
-                ),
-            )
+        np.bitwise_or.at(
+            bits,
+            (idx >> np.uint64(3)).astype(np.int64),
+            np.left_shift(np.uint8(1), (idx & np.uint64(7)).astype(np.uint8)),
+        )
         bf.bits = bytearray(bits.tobytes())
         return bf
+
+    def admits_any(self, words) -> bool:
+        """Might the filter hold ANY of the keys hashed into ``words``
+        (``key_words``)? The same indexes as ``build``, tested for all
+        keys at once."""
+        import numpy as np
+
+        idx = _bit_indexes(words, self.m)
+        bits = np.frombuffer(self.bits, dtype=np.uint8)
+        byte = bits[(idx >> np.uint64(3)).astype(np.int64)]
+        hit = (byte >> (idx & np.uint64(7)).astype(np.uint8)) & np.uint8(1)
+        return bool(hit.all(axis=0).any())
 
     def might_contain(self, value) -> bool:
         """False is a PROOF the value was never added; True is "maybe"."""

@@ -24,12 +24,14 @@ manifests (the core idea of Delta Lake / Iceberg, reduced to its minimum):
   link semantics give first-committer-wins: a version collision (another
   writer committed concurrently) retries against the new tip, which is
   safe because staged file sets are disjoint.
-- A transaction holds inserts only, or ONE rewrite (merge, delete,
-  delete_mor, delete_keys, replace_where, compact, materialize_dvs) first
-  and then inserts. The rewrite pins the snapshot it is computed against,
-  and that snapshot never holds the transaction's own staged work, so a
-  second rewrite, or a rewrite after staged inserts, raises RuntimeError
-  instead of publishing lost or duplicated rows.
+- A transaction holds inserts only, or ONE rewrite first and then
+  inserts: a copy-on-write rewrite (delete, delete_keys, replace_where,
+  compact, materialize_dvs) or a deletion vector (delete_mor, and merge,
+  which appends the source beside its vector). The rewrite pins the
+  snapshot it is computed against, and that snapshot never holds the
+  transaction's own staged work, so a second rewrite, or a rewrite after
+  staged inserts, raises RuntimeError instead of publishing lost or
+  duplicated rows.
 - Readers resolve the highest committed manifest and read exactly its
   file list → snapshot isolation; crash recovery is a no-op (re-open and
   resolve — nothing to replay).
@@ -51,11 +53,11 @@ import uuid
 
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .bloom import BloomFilter, harvest_blooms
+from .bloom import BloomFilter, harvest_blooms, key_words
 
 _MANIFEST_DIR = "manifest"
 _DATA_DIR = "data"
@@ -64,7 +66,7 @@ _VERSION_WIDTH = 12
 
 class ConflictError(RuntimeError):
     """Write-write conflict: the table tip moved past the version a
-    copy-on-write transaction rewrote its files against."""
+    transaction's rewrite or deletion vector was computed against."""
 
 
 class ConstraintViolation(RuntimeError):
@@ -136,17 +138,10 @@ def _json_scalar(v):
     both order-preserving, so zone pruning works on event-time columns
     (the retention/TTL delete case: ``ts < cutoff`` must prune a
     time-clustered 100 TB table to the old files, not scan it)."""
-    import datetime as _dt
-
     if isinstance(v, bool) or v is None:
         return None  # booleans: zone pruning not worth the edge cases
-    if isinstance(v, _dt.datetime):
-        return _ts_micros(v)
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    if isinstance(v, (int, float, str)):
-        return v
-    return None
+    v = _zone_value(v)
+    return v if isinstance(v, (int, float, str)) else None
 
 
 def _zone_value(value):
@@ -162,7 +157,8 @@ def _zone_value(value):
 
 
 def _harvest_stats(files: list[str]) -> dict:
-    """path -> {column -> {min, max, nulls, rows}} from parquet footers.
+    """path -> {column -> {min, max, nulls, rows}} from parquet footers;
+    None for a file with zero rows.
 
     Columns whose physical min/max are absent or non-scalar (nested,
     binary) get only null/row counts — pruning treats missing bounds as
@@ -179,6 +175,9 @@ def _harvest_stats(files: list[str]) -> dict:
             md = pq.ParquetFile(local).metadata
         except Exception:
             continue  # unreadable footer: file simply carries no stats
+        if md.num_rows == 0:
+            out[path] = None
+            continue
         cols: dict[str, dict] = {}
         for rg in range(md.num_row_groups):
             g = md.row_group(rg)
@@ -198,19 +197,11 @@ def _harvest_stats(files: list[str]) -> dict:
                     continue
                 if entry["nulls"] is not None:
                     entry["nulls"] += st.null_count or 0
-                mn = _json_scalar(st.min) if st.has_min_max else None
-                mx = _json_scalar(st.max) if st.has_min_max else None
-                first = rg == 0
-                entry["min"] = (
-                    mn
-                    if first
-                    else (None if None in (mn, entry["min"]) else min(mn, entry["min"]))
-                )
-                entry["max"] = (
-                    mx
-                    if first
-                    else (None if None in (mx, entry["max"]) else max(mx, entry["max"]))
-                )
+                for k, fold in (("min", min), ("max", max)):
+                    v = _json_scalar(getattr(st, k)) if st.has_min_max else None
+                    if rg > 0:  # a missing bound in any row group voids the fold
+                        v = None if None in (v, entry[k]) else fold(v, entry[k])
+                    entry[k] = v
         out[path] = cols
     return out
 
@@ -259,12 +250,16 @@ def _as_conjuncts(where) -> list[tuple]:
     return conj
 
 
-def _bloom_admits_any(bloom_b64: str | None, values) -> bool:
-    """Can a file with this bloom hold ``col = v`` for any of ``values``?
-    The filter is decoded once for the whole set. A bloom "no" is a proof
-    of absence (no false negatives), so pruning on it is exact."""
-    bloom = None if bloom_b64 is None else BloomFilter.from_b64(bloom_b64)
-    return any(bloom is None or v is None or bloom.might_contain(v) for v in values)
+def _bloom_admits_any(bloom_b64: str | None, words) -> bool:
+    """Can a file with this bloom hold ``col = v`` for any key hashed into
+    ``words`` (``key_words``: None when some key cannot be hashed)? A
+    bloom "no" is a proof of absence (no false negatives), so pruning on
+    it is exact."""
+    return (
+        bloom_b64 is None
+        or words is None
+        or BloomFilter.from_b64(bloom_b64).admits_any(words)
+    )
 
 
 def prune_files(snapshot: dict, where) -> tuple[list[str], list[str]]:
@@ -282,7 +277,7 @@ def prune_files(snapshot: dict, where) -> tuple[list[str], list[str]]:
         fblooms = blooms.get(f, {})
         ok = all(
             _zone_may_match(zones.get(c), op, v)
-            and (op != "=" or _bloom_admits_any(fblooms.get(c), [v]))
+            and (op != "=" or _bloom_admits_any(fblooms.get(c), key_words([v])))
             for c, op, v in conj
         )
         (kept if ok else skipped).append(f)
@@ -301,10 +296,43 @@ def _fsync_dir(path: str) -> None:
         os.close(fd)
 
 
-# delete_keys collects the distinct key set driver-side for bloom
-# pruning only below this bound; larger sets skip the pre-prune and use
-# the distributed semi-join discovery alone (still correct, just unpruned)
+# merge and delete_keys collect a single-column key set driver-side for
+# zone/bloom pruning only below this bound; larger sets skip the
+# pre-prune and use the distributed semi-join alone (correct, unpruned)
 _ERASE_BLOOM_MAX_KEYS = 100_000
+
+
+def _prune_by_keys(snap: dict, files: list[str], col: str, vals) -> list[str]:
+    """The files of ``files`` that may hold ``col`` = one of ``vals``: the
+    keys' min/max against each zone map, the key set (hashed once) against
+    each bloom. Neither has false negatives, so a dropped file provably
+    holds no key. NULL keys equal nothing, as in the semi-join pruned for."""
+    vals = [v for v in vals if v is not None]
+    if not vals:
+        return []
+    # NaN is unordered: a min/max over it proves nothing
+    lo, hi = (min(vals), max(vals)) if all(v == v for v in vals) else (None, None)
+    words = key_words(vals)
+    stats, blooms = snap.get("stats", {}), snap.get("blooms", {})
+    return [
+        f for f in files
+        if _zone_may_match(stats.get(f, {}).get(col), ">=", lo)
+        and _zone_may_match(stats.get(f, {}).get(col), "<=", hi)
+        and _bloom_admits_any(blooms.get(f, {}).get(col), words)
+    ]
+
+
+def _staged_keys(files: list[str], col: str) -> list | None:
+    """The distinct ``col`` values of staged parquet ``files``, read
+    driver-side from the footers and the one column (as the commit's
+    stats and blooms are); None above ``_ERASE_BLOOM_MAX_KEYS`` rows."""
+    import pyarrow.parquet as pq
+
+    local = [urlparse(f).path or f for f in files]
+    if sum(pq.read_metadata(p).num_rows for p in local) > _ERASE_BLOOM_MAX_KEYS:
+        return None
+    cols = (pq.read_table(p, columns=[col])[col].to_pylist() for p in local)
+    return list({v for c in cols for v in c})
 
 
 def _scan_with_dvs(
@@ -348,7 +376,7 @@ def _scan_with_dvs(
         parts.append(scan(clean))
     if vectored:
         dv_dirs = sorted({d for f in vectored for d in dvs[f]})
-        dv_df = spark.read.parquet(*dv_dirs)
+        dv_df = spark.read.schema("file string, pos long").parquet(*dv_dirs)
         s = scan(vectored)
         parts.append(
             s.join(
@@ -393,8 +421,6 @@ class Transaction:
         constraints = self._table.snapshot().get("constraints") or {}
         obs = None
         if constraints:
-            from pyspark.sql import Observation
-
             obs = Observation()
             df = df.observe(
                 obs,
@@ -439,70 +465,60 @@ class Transaction:
         self._base_version = snap["version"]
         return snap
 
-    def _rewrite_keys(
-        self, spark: SparkSession, snap: dict, files: list[str], keys: DataFrame,
-        key_cols: list[str],
-    ) -> DataFrame | None:
-        """The key rewrite shared by ``merge`` and ``delete_keys``: a
-        distributed semi-join of ``files`` against the distinct ``keys``
-        collects the paths of the files holding any key (O(files), not
-        O(rows)); those files become ``_replaced`` and their anti-join
-        survivors are returned for staging, or None if no file holds a
-        key. The target scan applies deletion vectors, so rewriting a
-        vectored file folds its vector in instead of resurrecting rows."""
-        target = _scan_with_dvs(
-            spark, _schema(snap), files, snap.get("dvs", {}), keep_meta=True
-        ).drop("__pos")
-        hits = target.join(keys, key_cols, "semi").select("__file").distinct()
-        affected_uris = [r["__file"] for r in hits.collect()]
-        paths = {urlparse(f).path or f for f in affected_uris}
-        self._replaced = [f for f in files if f in paths]
-        if not affected_uris:
-            return None
-        return (
-            target.filter(F.col("__file").isin(affected_uris))
-            .join(keys, key_cols, "anti")
-            .drop("__file")
-        )
+    def _stage_dv(self, snap: dict, matches: DataFrame) -> None:
+        """The one deletion-vector staging path (``merge``, ``delete_mor``):
+        write the scan-time ``__file``/``__pos`` of ``matches`` as this
+        transaction's vector, attached to the files an ``Observation`` on
+        that same write saw (no second scan); an empty vector is removed."""
+        obs = Observation()
+        dv_dir = os.path.join(self._staging, "dv")
+        dv = matches.selectExpr("__file AS file", "__pos AS pos")
+        dv = dv.observe(obs, F.collect_set("file").alias("files"))
+        dv.write.mode("overwrite").parquet(dv_dir)
+        touched = {urlparse(u).path or u for u in obs.get["files"]}
+        if touched:
+            self._dv_adds = {f: [dv_dir] for f in snap["files"] if f in touched}
+        else:
+            shutil.rmtree(dv_dir, ignore_errors=True)
 
     def merge(self, spark: SparkSession, source: DataFrame, key) -> None:
-        """Stage a copy-on-write MERGE (upsert by ``key``): source rows
-        with a matching key REPLACE the target rows; unmatched source rows
-        are inserts.
+        """Stage a merge-on-read MERGE (upsert by ``key``): source rows
+        with a matching key REPLACE the target rows, unmatched ones insert.
+        Duplicate source keys all land; NULL keys equal nothing, so they
+        insert and replace nothing.
 
-        The reference updates a heap tuple in place after logging a
-        before-image UPDATE record (reference: src/heap/heap_file.cc:151-257,
-        src/include/log/log_manager.h:16-23). Over immutable parquet the
-        equivalent is copy-on-write: only the files that contain a matched
-        key are rewritten (minus their matched rows, plus the full source),
-        and ``commit()`` publishes ``base.files − affected + staged`` in
-        one atomic manifest link. The untouched old files ARE the
-        before-image — until the commit point swaps the manifest a crash
-        leaves the previous version fully intact, and afterwards it stays
-        readable via time travel.
+        The reference updates a heap tuple in place behind a before-image
+        UPDATE record (reference: src/heap/heap_file.cc:151-257,
+        src/include/log/log_manager.h:16-23). Here no data file is
+        rewritten: the source is staged as an append, and a deletion
+        vector (``_stage_dv``) deletes every target row whose key it
+        holds; ``commit()`` publishes both in one manifest link, and the
+        untouched files stay the time-travel before-image.
 
-        Scale: the affected-file discovery is ``_rewrite_keys``' semi-join
-        of the target against the (distinct) source keys — distributed,
-        with only the matched FILE PATHS collected (O(files), not
-        O(rows)); the rewrite reads just those files. A merge touching k
-        of N files costs O(k·file_size + |source|), never a full-table
-        rewrite. Conflict
-        rule: first-committer-wins — commit raises ConflictError if the
-        tip moved past the snapshot the rewrite was computed against
-        (insert-only transactions still rebase and retry automatically).
-        """
-        keys = [key] if isinstance(key, str) else list(key)
+        Scale: the source is evaluated once; its staged files feed the
+        append and the discovery. With one key column and at most
+        ``_ERASE_BLOOM_MAX_KEYS`` source rows their keys are read
+        driver-side, ``_prune_by_keys`` drops the files whose zone map or
+        bloom proves them key-free, and the rest are semi-joined against
+        a broadcast of the staged keys: O(candidate files + |source|)
+        read, O(|source| + matched rows) written. Commit raises
+        ConflictError if the tip moved past the pinned snapshot."""
+        key_cols = [key] if isinstance(key, str) else list(key)
         snap = self._pin_base()
-        src = source.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in _schema(snap)]
-        )
-        if snap["files"]:
-            survivors = self._rewrite_keys(
-                spark, snap, snap["files"], src.select(*keys).distinct(), keys
-            )
-            if survivors is not None:
-                src = survivors.unionByName(src)
-        self.insert(src)
+        schema = _schema(snap)
+        cast = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema]
+        self.insert(source.select(*cast))
+        staged, files = self.staged_files(), snap["files"]
+        if not staged or not files:
+            return
+        keys = spark.read.schema(schema).parquet(*staged).select(*key_cols)
+        vals = _staged_keys(staged, key_cols[0]) if len(key_cols) == 1 else None
+        if vals is not None:
+            files = _prune_by_keys(snap, files, key_cols[0], vals)
+            keys = F.broadcast(keys)
+        if files:
+            target = _scan_with_dvs(spark, schema, files, snap.get("dvs", {}), True)
+            self._stage_dv(snap, target.join(keys, key_cols, "semi"))
 
     def delete(self, spark: SparkSession, where) -> None:
         """Stage a copy-on-write DELETE: rows where the predicate is TRUE
@@ -531,23 +547,21 @@ class Transaction:
         self.insert(survivors)
 
     def delete_mor(self, spark: SparkSession, where) -> None:
-        """Stage a MERGE-ON-READ delete via a DELETION VECTOR: instead of
-        rewriting the files that hold matching rows (the COW ``delete``),
-        write only a small parquet of (file, row position) pairs; the
-        manifest attaches it to the affected data files and READS apply
-        it as an anti-join. This is Delta's deletion-vector / Iceberg v2
-        position-delete design, reduced to its minimum.
+        """Stage a MERGE-ON-READ delete via a DELETION VECTOR
+        (``_stage_dv``): instead of rewriting the files that hold matching
+        rows (the COW ``delete``), write only a small parquet of (file,
+        row position) pairs; the manifest attaches it to the affected data
+        files and READS apply it as an anti-join — Delta's deletion
+        vectors / Iceberg v2 position deletes, reduced to their minimum.
 
-        The trade every lakehouse makes, made explicit: COW pays the
-        rewrite at DELETE time and keeps reads pristine; MOR pays ~zero
-        at delete time (the DV is O(deleted rows), the data files are
-        untouched — deleting 100 rows from a 100 TB table writes KBs)
-        and a small anti-join tax on every read until
+        The trade every lakehouse makes: COW pays the rewrite at DELETE
+        time and keeps reads pristine; MOR pays ~zero at delete time (the
+        DV is O(deleted rows) — deleting 100 rows from a 100 TB table
+        writes KBs) and a small anti-join tax on every read until
         ``materialize_dvs`` folds the vectors in (typically piggybacked
         on compaction). File discovery is zone-map pruned like the COW
         path; positions come from the scan-stable ``_metadata.row_index``
-        column. Commit/crash semantics are unchanged: the DV is staged
-        invisible and becomes visible only at the manifest link.
+        column. The DV is staged invisible, visible only at the commit.
         """
         snap = self._pin_base()
         candidates, _ = prune_files(snap, where)
@@ -555,72 +569,52 @@ class Transaction:
             return  # provably nothing to delete: commit is a no-op version
         # scan applies EXISTING vectors so already-deleted positions are
         # not re-recorded — vectors stay minimal as deletes stack
-        matches = (
+        self._stage_dv(
+            snap,
             _scan_with_dvs(
                 spark, _schema(snap), candidates, snap.get("dvs", {}), keep_meta=True
-            )
-            .filter(F.coalesce(_predicate(where), F.lit(False)))
-            .select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
+            ).filter(F.coalesce(_predicate(where), F.lit(False))),
         )
-        dv_dir = os.path.join(self._staging, "dv")
-        matches.write.mode("overwrite").parquet(dv_dir)
-        touched_uris = [
-            r["file"] for r in matches.select("file").distinct().collect()
-        ]
-        if not touched_uris:
-            shutil.rmtree(dv_dir, ignore_errors=True)
-            return  # candidates held no actual match: no-op version
-        by_path = {urlparse(u).path or u: u for u in touched_uris}
-        self._dv_adds = {
-            f: [dv_dir] for f in snap["files"] if f in by_path
-        }
 
     def delete_keys(self, spark: SparkSession, keys: DataFrame, key) -> None:
         """Stage a copy-on-write erasure of every row whose ``key`` appears
-        in ``keys`` — the right-to-be-forgotten primitive a training-data
-        store needs (erase ALL of a user's/document's rows, however many
-        files they straddle). The same two-phase shape as ``merge`` minus
-        the insert, through the same ``_rewrite_keys``: a distributed
-        semi-join against the (distinct) key set discovers the affected
-        FILES (only matched file paths are collected, O(files) not
-        O(rows)); those files are rewritten as their anti-join survivors.
-        Files holding none of the keys are untouched and unread, so
-        erasing k keys from a 100 TB table costs O(files-containing-k +
-        |keys|). On a bloom-indexed key column
-        (``bloom_columns`` at create) the discovery itself is pre-pruned
-        driver-side: only files whose bloom admits AT LEAST ONE key are
-        scanned at all (``discovery_files`` records the pruned count).
-        Old versions remain readable until ``vacuum`` — a compliance flow
-        runs erase → vacuum to physically drop the bytes."""
+        in ``keys`` — the right-to-be-forgotten primitive (erase ALL of a
+        user's rows, however many files they straddle). A semi-join
+        against the distinct key set collects the affected FILE paths
+        (O(files), not O(rows)); those files are rewritten as their
+        anti-join survivors, the rest are untouched and unread. With one
+        key column the discovery is pre-pruned like ``merge``'s: the keys
+        are collected once and ``_prune_by_keys`` drops the files whose
+        zone map or bloom proves them key-free (``discovery_files`` is the
+        pruned count). Copy-on-write, not a deletion vector, on purpose: a
+        compliance flow runs erase → vacuum to physically drop the bytes."""
         key_cols = [key] if isinstance(key, str) else list(key)
         snap = self._pin_base()
-        if not snap["files"]:
-            return
-        ks = keys.select(*key_cols).distinct()
-        # Bloom pre-prune: if the (single) key column carries per-file
-        # blooms and the key set is driver-collectable, test every key
-        # against every file's bloom and feed ONLY admitted files into
-        # the semi-join discovery — the erase then never scans files
-        # that provably hold none of the keys (a bloom "no" has no false
-        # negatives; a false positive just scans one extra file). This
-        # is the step that turns the 100 TB GDPR flow from a full-table
-        # discovery scan into O(files-admitting-any-key).
         files = snap["files"]
-        blooms = snap.get("blooms", {})
-        if len(key_cols) == 1 and blooms:
-            col = key_cols[0]
+        ks = keys.select(*key_cols).distinct()
+        if files and len(key_cols) == 1:
             vals = [r[0] for r in ks.limit(_ERASE_BLOOM_MAX_KEYS + 1).collect()]
             if len(vals) <= _ERASE_BLOOM_MAX_KEYS:
-                files = [
-                    f for f in files
-                    if _bloom_admits_any(blooms.get(f, {}).get(col), vals)
-                ]
+                files = _prune_by_keys(snap, files, key_cols[0], vals)
+                ks = F.broadcast(ks)
         self.discovery_files = len(files)
         if not files:
-            return  # every file bloom-proven key-free: no-op version
-        survivors = self._rewrite_keys(spark, snap, files, ks, key_cols)
-        if survivors is not None:  # None: no file holds any key, no-op version
-            self.insert(survivors)
+            return  # no file can hold a key: no-op version
+        # semi-join discovery collects only the matched FILE PATHS; the
+        # scan applies deletion vectors, so a rewrite folds them in
+        target = _scan_with_dvs(
+            spark, _schema(snap), files, snap.get("dvs", {}), keep_meta=True
+        ).drop("__pos")
+        hits = target.join(ks, key_cols, "semi").select("__file").distinct()
+        affected = [r["__file"] for r in hits.collect()]
+        paths = {urlparse(f).path or f for f in affected}
+        self._replaced = [f for f in files if f in paths]
+        if affected:  # else no file holds any key: no-op version
+            self.insert(
+                target.filter(F.col("__file").isin(affected))
+                .join(ks, key_cols, "anti")
+                .drop("__file")
+            )
 
     def replace_where(self, spark: SparkSession, where, df: DataFrame) -> None:
         """Atomic INSERT OVERWRITE by predicate (Delta's ``replaceWhere``):
@@ -638,8 +632,6 @@ class Transaction:
         not have deleted makes the backfill non-idempotent."""
         assert not self._done, "transaction already finished"
         self.delete(spark, where)
-        from pyspark.sql import Observation
-
         obs = Observation()
         df = df.observe(
             obs,
@@ -661,15 +653,21 @@ class Transaction:
 
         Zone maps are harvested from the staged files' parquet footers
         here — commit is the one point that knows the final file set, and
-        footer reads are O(files) metadata, not data."""
+        footer reads are O(files) metadata, not data. A staged file with
+        zero rows (Spark writes partition 0's file even when it is empty)
+        is deleted, not published: its empty stats could never be pruned."""
         assert not self._done, "transaction already finished"
+        stats = _harvest_stats(self.staged_files())
+        for f in [f for f, st in stats.items() if st is None]:
+            os.remove(f)
+            del stats[f]
         staged = self.staged_files()
         bloom_cols = self._table.snapshot().get("bloom_columns") or []
         version = self._table._publish(
             staged,
             replaced=self._replaced,
             expected_base=self._base_version,
-            stats=_harvest_stats(staged),
+            stats=stats,
             blooms=harvest_blooms(staged, bloom_cols) if bloom_cols else None,
             dvs=self._dv_adds or None,
         )
@@ -853,7 +851,7 @@ class TransactionalTable:
         committed version with its live-file count and the add/remove
         delta vs the previous version — pure manifest bookkeeping,
         derived by diffing consecutive file lists, so it is exact for
-        any mix of inserts, COW merges, and compactions. O(versions ×
+        any mix of inserts, rewrites, and compactions. O(versions ×
         files) driver-side metadata; no data files are opened."""
         rows = []
         prev: set[str] = set()
@@ -1082,15 +1080,16 @@ class TransactionalTable:
            candidates. Files common to both versions provably hold
            unchanged rows and are never scanned.
         2. Row diff (distributed): ``exceptAll`` each candidate scan
-           against the other — copy-on-write survivor rows (rewritten
-           byte-identical into new files) appear in both scans and
-           cancel, leaving exactly the true row-level delta.
+           against the other — unchanged rows of a vectored or rewritten
+           file appear in both scans and cancel, leaving exactly the true
+           row-level delta.
 
         Cost scales with the CHURN (changed files), never table size: a
-        merge that rewrote 3 of 10 000 files feeds 3 + 3 files into two
-        hash-partitioned set differences. Rows are compared under
-        v_to's schema (columns added/dropped between the versions read
-        as NULL / are pruned, matching time-travel read semantics)."""
+        merge that vectored 3 of 10 000 files feeds those 3 twice plus
+        its appended files into two hash-partitioned set differences.
+        Rows are compared under v_to's schema (columns added/dropped
+        between the versions read as NULL / are pruned, matching
+        time-travel read semantics)."""
         a = self.snapshot(v_from)
         b = self.snapshot(v_to)
         schema = _schema(b)
@@ -1114,7 +1113,7 @@ class TransactionalTable:
     def vacuum(self) -> list[str]:
         """Remove staging dirs with no file referenced by the LATEST
         manifest (aborted / crashed-uncommitted writers, and dirs whose
-        files were all replaced by copy-on-write merges — so vacuuming
+        files were all replaced by copy-on-write rewrites — so vacuuming
         trades away time travel to pre-merge versions, as in any
         lakehouse). Returns removed dirs. Referenced files are never
         touched."""

@@ -622,8 +622,9 @@ def q_streaming_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     delivery plus an idempotent merge is the exactly-once contract, the
     same argument as the per-batch_id file sink (streaming/sinks.py).
 
-    Scale: per batch the merge rewrites only files holding touched users;
-    the read-modify-write joins batch-sized frames against the snapshot
+    Scale: per batch the merge appends the batch and writes a deletion
+    vector over the touched users' old rows, rewriting no file; the
+    read-modify-write joins batch-sized frames against the snapshot
     (key-pruned by the semi-join inside merge). The oracle recomputes the
     global latest-per-user directly.
     """

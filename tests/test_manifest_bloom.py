@@ -138,8 +138,8 @@ def test_every_key_found_exhaustive(spark, bloom_table):
 
 
 def test_bloom_survives_cow_merge(spark, tmp_path_factory):
-    """A COW merge rewrites affected files; their blooms must be
-    recomputed from the rewritten contents (stale blooms on new files
+    """A merge appends the source as new files; their blooms must be
+    built from those contents (a missing or stale bloom on a new file
     would be false-negative data loss for the merged-in keys)."""
     root = str(tmp_path_factory.mktemp("bloom_merge") / "tbl")
     df = spark.range(100).select(F.col("id").alias("k"), F.lit(1).alias("v"))
@@ -225,3 +225,31 @@ def test_vectorized_build_bit_identical_to_scalar_reference():
 
     # unsupported type still rejects the whole filter
     assert BloomFilter.build([1, 2.5]) is None
+
+
+def test_vectorized_probe_equals_might_contain():
+    """``_bloom_admits_any`` hashes a key set once and probes each filter
+    with numpy; per key and per set it must answer exactly what the
+    scalar ``might_contain`` answers, on filters of random sizes."""
+    import random
+
+    from dbms_query_optimizer_spark.sources.bloom import BloomFilter, key_words
+    from dbms_query_optimizer_spark.sources.manifest import _bloom_admits_any
+
+    rng = random.Random(11)
+    for n in (1, 7, 64, 500, 3000):
+        present = [rng.randrange(-(2**62), 2**62) for _ in range(n)]
+        bf = BloomFilter.build(present + [f"s{v}" for v in present[:5]])
+        b64 = bf.to_b64()
+        probes = present[:20] + [rng.randrange(-(2**62), 2**62) for _ in range(400)]
+        probes += [f"s{v}" for v in present[:5]] + ["absent", ""]
+        for v in probes:
+            assert _bloom_admits_any(b64, key_words([v])) == bf.might_contain(v)
+        for _ in range(50):
+            keys = rng.sample(probes, rng.randrange(0, 6))
+            want = any(bf.might_contain(v) for v in keys)
+            assert _bloom_admits_any(b64, key_words(keys)) == want
+    # a key with no canonical encoding (float, NULL) can never be excluded
+    assert key_words([1, 2.5]) is None
+    assert _bloom_admits_any(b64, key_words([None])) is True
+    assert _bloom_admits_any(None, key_words([1])) is True

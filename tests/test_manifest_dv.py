@@ -128,8 +128,8 @@ def test_uncommitted_vector_is_invisible(spark, table):
 
 
 def test_mor_then_cow_merge_drops_stale_vector(spark, table):
-    """A COW rewrite of a vectored file folds the vector in: the replaced
-    file's DV entry dies with it and deleted rows stay deleted."""
+    """A merge onto a vectored file stacks its own vector: rows deleted
+    earlier stay deleted, and every DV entry names a live file."""
     td = table.begin()
     td.delete_mor(spark, ("id", "=", 2))
     td.commit()
@@ -142,7 +142,7 @@ def test_mor_then_cow_merge_drops_stale_vector(spark, table):
     tm.commit()
     t = TransactionalTable(table.root)
     got = {r.id: r.val for r in t.read(spark).collect()}
-    assert 2 not in got, "MOR-deleted row resurrected by the COW merge"
+    assert 2 not in got, "MOR-deleted row resurrected by the merge"
     assert got[0] == 100.0
     # the merged files shed their vector entries; only untouched files
     # may still carry theirs

@@ -1,7 +1,7 @@
 """Model-based property test of the manifest table's DML surface.
 
 Hypothesis drives random sequences of the table's write operations
-(insert / COW merge / predicate DELETE / merge-on-read DV delete /
+(insert / MOR merge / predicate DELETE / merge-on-read DV delete /
 DV materialization / compaction / replaceWhere / key erasure / RESTORE)
 against both the real TransactionalTable and a trivial in-memory
 multiset model; after every commit the table's read must

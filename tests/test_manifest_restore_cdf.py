@@ -9,7 +9,7 @@ rolling back publishes it forward as a new auditable version.
 
 The change feed is derived from the manifest file diff (immutability
 means a row can only change by its file leaving the manifest), then an
-exceptAll row diff cancels copy-on-write survivor rows.
+exceptAll row diff cancels the unchanged rows of vectored files.
 """
 
 import pytest
@@ -25,8 +25,8 @@ def table(spark, tmp_path):
 
 
 def _insert(spark, txn, *pairs):
-    # coalesce(1): one data file per insert, so COW replacement leaves no
-    # empty sibling part files behind (matters for the vacuum test)
+    # coalesce(1): one data file per insert, so a materialized merge
+    # leaves its whole staging dir unreferenced (the vacuum test)
     txn.insert(
         spark.createDataFrame(list(pairs), "id long, val double").coalesce(1)
     )
@@ -65,7 +65,8 @@ def test_restore_after_vacuum_refuses(spark, table):
     t1 = table.begin()
     _insert(spark, t1, (1, 1.0))
     t1.commit()  # v1
-    _merge(spark, table, (1, 2.0))  # v2 rewrites v1's file
+    _merge(spark, table, (1, 2.0))  # v2 vectors v1's file
+    table.materialize_dvs(spark)  # v3 folds the vector: v1's file leaves
     removed = table.vacuum()  # reclaims v1's now-unreferenced staging dir
     assert removed
     with pytest.raises(FileNotFoundError):
@@ -95,8 +96,8 @@ def test_changes_merge_emits_update_pair_and_cancels_survivors(spark, table):
         (r.id, r.val, r._change_type)
         for r in table.changes(spark, 1, 2).collect()
     )
-    # survivor (1, 1.0) was rewritten into the new file but must NOT
-    # appear; the update is a delete+insert pair; the insert appears once
+    # survivor (1, 1.0) shares the vectored file but must NOT appear;
+    # the update is a delete+insert pair; the insert appears once
     assert feed == [
         (2, 2.0, "delete"),
         (2, 99.0, "insert"),
@@ -157,7 +158,7 @@ def test_changes_duplicate_rows_are_multiset_exact(spark, table):
     t1 = table.begin()
     _insert(spark, t1, (7, 7.0), (7, 7.0))
     t1.commit()  # v1: two identical rows
-    # COW merge on id=7 replaces BOTH copies with one new row
+    # the merge on id=7 replaces BOTH copies with one new row
     _merge(spark, table, (7, 8.0))  # v2
     feed = sorted(
         (r.id, r.val, r._change_type)

@@ -119,8 +119,10 @@ def test_tail_survives_fileless_versions(spark, table):
 
 
 def test_tail_merge_emits_rewrite_files(spark, table):
-    """Documented append-only-at-file-level contract: a COW merge's
-    rewrite files re-emit survivors; the exact delta is changes()."""
+    """Documented append-only-at-file-level contract: the tail streams
+    each version's added files, so a merge emits its appended source
+    rows and not the rows its deletion vector removes; the exact delta
+    is changes()."""
     _insert(spark, table, (1, 1.0), (2, 2.0))
     txn = table.begin()
     txn.merge(
@@ -131,9 +133,8 @@ def test_tail_merge_emits_rewrite_files(spark, table):
     try:
         q.processAllAvailable()
         got = sorted((r.id, r.val) for r in spark.table(name).collect())
-        # v1 file re-read is replaced by the rewrite; both the survivor
-        # and the updated row appear from the rewrite file, and v1's
-        # original file appears once as well (it was added in v1)
+        # v1's file streams once, for v1 (survivor and old row alike);
+        # the updated row comes from v2's appended file
         assert (1, 1.0) in got and (2, 99.0) in got
         assert (2, 2.0) in got  # v1's original content streamed for v1
     finally:

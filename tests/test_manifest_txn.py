@@ -103,9 +103,9 @@ def test_torn_commit_artifact_ignored(spark, table):
 
 
 # ---------------------------------------------------------------- merge
-# Copy-on-write MERGE — the committed-write counterpart of the
-# reference's in-place heap update + before-image UPDATE record
-# (reference: src/heap/heap_file.cc:151-257).
+# Merge-on-read MERGE (an append plus a deletion vector) — the
+# committed-write counterpart of the reference's in-place heap update +
+# before-image UPDATE record (reference: src/heap/heap_file.cc:151-257).
 
 
 @pytest.fixture()
@@ -158,27 +158,31 @@ def test_merge_abort_keeps_old_values(spark, kv_table):
     assert _kv(spark, kv_table.root) == {1: "a", 2: "b"}
 
 
-def test_merge_rewrites_only_affected_files(spark, kv_table):
-    t1 = kv_table.begin()
-    _kv_insert(spark, t1, (1, "a"), (2, "b"))
-    t1.commit()
-    t2 = kv_table.begin()
-    _kv_insert(spark, t2, (10, "x"), (11, "y"))
-    t2.commit()
+def test_merge_vectors_only_files_holding_a_matched_key(spark, kv_table):
+    for pairs in ([(1, "a"), (2, "b")], [(10, "x"), (11, "y")], [(20, "p")]):
+        t = kv_table.begin()
+        _kv_insert(spark, t, *pairs)
+        t.commit()
     before = set(kv_table.snapshot()["files"])
     hit = {
         f
         for f in before
-        if any(r.id == 1 for r in spark.read.parquet(f).collect())
+        if any(r.id in (1, 11) for r in spark.read.parquet(f).collect())
     }
-    assert hit, "fixture must place the matched key somewhere"
-    t3 = kv_table.begin()
-    t3.merge(spark, spark.createDataFrame([(1, "A")], "id long, val string"), "id")
-    t3.commit()
-    files_after = set(kv_table.snapshot()["files"])
-    assert (before - hit) <= files_after, "unaffected files must survive untouched"
-    assert hit.isdisjoint(files_after), "files holding a matched key are replaced"
-    assert _kv(spark, kv_table.root) == {1: "A", 2: "b", 10: "x", 11: "y"}
+    assert len(hit) >= 2, "fixture must spread the matched keys over files"
+    t4 = kv_table.begin()
+    t4.merge(
+        spark,
+        spark.createDataFrame([(1, "A"), (11, "Y"), (30, "n")], "id long, val string"),
+        "id",
+    )
+    t4.commit()
+    snap = kv_table.snapshot()
+    assert before <= set(snap["files"]), "merge replaces no file"
+    assert set(snap.get("dvs", {})) == hit, "exactly the matched files gain a vector"
+    assert _kv(spark, kv_table.root) == {
+        1: "A", 2: "b", 10: "x", 11: "Y", 20: "p", 30: "n"
+    }
 
 
 def test_merge_time_travel_preserves_before_image(spark, kv_table):

@@ -141,8 +141,8 @@ def test_missing_stats_backward_compatible(clustered, spark, tmp_path):
 
 
 def test_merge_refreshes_stats(spark, tmp_path):
-    """COW merge: replaced files leave the stats map; rewritten files
-    arrive with fresh footer stats covering the updated values."""
+    """Merge: the appended files arrive with fresh footer stats covering
+    the updated values, and every live file has an entry."""
     table, df = _build(spark, str(tmp_path / "zm_merge"))
     src = spark.createDataFrame([(5, 99.0, "zz")], "k long, v double, s string")
     t = table.begin()
