@@ -1627,16 +1627,16 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (after "SemDeDup: Data-efficient learning at web-scale through
     semantic deduplication", Abbas et al., 2023 — public paper).
 
-    Build: distributed Lloyd's over the full embedding (hash-partition
-    init so every cell starts non-empty; broadcast-centroid crossJoin +
-    struct-min argmin assign, posexplode grouped-mean update — two
-    bounded shuffles per iteration, centroid frame localCheckpointed so
-    lineage stays flat). Dedup: per-cluster Arrow applyInPandas computes
-    the dense cosine tile with one numpy GEMM and drops every vector that
-    has a smaller-id in-cluster witness with cosine >= SEMDEDUP_TAU;
-    ``dup_of`` on a dropped row names its smallest-id witness — which in
-    a similarity chain (a~b, b~c, a≁c) can itself be a dropped row, so
-    ``dup_of`` is the dedup *cause*, not necessarily a kept survivor.
+    Build: distributed Lloyd's over the full embedding on the PQ
+    trainer, ``similarity._lloyd`` with no group key (hash-partition
+    init, broadcast-centroid argmin assign, grouped-mean update, the
+    centroid frame checkpointed per iteration). Dedup: per-cluster Arrow
+    applyInPandas computes the dense cosine tile with one numpy GEMM and
+    drops every vector that has a smaller-id in-cluster witness with
+    cosine >= SEMDEDUP_TAU; ``dup_of`` on a dropped row names its
+    smallest-id witness — which in a similarity chain (a~b, b~c, a≁c)
+    can itself be a dropped row, so ``dup_of`` is the dedup *cause*, not
+    necessarily a kept survivor.
 
     Scale: the cluster count grows with the corpus so each tile fits one
     executor (SemDeDup's own regime — 50k clusters for web scale); a
@@ -1650,55 +1650,18 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    from .similarity import _lloyd, _lloyd_assign
+
     t = load_tables(spark, sf_dir)
     # cached: every Lloyd's iteration re-reads this frame (assign joins it
     # against the new centroids); without the cache the corpus would be
     # re-scanned SEMDEDUP_ITERS+2 times
     e = track_persist(t["embeddings"].select("vec_id", "embedding"))
 
-    def means(assigned: DataFrame) -> DataFrame:
-        return (
-            assigned.select("cluster", F.posexplode("embedding").alias("dim", "v"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg(F.col("v").cast("double")).alias("mu"))
-            .groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "mu"))).alias("_a"))
-            .select("cluster", F.transform("_a", lambda s: s["mu"]).alias("cvec"))
-        )
-
-    cent = means(
-        e.withColumn(
-            "cluster", F.pmod(F.xxhash64("vec_id"), F.lit(SEMDEDUP_K)).cast("int")
-        )
-    ).localCheckpoint(eager=True)
-
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    cent = _lloyd(e, SEMDEDUP_K, SEMDEDUP_ITERS, [], "embedding")
+    assigned = _lloyd_assign(e, cent, [], "embedding").withColumnRenamed(
+        "code", "cluster"
     )
-
-    def assign(cent: DataFrame) -> DataFrame:
-        return (
-            e.crossJoin(F.broadcast(cent))
-            .withColumn("_d2", d2)
-            .groupBy("vec_id")
-            .agg(
-                F.min(
-                    F.struct(F.col("_d2").alias("d"), F.col("cluster").alias("c"))
-                ).alias("m"),
-                F.first("embedding").alias("embedding"),
-            )
-            .select("vec_id", F.col("m.c").alias("cluster"), "embedding")
-        )
-
-    for _ in range(SEMDEDUP_ITERS):
-        cent = means(assign(cent)).localCheckpoint(eager=True)
-    assigned = assign(cent)
 
     def cluster_dedup(key, pdf):
         ids = pdf["vec_id"].to_numpy()

@@ -9,8 +9,9 @@ to is |event types|² rows — fixed by the event vocabulary, not the corpus
 overhead: a 133-operator plan and 10 tiny jobs for ≤ |types|²-row
 frames). The driver-orchestrated distributed-iteration pattern for
 graphs whose NODE domain grows with the corpus lives in
-``weakly_connected_components`` / ``q_graph_bfs_hops`` below (frontier
-messaging, per-round localCheckpoint lineage truncation).
+``_frontier_loop`` below, shared by ``weakly_connected_components``,
+``bfs_hops`` and ``kcore`` (frontier messaging, per-round checkpoint
+lineage truncation).
 
 The oracle unrolls the same power iteration as chained CTEs (standard SQL
 forbids aggregation inside a recursive CTE member, so unrolling is the
@@ -19,6 +20,8 @@ per-node sums of ≤|types| doubles; ROUND(…,6) absorbs ulp-order effects.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -589,28 +592,74 @@ ORDER BY channel
 """
 
 
-def _undirected_persisted(edges: DataFrame) -> DataFrame:
-    """Symmetric, deduped, persisted edge frame for the iterative graph
-    loops. Persisted because every round's message/frontier join re-reads
-    it (without the persist each round re-runs the full upstream edge
-    build); edge-domain sized; CALLERS unpersist when their loop exits.
+def _frontier_loop(
+    edges: DataFrame,
+    init: Callable[[DataFrame], DataFrame],
+    step: Callable[[DataFrame, DataFrame, int], DataFrame],
+    rounds: int,
+    error: str,
+) -> DataFrame:
+    """The bounded frontier loop behind WCC, BFS and k-core: the one
+    place that owns the edge frame, the loop width, the per-round
+    checkpoint, the empty-frontier stop and the round bound.
 
-    Persisted HASH-PARTITIONED on ``src`` at the loop state width (r11,
-    guide §2.4): every round's message step joins this frame on ``src``,
-    and a cached frame's partitioning is visible to the planner, so the
-    edge side of that join never re-exchanges — only the (shrinking)
-    frontier moves each round. The previous ``coalesce`` left the
-    partitioning unknown and the loop re-shuffled the edges every round.
+    A state is a node-domain frame whose boolean ``live`` column marks
+    the frontier (WCC: labels that just improved; BFS: nodes first
+    reached this round; k-core: nodes whose degree just fell below k).
+    ``init(und)`` builds state 0 and ``step(und, state, r)`` builds
+    state r from state r - 1, both over ``und``, the symmetric,
+    distinct edge list (``src``, ``dst``). The loop stops at the first
+    state with no live row and returns it without ``live``; if states
+    0..``rounds`` all have a live row it raises ``RuntimeError(error)``
+    without building state ``rounds + 1``.
+
+    Loop shape (measured on local[32]):
+    - ``und`` is persisted HASH-PARTITIONED on ``src`` at
+      ``state_width``: every round re-joins it on ``src``, and a cached
+      frame's partitioning is visible to the planner, so only the
+      (shrinking) frontier moves each round; without the persist each
+      round would re-run the whole upstream edge build. Its plan,
+      shuffles included, is fixed when it is persisted, i.e. at the
+      ambient ``spark.sql.shuffle.partitions``, whichever job first
+      materializes it.
+    - The rounds run with ``spark.sql.shuffle.partitions`` narrowed to
+      ``state_width``, so each round's joins and aggregates plan
+      ``width`` tasks instead of the session's full width: task launch
+      was the measured majority of the WCC loop. The width tracks the
+      configured parallelism (``state_width``), so this stays sound on a
+      cluster. The setting is restored on exit.
+    - Each state is coalesced to that width and ``localCheckpoint``-ed,
+      so the plan depth stays constant over the rounds (labels,
+      visited sets and degrees are node-domain-sized, the documented
+      exception to the no-corpus-checkpoint rule) and nothing returned
+      re-reads ``und``, which is released on every exit path.
     """
     from ..session import state_width
 
-    return (
+    spark = edges.sparkSession
+    width = state_width(edges)
+    und = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .repartition(state_width(edges), "src")
+        .repartition(width, "src")
         .persist()
     )
+    key = "spark.sql.shuffle.partitions"
+    ambient = spark.conf.get(key)
+    try:
+        state = init(und).coalesce(width).localCheckpoint()
+        spark.conf.set(key, str(width))
+        for r in range(1, rounds + 2):
+            if state.filter("live").count() == 0:
+                return state.drop("live")
+            if r > rounds:
+                break
+            state = step(und, state, r).coalesce(width).localCheckpoint()
+    finally:
+        spark.conf.set(key, ambient)
+        und.unpersist()
+    raise RuntimeError(error)
 
 
 def _star_edges(members: DataFrame, keys: list[str]) -> DataFrame:
@@ -644,15 +693,17 @@ def weakly_connected_components(
     ``ER_MAX_ITERS``) all call it.
 
     Returns (node, component) where component = min node id reachable.
-    Scale: labels are |nodes| rows, messages track the SHRINKING
-    frontier (a node whose label didn't improve has nothing new to
-    tell its neighbors), and ``localCheckpoint`` per round keeps plan
-    depth constant — the documented iteration-state exception to the
-    no-corpus-checkpoint rule, since labels are node-domain-sized.
+    Scale: labels are |nodes| rows and messages track the SHRINKING
+    frontier (a node whose label didn't improve has nothing new to tell
+    its neighbors); ``_frontier_loop`` runs the rounds. The first round
+    needs no join: every node starts labelled with itself, so its round-1
+    label is the min of itself and its neighbors, one aggregate over the
+    ``src``-partitioned edge frame. ``max_iters`` bounds the rounds,
+    that first one included.
 
-    Each round also POINTER-JUMPS: after the message step, every node
-    takes the min of its new label and that label's label as of the
-    previous round, so label chains shortcut every round — measured
+    Each later round also POINTER-JUMPS: after the message step, every
+    node takes the min of its new label and that label's label as of
+    the previous round, so label chains shortcut every round — measured
     10 → 7 rounds (counting the final empty-frontier round) on the sf0.1
     fixture graph (one 1445-node component), 13 → 8 on the
     dedup_components near-dup graph. The jump reads the previous round's
@@ -663,80 +714,53 @@ def weakly_connected_components(
     without a jump, 0.55 s with that jump, 0.38 s with this one). The
     jump is one extra node-domain join per round; safety is monotone
     (labels only decrease, and a label's label is always in the same
-    component), and the frontier rule stays sound because ``improved``
-    is computed against the round's FINAL label, message- or
-    jump-sourced alike.
-
-    r11 loop shape: the rounds run under ``session.loop_width_conf``
-    (per-round exchanges plan ``state_width`` tasks instead of the
-    session's full shuffle width — task-launch overhead was the measured
-    majority of the loop at local[32]) and the persisted edge frame is
-    hash-partitioned on ``src`` so the message join re-exchanges only
-    the shrinking frontier, never the edges.
+    component), and the frontier rule stays sound because ``live`` is
+    computed against the round's FINAL label, message- or jump-sourced
+    alike.
     """
-    from ..session import loop_width_conf, state_width
 
-    und = _undirected_persisted(edges)
-    width = state_width(edges)
-    try:
-        # The labels init ALSO materializes ``und`` — deliberately OUTSIDE
-        # the width scope below, so the corpus-scale edge build upstream of
-        # the persist shuffles at the ambient parallelism; only the loop's
-        # node-domain rounds run narrow.
-        labels = (
-            und.select(F.col("src").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("label"))
-            .localCheckpoint()
+    def first_round(und: DataFrame) -> DataFrame:
+        return (
+            und.groupBy(F.col("src").alias("node"))
+            .agg(F.min("dst").alias("m"))
+            .select(
+                "node",
+                F.least("node", "m").alias("label"),
+                (F.col("m") < F.col("node")).alias("live"),
+            )
         )
-        frontier = labels  # round 1: every node announces its own label
-        with loop_width_conf(edges.sparkSession, width):
-            for _ in range(max_iters):
-                msg_min = (
-                    und.join(
-                        frontier.toDF("f_node", "f_label"),
-                        und.src == F.col("f_node"),
-                    )
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(F.min("f_label").alias("m"))
-                )
-                stepped = labels.join(msg_min, "node", "left").select(
-                    "node",
-                    "label",
-                    F.least("label", F.coalesce("m", "label")).alias("l1"),
-                )
-                # pointer jump: follow l1 to the label node l1 held after
-                # the previous round
-                hop = labels.select(
-                    F.col("node").alias("j_node"), F.col("label").alias("j_l1")
-                )
-                new_labels = (
-                    stepped.join(hop, stepped.l1 == F.col("j_node"), "left")
-                    .select(
-                        "node",
-                        F.least("l1", F.coalesce("j_l1", "l1")).alias("new_label"),
-                        "label",
-                    )
-                    .select(
-                        "node",
-                        F.col("new_label").alias("label"),
-                        (F.col("new_label") < F.col("label")).alias("improved"),
-                    )
-                    .coalesce(width)
-                    .localCheckpoint()
-                )
-                frontier = new_labels.filter("improved").select("node", "label")
-                labels = new_labels.select("node", "label")
-                if frontier.count() == 0:
-                    break
-            else:
-                raise RuntimeError(
-                    f"WCC did not converge in {max_iters} iterations"
-                )
-    finally:
-        # released on every exit path — the returned labels are
-        # checkpointed, so nothing downstream re-reads the edge frame
-        und.unpersist()
+
+    def step(und: DataFrame, labels: DataFrame, _r: int) -> DataFrame:
+        msg_min = (
+            und.join(
+                labels.filter("live").select(
+                    F.col("node").alias("f_node"), F.col("label").alias("f_label")
+                ),
+                und.src == F.col("f_node"),
+            )
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("f_label").alias("m"))
+        )
+        stepped = labels.join(msg_min, "node", "left").select(
+            "node",
+            "label",
+            F.least("label", F.coalesce("m", "label")).alias("l1"),
+        )
+        # pointer jump: follow l1 to the label node l1 held after the
+        # previous round
+        hop = labels.select(F.col("node").alias("j_node"), F.col("label").alias("j_l1"))
+        new_label = F.least("l1", F.coalesce("j_l1", "l1"))
+        return stepped.join(hop, stepped.l1 == F.col("j_node"), "left").select(
+            "node", new_label.alias("label"), (new_label < F.col("label")).alias("live")
+        )
+
+    labels = _frontier_loop(
+        edges,
+        first_round,
+        step,
+        max_iters - 1,
+        f"WCC did not converge in {max_iters} iterations",
+    )
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -841,6 +865,64 @@ ORDER BY user_id
 BFS_MAX_HOPS = 30  # max representable hop distance (oracle CTE depth bound)
 
 
+def bfs_hops(edges: DataFrame, source) -> DataFrame:
+    """Generic single-source BFS over an edge list (``src``/``dst``, any
+    orientation): (node, hops) for every node reachable from ``source``,
+    the source itself at hop 0. Unreachable nodes are excluded.
+
+    Classic frontier BFS on ``_frontier_loop``: the first state is the
+    source and its neighbors, read off the ``src``-partitioned edge frame
+    with no join; then round d joins the nodes first reached in round
+    d - 1 against the edge list, anti-joins out already-visited nodes,
+    and tags survivors with distance d — each edge is traversed at most
+    twice over the whole run (once per direction, the round its source
+    enters the frontier), so total work is O(E) regardless of round
+    count, and the visited set is the node-domain state checkpointed per
+    round.
+
+    Hops up to and INCLUDING ``BFS_MAX_HOPS`` are allowed, so the loop
+    runs one confirming round past the bound: only a frontier still
+    alive BEYOND it raises. ``BFS_MAX_HOPS`` is read at call time.
+    """
+
+    def first_hop(und: DataFrame) -> DataFrame:
+        return (
+            und.filter((F.col("src") == source) & (F.col("dst") != source))
+            .select(F.col("dst").alias("node"), F.lit(1).alias("hops"), F.lit(True).alias("live"))
+            .union(
+                und.sparkSession.range(1).select(
+                    F.lit(source).cast(und.schema["src"].dataType).alias("node"),
+                    F.lit(0).alias("hops"),
+                    F.lit(False).alias("live"),
+                )
+            )
+        )
+
+    def step(und: DataFrame, visited: DataFrame, r: int) -> DataFrame:
+        # state r - 1 reached hop r; this one reaches hop r + 1
+        reached = (
+            und.join(
+                visited.filter("live").select(F.col("node").alias("f_node")),
+                und.src == F.col("f_node"),
+            )
+            .select(F.col("dst").alias("node"))
+            .distinct()
+            .join(visited.select("node"), "node", "left_anti")
+        )
+        return visited.select("node", "hops", F.lit(False).alias("live")).union(
+            reached.select("node", F.lit(r + 1).alias("hops"), F.lit(True).alias("live"))
+        )
+
+    return _frontier_loop(
+        edges,
+        first_hop,
+        step,
+        BFS_MAX_HOPS,
+        f"BFS frontier alive beyond {BFS_MAX_HOPS} hops — "
+        "outside the oracle's CTE depth bound",
+    )
+
+
 def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source BFS hop distance over the generic edge list — the
     unweighted-shortest-path primitive (blast-radius queries, degrees of
@@ -852,25 +934,16 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((day, hour, event_type) groups — denser than the purchase graph, so
     the driver-checked sf0.01 result carries the full 150-user level
     structure rather than a near-singleton component). Source = the
-    minimum user with at least one edge, else the minimum user. Classic
-    frontier BFS:
-    round d joins the CURRENT frontier against the edge list, anti-joins
-    out already-visited nodes, and tags survivors with distance d — each
-    edge is traversed at most twice over the whole run (once per
-    direction, the round its source enters the frontier), so total work
-    is O(E) regardless of round count, and the visited set is
-    node-domain-sized state checkpointed per round like the WCC labels.
-    Unreachable nodes are excluded (inner semantics). Output also
-    carries n_at_hop — how many nodes share the row's distance — making
-    the hash sensitive to the full level structure.
+    minimum user with at least one edge, else the minimum user; the
+    operator is the generic ``bfs_hops``. Output also carries n_at_hop —
+    how many nodes share the row's distance — making the hash sensitive
+    to the full level structure.
 
     The oracle walks the same graph with a bounded recursive CTE
     ((node, depth) states, depth < BFS_MAX_HOPS — so hops up to and
     INCLUDING BFS_MAX_HOPS are representable, then MIN(depth) per node).
-    The Spark loop runs one extra confirming round past the bound: a
-    node at exactly BFS_MAX_HOPS hops is fine (the oracle covers it);
-    only a frontier still alive BEYOND the bound raises, because the
-    oracle could no longer represent those nodes.
+    ``bfs_hops`` raises only for a frontier still alive BEYOND the
+    bound, because the oracle could no longer represent those nodes.
     """
     from pyspark.sql import Window as W
 
@@ -884,50 +957,17 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    from ..session import loop_width_conf, state_width
-
-    und = _undirected_persisted(_star_edges(members, ["d", "h", "t"]))
-    width = state_width(ev)
-    try:
-        # min edge-bearing user; on an edge-free fixture fall back to the
-        # min user so the result is the source alone at hop 0 rather than
-        # a crash/NULL divergence. This action also materializes the
-        # corpus-scale edge build at the AMBIENT width, before the loop
-        # narrows the shuffle conf to the node-domain state width.
-        src_row = und.agg(F.min("src").alias("s")).collect()[0]
-        if src_row["s"] is not None:
-            source = int(src_row["s"])
-        else:
-            source = int(ev.agg(F.min("user_id").alias("s")).collect()[0]["s"])
-
-        visited = spark.createDataFrame(
-            [(source, 0)], "node long, hops int"
-        ).localCheckpoint()
-        frontier = visited.select("node")
-        with loop_width_conf(spark, width):
-            for d in range(1, BFS_MAX_HOPS + 2):
-                nxt = (
-                    und.join(frontier.toDF("f_node"), und.src == F.col("f_node"))
-                    .select(F.col("dst").alias("node"))
-                    .distinct()
-                    .join(visited.select("node"), "node", "left_anti")
-                    .select("node", F.lit(d).cast("int").alias("hops"))
-                    .coalesce(width)
-                    .localCheckpoint()
-                )
-                if nxt.count() == 0:
-                    break
-                if d > BFS_MAX_HOPS:
-                    raise RuntimeError(
-                        f"BFS frontier alive beyond {BFS_MAX_HOPS} hops — "
-                        "outside the oracle's CTE depth bound"
-                    )
-                visited = visited.union(nxt).coalesce(width).localCheckpoint()
-                frontier = nxt.select("node")
-    finally:
-        und.unpersist()
+    # cached: the source choice and the BFS edge build both read it
+    edges = track_persist(_star_edges(members, ["d", "h", "t"]))
+    # min edge-bearing user; on an edge-free fixture fall back to the min
+    # user so the result is the source alone at hop 0 rather than a
+    # crash/NULL divergence
+    source = edges.agg(F.min(F.least("src", "dst")).alias("s")).collect()[0]["s"]
+    if source is None:
+        source = ev.agg(F.min("user_id").alias("s")).collect()[0]["s"]
     return (
-        visited.select(
+        bfs_hops(edges, source)
+        .select(
             F.col("node").alias("user_id"),
             "hops",
             F.count(F.lit(1)).over(W.partitionBy("hops")).alias("n_at_hop"),
@@ -972,8 +1012,8 @@ KCORE_QTY_MIN = 48  # fixture edge filter: supply links with quantity >= 48
 # Oracle unroll depth == the Spark loop's round bound (handshake, the
 # BFS_MAX_HOPS pattern): a cascade still shedding nodes beyond this
 # raises Spark-side because the unrolled oracle could no longer follow.
-# Measured cascade depth on the fixture is 1 round at every SF; crafted
-# multi-round graphs are covered in tests/test_graph_wcc.py.
+# Measured cascade depth on the fixture is 1 round at every SF;
+# tests/test_graph_wcc.py pins the bound on crafted multi-round graphs.
 KCORE_MAX_ROUNDS = 8
 
 
@@ -989,57 +1029,48 @@ def kcore(edges: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_MAX_ROUNDS
     fires at most once per direction over the whole run (the round its
     endpoint drops), so total message volume is O(E) regardless of
     cascade depth, the same discipline as the BFS frontier and the WCC
-    delta messaging. State is the node-domain (node, deg) frame,
-    checkpointed per round at the derived width; the peel set is the
-    frontier. Simultaneous-peel semantics (all deg<k nodes drop
-    together), which is what makes the result order-independent and the
-    unrolled oracle exact.
+    delta messaging. State is the node-domain (node, deg) frame on
+    ``_frontier_loop``; the peel set is the frontier. Simultaneous-peel
+    semantics (all deg<k nodes drop together), which is what makes the
+    result order-independent and the unrolled oracle exact.
 
     Returns (node, core_degree) for surviving nodes; core_degree is the
     node's degree WITHIN the core (original degree minus every fired
-    decrement). Raises if the cascade outlives ``max_rounds``.
+    decrement). Raises if the cascade needs more than ``max_rounds``
+    peel rounds.
     """
-    from ..session import loop_width_conf, state_width
 
-    und = _undirected_persisted(edges)
-    width = state_width(edges)
-    try:
-        # the initial degree count materializes the corpus-scale edge
-        # build at the ambient width; only the peel rounds run narrow
-        deg = (
+    def degrees(und: DataFrame) -> DataFrame:
+        return (
             und.groupBy(F.col("src").alias("node"))
             .agg(F.count(F.lit(1)).cast("int").alias("deg"))
-            .coalesce(width)
-            .localCheckpoint()
+            .withColumn("live", F.col("deg") < k)
         )
-        dropped = deg.filter(F.col("deg") < k).select("node")
-        with loop_width_conf(edges.sparkSession, width):
-            for _ in range(max_rounds + 1):
-                if dropped.count() == 0:
-                    break
-                alive = deg.filter(F.col("deg") >= k)
-                dec = (
-                    und.join(dropped.toDF("d_node"), und.src == F.col("d_node"))
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(F.count(F.lit(1)).cast("int").alias("dec"))
-                )
-                deg = (
-                    alive.join(dec, "node", "left")
-                    .select(
-                        "node",
-                        (F.col("deg") - F.coalesce("dec", F.lit(0))).alias("deg"),
-                    )
-                    .coalesce(width)
-                    .localCheckpoint()
-                )
-                dropped = deg.filter(F.col("deg") < k).select("node")
-            else:
-                raise RuntimeError(
-                    f"k-core cascade still shedding nodes after {max_rounds} "
-                    "rounds — outside the oracle's unroll bound"
-                )
-    finally:
-        und.unpersist()
+
+    def peel(und: DataFrame, deg: DataFrame, _r: int) -> DataFrame:
+        dec = (
+            und.join(
+                deg.filter("live").select(F.col("node").alias("d_node")),
+                und.src == F.col("d_node"),
+            )
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.count(F.lit(1)).cast("int").alias("dec"))
+        )
+        return (
+            deg.filter(~F.col("live"))
+            .join(dec, "node", "left")
+            .select("node", (F.col("deg") - F.coalesce("dec", F.lit(0))).alias("deg"))
+            .withColumn("live", F.col("deg") < k)
+        )
+
+    deg = _frontier_loop(
+        edges,
+        degrees,
+        peel,
+        max_rounds,
+        f"k-core cascade still shedding nodes after {max_rounds} "
+        "rounds — outside the oracle's unroll bound",
+    )
     return deg.select("node", F.col("deg").alias("core_degree"))
 
 

@@ -508,11 +508,12 @@ def _pq_shortlist(n: int) -> int:
     return int(TOP_K * PQ_SHORTLIST_MULT * max(1.0, math.sqrt(n / PQ_N_REF)))
 
 
-def _pq_sq_l2() -> F.Column:
-    """Squared L2 between ``subvec`` (float) and ``cvec`` (double)."""
+def _sq_l2(vec: str) -> F.Column:
+    """Squared L2 between the float array ``vec`` and the double array
+    ``cvec``."""
     return F.aggregate(
         F.zip_with(
-            F.col("subvec"),
+            F.col(vec),
             F.col("cvec"),
             lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
         ),
@@ -521,16 +522,17 @@ def _pq_sq_l2() -> F.Column:
     )
 
 
-def _pq_mean_centroids(assigned: DataFrame) -> DataFrame:
-    """(sub, code, subvec) rows -> per-(sub, code) element-wise mean, as a
-    double array rebuilt in dim order (the embedding_centroids pattern)."""
+def _mean_centroids(assigned: DataFrame, keys: list[str], vec: str) -> DataFrame:
+    """(*keys, code, vec) rows -> per-(*keys, code) element-wise mean
+    ``cvec``, as a double array rebuilt in dim order (the
+    embedding_centroids pattern)."""
     return (
-        assigned.select("sub", "code", F.posexplode("subvec").alias("dim", "v"))
-        .groupBy("sub", "code", "dim")
+        assigned.select(*keys, "code", F.posexplode(vec).alias("dim", "v"))
+        .groupBy(*keys, "code", "dim")
         .agg(F.avg(F.col("v").cast("double")).alias("mu"))
-        .groupBy("sub", "code")
+        .groupBy(*keys, "code")
         .agg(F.array_sort(F.collect_list(F.struct("dim", "mu"))).alias("_a"))
-        .select("sub", "code", F.transform("_a", lambda s: s["mu"]).alias("cvec"))
+        .select(*keys, "code", F.transform("_a", lambda s: s["mu"]).alias("cvec"))
     )
 
 
@@ -554,49 +556,56 @@ def _pq_subvectors(e: DataFrame) -> DataFrame:
     ).select("vec_id", F.col("s.sub").alias("sub"), F.col("s.subvec").alias("subvec"))
 
 
-def _pq_lloyd(sub: DataFrame, k: int) -> DataFrame:
-    """Train per-subspace PQ codebooks over ``sub`` (vec_id, sub, subvec)
-    rows: NOT M separate fits — all subspaces run Lloyd's iterations
-    TOGETHER, the subspace id being just another group key. Init is
-    deterministic random-partition (code = xxhash64(vec_id) mod K, so
-    every cell starts non-empty); each iteration is one assign
-    (broadcast-codebook join + struct-min argmin, map-side combine) and
-    one mean update (posexplode + grouped avg), i.e. two bounded
-    shuffles per iteration regardless of M — at 100 TB training reads a
-    sample, and the codebook stays M·K·subdim doubles,
-    localCheckpointed per iteration so lineage doesn't compound.
-    Returns the (sub, code, cvec) codebook frame."""
-    d2 = _pq_sq_l2()
-    codebook = _pq_mean_centroids(
-        sub.withColumn("code", F.pmod(F.xxhash64("vec_id"), F.lit(k)).cast("int"))
-    ).localCheckpoint(eager=True)
-    for _ in range(PQ_ITERS):
-        assigned = (
-            sub.join(F.broadcast(codebook), "sub")
-            .withColumn("_d2", d2)
-            .groupBy("vec_id", "sub")
-            .agg(
-                F.min(F.struct(F.col("_d2").alias("d"), F.col("code").alias("c"))).alias(
-                    "m"
-                ),
-                F.first("subvec").alias("subvec"),
-            )
-            .select("sub", F.col("m.c").alias("code"), "subvec")
+def _lloyd_assign(
+    rows: DataFrame, codebook: DataFrame, keys: list[str], vec: str
+) -> DataFrame:
+    """(vec_id, *keys, code, vec): every (vec_id, *keys) row's nearest
+    codebook ``code`` (broadcast-codebook join on ``keys`` — a cross join
+    when there are none — and a struct-min argmin with map-side
+    combine), the vector carried along for the next mean update."""
+    return (
+        rows.join(F.broadcast(codebook), keys or None)
+        .withColumn("_d2", _sq_l2(vec))
+        .groupBy("vec_id", *keys)
+        .agg(
+            F.min(F.struct(F.col("_d2").alias("d"), F.col("code").alias("c"))).alias("m"),
+            F.first(vec).alias(vec),
         )
-        codebook = _pq_mean_centroids(assigned).localCheckpoint(eager=True)
+        .select("vec_id", *keys, F.col("m.c").alias("code"), vec)
+    )
+
+
+def _lloyd(
+    rows: DataFrame, k: int, iters: int, keys: list[str], vec: str
+) -> DataFrame:
+    """Lloyd's k-means over ``rows`` (vec_id, *keys, vec), one k-centroid
+    codebook per ``keys`` group — the PQ codebooks (``keys=["sub"]``: all
+    subspaces train TOGETHER, the subspace id being just another group
+    key) and SemDeDup's clusters (no key). Init is deterministic
+    random-partition (code = xxhash64(vec_id) mod k, so every cell starts
+    non-empty); each iteration is one ``_lloyd_assign`` and one mean
+    update (posexplode + grouped avg), i.e. two bounded shuffles per
+    iteration regardless of the group count — at 100 TB training reads a
+    sample, and the codebook stays groups·k·dim doubles,
+    localCheckpointed per iteration so lineage doesn't compound.
+    Returns the (*keys, code, cvec) codebook frame."""
+    codebook = _mean_centroids(
+        rows.withColumn("code", F.pmod(F.xxhash64("vec_id"), F.lit(k)).cast("int")),
+        keys,
+        vec,
+    ).localCheckpoint(eager=True)
+    for _ in range(iters):
+        codebook = _mean_centroids(
+            _lloyd_assign(rows, codebook, keys, vec), keys, vec
+        ).localCheckpoint(eager=True)
     return codebook
 
 
 def _pq_encode(sub: DataFrame, codebook: DataFrame) -> DataFrame:
     """Assign every (vec_id, sub) subvector its nearest codebook code —
     the corpus compressed to one byte-sized code per subspace."""
-    d2 = _pq_sq_l2()
-    return (
-        sub.join(F.broadcast(codebook), "sub")
-        .withColumn("_d2", d2)
-        .groupBy("vec_id", "sub")
-        .agg(F.min(F.struct(F.col("_d2").alias("d"), F.col("code").alias("c"))).alias("m"))
-        .select("vec_id", "sub", F.col("m.c").alias("code"))
+    return _lloyd_assign(sub, codebook, ["sub"], "subvec").select(
+        "vec_id", "sub", "code"
     )
 
 
@@ -605,19 +614,12 @@ def build_pq_index(spark: SparkSession, sf_dir: str) -> str:
 
     Build: the 64-dim embedding splits into PQ_M=16 subvectors and each
     subspace trains a _pq_k(N)-centroid codebook (32 at the reference
-    corpus, growing with sqrt(N) to the 8-bit cap) — but NOT as M separate
-    fits: all subspaces run Lloyd's iterations TOGETHER, the subspace id
-    being just another group key. Init is deterministic random-partition
-    (code = xxhash64(vec_id) mod K, so every cell starts non-empty);
-    each iteration is one assign (broadcast-codebook join + struct-min
-    argmin, map-side combine) and one mean update (posexplode + grouped
-    avg), i.e. two bounded shuffles per iteration over the whole codebook
-    regardless of M — at 100 TB training reads a sample, and the codebook
-    stays M·K·subdim doubles, localCheckpointed per iteration so lineage
-    doesn't compound. The persisted artifacts are ``codebook`` (M·K
-    rows) and ``codes`` — the corpus compressed 16× (one byte-sized code
-    per subspace vs 4-byte floats), which is the whole point of PQ: the
-    compressed table is what serves. Built once through
+    corpus, growing with sqrt(N) to the 8-bit cap), all M trained
+    together by ``_lloyd`` with the subspace id as the group key. The
+    persisted artifacts are ``codebook`` (M·K rows) and ``codes`` — the
+    corpus compressed 16× (one byte-sized code per subspace vs 4-byte
+    floats), which is the whole point of PQ: the compressed table is
+    what serves. Built once through
     ``cache.build_once`` like build_ivf_index; ``_BUILT`` records the
     corpus size ``n`` that sizes the probe's shortlist.
     """
@@ -630,7 +632,7 @@ def build_pq_index(spark: SparkSession, sf_dir: str) -> str:
         k = _pq_k(n_corpus)
         sub = _pq_subvectors(emb).cache()
 
-        codebook = _pq_lloyd(sub, k)
+        codebook = _lloyd(sub, k, PQ_ITERS, ["sub"], "subvec")
         codes = _pq_encode(sub, codebook)
         codes.write.mode("overwrite").parquet(os.path.join(out, "codes"))
         codebook.write.mode("overwrite").parquet(os.path.join(out, "codebook"))
@@ -679,7 +681,7 @@ def q_embedding_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(os.path.join(root, "_BUILT")) as fh:
         n_corpus = json.load(fh)["n"]
     shortlist_size = _pq_shortlist(n_corpus)
-    d2 = _pq_sq_l2()
+    d2 = _sq_l2("subvec")
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"].select("vec_id", "embedding")
@@ -743,7 +745,7 @@ def q_embedding_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the cell-partitioned code table), ranks candidates by ADC over codes
 # alone (no float vectors touched), and exact-reranks a sqrt(N)-scaled
 # shortlist. This composes the two persisted indexes above (build_ivf
-# _index cells + _pq_lloyd codebooks) into ONE artifact.
+# _index cells + _lloyd codebooks) into ONE artifact.
 
 IVFPQ_RECALL_FLOOR = IVF_NPROBE / IVF_K  # probe beats chance cell coverage
 
@@ -754,7 +756,7 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     Build: (1) the IVF coarse quantizer (build_ivf_index — reused, not
     retrained) assigns every vector a cell; (2) each vector's RESIDUAL
     against its cell centroid is split into PQ_M subspaces and
-    _pq_lloyd trains the shared residual codebooks; (3) the persisted
+    _lloyd trains the shared residual codebooks; (3) the persisted
     artifacts are ``codes`` — (vec_id, sub, code) WRITTEN PARTITIONED
     BY cell, so a probe's equi-join against the broadcast probe set
     prunes to nprobe cells via dynamic partition pruning before any
@@ -784,7 +786,7 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
         k = _pq_k(n_corpus)
         sub = _pq_subvectors(residual).cache()
 
-        codebook = _pq_lloyd(sub, k)
+        codebook = _lloyd(sub, k, PQ_ITERS, ["sub"], "subvec")
         codes = _pq_encode(sub, codebook).join(
             residual.select("vec_id", "cell"), "vec_id"
         )
@@ -893,7 +895,7 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qtab = (
         qsub.join(F.broadcast(codebook), "sub")
-        .withColumn("_d2", _pq_sq_l2())
+        .withColumn("_d2", _sq_l2("subvec"))
         .select("query_id", "cell", "sub", "code", "_d2")
     )
     adc = (

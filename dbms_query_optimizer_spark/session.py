@@ -15,7 +15,6 @@ One place to encode the execution-model decisions that matter at scale:
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -138,28 +137,3 @@ def state_width(df: "DataFrame") -> int:
         # "auto" or unset — fall back to the cluster's task parallelism
         sp = spark.sparkContext.defaultParallelism
     return max(sp // 4, 8)
-
-
-@contextmanager
-def loop_width_conf(spark: "SparkSession", width: int):
-    """Scope ``spark.sql.shuffle.partitions`` to ``width`` for the body
-    of an iterative node-domain loop (WCC labels, BFS frontiers, k-core
-    degrees): every per-round join/groupBy inside the scope then plans
-    ``width``-task exchanges instead of full-width ones, so a round's
-    half-dozen stages launch ~width tasks each rather than
-    shuffle.partitions each — per-round task-launch overhead was the
-    measured majority of the WCC loop at local[32] (r11). Scale-safe by
-    construction: ``width`` comes from :func:`state_width`, which tracks
-    the configured parallelism — only the loop's node-domain state frames
-    are affected, and callers must materialize corpus-scale inputs
-    (edge builds, signature plans) BEFORE entering the scope so those
-    shuffles keep the ambient width. Restores the prior setting on exit;
-    the loop's outputs are localCheckpointed inside, so the narrowed conf
-    never leaks into downstream plans."""
-    key = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(key)
-    spark.conf.set(key, str(width))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, orig)

@@ -1,13 +1,19 @@
-"""Unit semantics for the generic WCC helper (graph.py) on crafted
-graphs — structure the fixture-derived catalog query can't guarantee it
-exercises: multi-hop chains (label must PROPAGATE, not just copy), rings,
-direction-independence, and nodes absent from the edge list."""
+"""Unit semantics for the generic graph loops (graph.py: WCC, BFS,
+k-core) on crafted graphs — structure the fixture-derived catalog
+queries can't guarantee they exercise: multi-hop chains (label must
+PROPAGATE, not just copy), rings, direction-independence, nodes absent
+from the edge list, and graphs that need exactly each loop's round
+bound (the bound the DuckDB oracles rely on: BFS_MAX_HOPS is the
+oracle's CTE depth, KCORE_MAX_ROUNDS its unroll depth)."""
 
 from __future__ import annotations
 
 import pytest
 
+from dbms_query_optimizer_spark.operators import graph
 from dbms_query_optimizer_spark.operators.graph import (
+    bfs_hops,
+    kcore,
     weakly_connected_components,
 )
 
@@ -47,8 +53,52 @@ def test_ring_converges(spark):
     assert set(comp.values()) == {1} and len(comp) == 4
 
 
+def _path(spark, n: int):
+    return spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
+
+
+def test_wcc_converges_at_exactly_max_iters(spark):
+    # path 0..7. Round 1 labels every node with its min neighbor (offset
+    # 1); each later round's message + pointer jump takes offset d to
+    # 2d + 1, so after rounds 1, 2, 3 the offsets are 1, 3, 7 and node 7
+    # reaches 0 in round 3. Round 4 improves nothing: 4 rounds exactly.
+    comp = {
+        r["node"]: r["component"]
+        for r in weakly_connected_components(_path(spark, 8), max_iters=4).collect()
+    }
+    assert comp == {i: 0 for i in range(8)}
+    with pytest.raises(RuntimeError, match="did not converge in 3 iterations"):
+        weakly_connected_components(_path(spark, 8), max_iters=3)
+
+
+def test_bfs_allows_hops_up_to_the_bound(spark, monkeypatch):
+    # bfs_hops reads BFS_MAX_HOPS at call time: a node at exactly the
+    # bound is representable by the oracle's CTE, one hop more is not
+    monkeypatch.setattr(graph, "BFS_MAX_HOPS", 3)
+    got = {r["node"]: r["hops"] for r in bfs_hops(_path(spark, 4), 0).collect()}
+    assert got == {0: 0, 1: 1, 2: 2, 3: 3}
+    with pytest.raises(RuntimeError, match="beyond 3 hops"):
+        bfs_hops(_path(spark, 5), 0)
+
+
+def test_bfs_source_without_edges_is_alone_at_hop_zero(spark):
+    got = {r["node"]: r["hops"] for r in bfs_hops(_path(spark, 3), 99).collect()}
+    assert got == {99: 0}
+
+
+def test_kcore_converges_at_exactly_max_rounds(spark):
+    # triangle 1-2-3 with the tail 3-4-5-6: under k=2 the tail peels one
+    # node a round from its end (6, then 5, then 4), so the cascade
+    # needs exactly 3 peel rounds
+    edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6)]
+    assert _core(spark, edges, k=2, max_rounds=3) == {1: 2, 2: 2, 3: 2}
+    with pytest.raises(RuntimeError, match="shedding nodes after 2 rounds"):
+        _core(spark, edges, k=2, max_rounds=2)
+
+
 def test_max_iters_raises_on_long_chain(spark):
-    # a 10-node path needs ~9 rounds; max_iters=2 must fail loudly
+    # a 10-node path needs 5 rounds (offsets 1, 3, 7, 15, then the
+    # confirming round; see the exact-bound test); max_iters=2 must fail loudly
     # rather than return a half-propagated labeling
     df = spark.createDataFrame(
         [(i + 1, i) for i in range(1, 10)], "src long, dst long"
@@ -58,8 +108,6 @@ def test_max_iters_raises_on_long_chain(spark):
 
 
 def _core(spark, edges, k=2, max_rounds=8):
-    from dbms_query_optimizer_spark.operators.graph import kcore
-
     df = spark.createDataFrame(edges, "src long, dst long")
     return {
         r["node"]: r["core_degree"]
@@ -90,8 +138,6 @@ def test_kcore_raises_past_round_bound(spark):
     # a 12-node path cascades ~6 rounds under k=2; max_rounds=2 must
     # fail loudly rather than return a half-peeled "core"
     edges = [(i, i + 1) for i in range(1, 12)]
-    from dbms_query_optimizer_spark.operators.graph import kcore
-
     df = spark.createDataFrame(edges, "src long, dst long")
     with pytest.raises(RuntimeError, match="shedding"):
         kcore(df, k=2, max_rounds=2).collect()

@@ -1,17 +1,21 @@
 """Lineage-bounding contract for iterative operators: raising the
 iteration count must NOT grow the logical plan. The shared
-graph.weakly_connected_components loop (behind graph_wcc,
-dedup_components and entity_resolution) truncates with localCheckpoint
-every round; graph_pagerank (r11) runs
-its power iteration driver-local over the collected |types|^2 transition
-matrix, so its plan is a constant-size createDataFrame regardless of
-iteration count — the same contract, satisfied structurally."""
+graph._frontier_loop (behind weakly_connected_components, bfs_hops and
+kcore) truncates with localCheckpoint every round; graph_pagerank (r11)
+runs its power iteration driver-local over the collected |types|^2
+transition matrix, so its plan is a constant-size createDataFrame
+regardless of iteration count — the same contract, satisfied
+structurally."""
 
 from __future__ import annotations
+
+import pytest
 
 from dbms_query_optimizer_spark.operators.graph import (
     PR_ITERATIONS,
     _pagerank,
+    bfs_hops,
+    kcore,
     q_graph_pagerank,
     weakly_connected_components,
 )
@@ -39,14 +43,22 @@ def test_pagerank_checkpoint_preserves_values(spark, sf_dir):
     assert abs(sum(a.values()) - 1.0) < 1e-3  # ranks form a distribution
 
 
-def test_wcc_plan_depth_bounded(spark):
+@pytest.mark.parametrize(
+    "op",
+    [
+        weakly_connected_components,
+        lambda edges: bfs_hops(edges, 0),
+        # a path has no 2-core: it peels from both ends, n / 2 rounds
+        lambda edges: kcore(edges, k=2, max_rounds=20),
+    ],
+    ids=["wcc", "bfs_hops", "kcore"],
+)
+def test_graph_loop_plan_depth_bounded(spark, op):
     # a 20-node path takes more rounds than a 4-node one; the returned
-    # labels must not carry those rounds in their plan
+    # frame must not carry those rounds in its plan
     def path(n):
         edges = [(i, i + 1) for i in range(n - 1)]
-        return weakly_connected_components(
-            spark.createDataFrame(edges, "src long, dst long")
-        )
+        return op(spark.createDataFrame(edges, "src long, dst long"))
 
     short = _plan_size(path(4))
     long = _plan_size(path(20))
