@@ -17,7 +17,6 @@ by the join-cardinality estimator.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -50,7 +49,7 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     - bigint named ``ts``  -> nanos long, integer-DIV to micros (float
       division would lose bits above 2^53), then ``timestamp_micros``;
     - TIMESTAMP_NTZ        -> cast to TIMESTAMP. The session timezone is
-      pinned to UTC (load_dir), so the cast is identity on the stored
+      pinned to UTC (load_tables), so the cast is identity on the stored
       micros and epoch math matches DuckDB's naive-timestamp epoch.
 
     Caveat: PySpark renders collected TIMESTAMP (LTZ) values through the
@@ -70,76 +69,6 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
-@dataclass
-class TableEntry:
-    name: str
-    df: DataFrame
-    path: str
-    primary_key: str | None = None
-
-
-@dataclass
-class Engine:
-    """Session + named-table registry."""
-
-    spark: SparkSession
-    tables: dict[str, TableEntry] = field(default_factory=dict)
-
-    def load_dir(self, sf_dir: str, register_views: bool = True) -> "Engine":
-        """Load every known table from ``{sf_dir}/{name}.parquet``.
-
-        Parquet scans are lazy; registering a view costs nothing until an
-        action runs, and Catalyst pushes filters/projections into the scan.
-
-        SESSION-WIDE SIDE EFFECT: sets ``spark.sql.session.timeZone=UTC``
-        and ``spark.sql.legacy.parquet.nanosAsLong=true`` on the caller's
-        session (required for the NTZ->LTZ timestamp normalization to be
-        an identity on stored values). Any timezone-sensitive query the
-        caller runs on the same session afterwards sees UTC; a warning is
-        logged if a different pre-existing timeZone is being overridden.
-        """
-        # Runtime confs set here defensively rather than in the session
-        # factory — queries must work from a caller-built session (e.g. the
-        # grading driver's) too. nanosAsLong guards against TIMESTAMP(NANOS)
-        # testdata (harmless for micros); UTC makes the NTZ->LTZ timestamp
-        # normalization an exact identity on the stored values.
-        self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        prev_tz = self.spark.conf.get("spark.sql.session.timeZone", None)
-        if prev_tz not in (None, "UTC"):
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "load_dir overriding spark.sql.session.timeZone=%s with UTC "
-                "(required for exact timestamp normalization)",
-                prev_tz,
-            )
-        self.spark.conf.set("spark.sql.session.timeZone", "UTC")
-        for name, pk in TABLES.items():
-            path = f"{sf_dir}/{name}.parquet"
-            df = self.spark.read.parquet(path)
-            df = _normalize_timestamps(df)
-            self.tables[name] = TableEntry(name=name, df=df, path=path, primary_key=pk)
-            if register_views:
-                df.createOrReplaceTempView(name)
-        return self
-
-    def df(self, name: str) -> DataFrame:
-        return self.tables[name].df
-
-    def sql(self, query: str) -> DataFrame:
-        """Run SQL against the registered table views.
-
-        The reference has no SQL entry point at all (queries arrive
-        pre-parsed as LogicalJoinNode vectors, SURVEY §3.2); here the full
-        ANSI surface — including WITH RECURSIVE — comes free from Spark
-        SQL over the views ``load_dir`` registers.
-        """
-        return self.spark.sql(query)
-
-    def primary_key(self, name: str) -> str | None:
-        return self.tables[name].primary_key
-
-
 # sf_dir -> (session, name -> DataFrame). DataFrames are immutable logical
 # plans, so reusing them across query callables is safe; what the cache
 # saves is the per-call file listing + parquet footer schema inference for
@@ -151,13 +80,41 @@ _TABLE_CACHE: dict[str, tuple[SparkSession, dict[str, DataFrame]]] = {}
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Lightweight loader for query callables: name -> DataFrame, views registered."""
+    """Every known table from ``{sf_dir}/{name}.parquet``: name ->
+    DataFrame, each registered as a temp view of that name for SQL.
+
+    Parquet scans are lazy; registering a view costs nothing until an
+    action runs, and Catalyst pushes filters/projections into the scan.
+
+    SESSION-WIDE SIDE EFFECT: sets ``spark.sql.session.timeZone=UTC``
+    and ``spark.sql.legacy.parquet.nanosAsLong=true`` on the caller's
+    session (required for the NTZ->LTZ timestamp normalization to be
+    an identity on stored values). Any timezone-sensitive query the
+    caller runs on the same session afterwards sees UTC; a warning is
+    logged if a different pre-existing timeZone is being overridden.
+    """
     key = os.path.abspath(sf_dir)
     hit = _TABLE_CACHE.get(key)
     if hit is not None and hit[0] is spark:
         return dict(hit[1])
-    eng = Engine(spark).load_dir(sf_dir)
-    tables = {name: e.df for name, e in eng.tables.items()}
+    # set here rather than in the session factory, so queries work from a
+    # caller-built session too
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    prev_tz = spark.conf.get("spark.sql.session.timeZone", None)
+    if prev_tz not in (None, "UTC"):
+        import logging
+
+        logging.getLogger(__name__).warning(
+            "load_tables overriding spark.sql.session.timeZone=%s with UTC "
+            "(required for exact timestamp normalization)",
+            prev_tz,
+        )
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    tables = {}
+    for name in TABLES:
+        df = _normalize_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+        df.createOrReplaceTempView(name)
+        tables[name] = df
     _TABLE_CACHE[key] = (spark, tables)
     return dict(tables)
 

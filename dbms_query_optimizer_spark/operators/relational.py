@@ -75,19 +75,13 @@ def q_cbo_ordered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_emitter.py.
     """
     from ..engine import TABLES
+    from ..plans.cbo_compare import EXAMPLE_JOINS
     from ..plans.pipeline import FilterSpec, plan_and_emit
-    from ..plans.planner import LogicalJoinNode
     from ..plans.stats import PredicateType as P
 
-    t = load_tables(spark, sf_dir)
-    joins = [
-        LogicalJoinNode("customer", "orders", "c_custkey", "o_custkey", P.EQ),
-        LogicalJoinNode("orders", "lineitem", "o_orderkey", "l_orderkey", P.EQ),
-        LogicalJoinNode("customer", "nation", "c_nationkey", "n_nationkey", P.EQ),
-    ]
     planned = plan_and_emit(
-        t,
-        joins,
+        load_tables(spark, sf_dir),
+        EXAMPLE_JOINS,
         filters=[FilterSpec("orders", "o_totalprice", P.LT, 150000)],
         pk_columns=TABLES,
     )
@@ -1605,20 +1599,15 @@ def q_cbo_vs_dp_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..engine import TABLES
     from ..plans.cbo_compare import (
+        EXAMPLE_JOINS as joins,
         catalyst_join_order,
         reference_cost_of_order,
         table_order_of_plan,
     )
-    from ..plans.planner import JoinOptimizer, LogicalJoinNode
-    from ..plans.stats import PredicateType as P
+    from ..plans.planner import JoinOptimizer
     from ..plans.stats import TableStats
 
-    joins = [
-        LogicalJoinNode("customer", "orders", "c_custkey", "o_custkey", P.EQ),
-        LogicalJoinNode("orders", "lineitem", "o_orderkey", "l_orderkey", P.EQ),
-        LogicalJoinNode("customer", "nation", "c_nationkey", "n_nationkey", P.EQ),
-    ]
-    involved = ["customer", "orders", "lineitem", "nation"]
+    involved = table_order_of_plan(joins)
     t = load_tables(spark, sf_dir)
     stats = {n: TableStats.from_dataframe(t[n], columns=[]) for n in involved}
     sels = {n: 1.0 for n in involved}
@@ -1686,17 +1675,11 @@ def q_cbo_plan_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     from itertools import combinations
 
     from ..engine import TABLES
-    from ..plans.cbo_compare import table_order_of_plan
-    from ..plans.planner import JoinOptimizer, LogicalJoinNode
-    from ..plans.stats import PredicateType as P
+    from ..plans.cbo_compare import EXAMPLE_JOINS as joins, table_order_of_plan
+    from ..plans.planner import JoinOptimizer
     from ..plans.stats import TableStats
 
-    joins = [
-        LogicalJoinNode("customer", "orders", "c_custkey", "o_custkey", P.EQ),
-        LogicalJoinNode("orders", "lineitem", "o_orderkey", "l_orderkey", P.EQ),
-        LogicalJoinNode("customer", "nation", "c_nationkey", "n_nationkey", P.EQ),
-    ]
-    involved = ["customer", "orders", "lineitem", "nation"]
+    involved = table_order_of_plan(joins)
     t = load_tables(spark, sf_dir)
     stats = {n: TableStats.from_dataframe(t[n], columns=[]) for n in involved}
     sels = {n: 1.0 for n in involved}

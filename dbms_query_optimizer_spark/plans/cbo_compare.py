@@ -24,6 +24,15 @@ from pyspark.sql import SparkSession
 from .planner import JoinOptimizer, LogicalJoinNode
 from .stats import TableStats
 
+# The paper's example join graph, customer-orders-lineitem-nation, as the
+# CBO entries (cbo_ordered_join, cbo_vs_dp_report, cbo_plan_memo) and
+# tests/test_cbo_compare.py plan it.
+EXAMPLE_JOINS = (
+    LogicalJoinNode("customer", "orders", "c_custkey", "o_custkey"),
+    LogicalJoinNode("orders", "lineitem", "o_orderkey", "l_orderkey"),
+    LogicalJoinNode("customer", "nation", "c_nationkey", "n_nationkey"),
+)
+
 _CBO_CONFS = {
     "spark.sql.cbo.enabled": "true",
     "spark.sql.cbo.joinReorder.enabled": "true",
@@ -111,15 +120,7 @@ def reference_cost_of_order(
     Returns ``inf`` if the order needs a cross product.
     """
     opt = JoinOptimizer(joins, pk_columns)
-    sels = filter_selectivities
-
-    def scan(t: str) -> tuple[float, int]:
-        return (
-            stats[t].estimate_scan_cost(),
-            stats[t].estimate_table_cardinality(sels.get(t, 1.0)),
-        )
-
-    acc_cost, acc_card = scan(order[0])
+    acc = None
     used: list[LogicalJoinNode] = []
     joined = {order[0]}
     for t in order[1:]:
@@ -137,17 +138,7 @@ def reference_cost_of_order(
             return float("inf")
         # orient the edge so the accumulated side is t1 (outer)
         j = edge if edge.right_table == t else edge.swap_inner_outer()
-        t2_cost, t2_card = scan(t)
-        left_pkey = (
-            opt._has_pkey(used, pk_columns)
-            if used
-            else opt._is_pk(j.left_table, j.left_field)
-        )
-        right_pkey = opt._is_pk(j.right_table, j.right_field)
-        acc_cost = opt.estimate_join_cost(acc_card, t2_card, acc_cost, t2_cost)
-        acc_card = opt.estimate_join_cardinality(
-            j.op, acc_card, t2_card, left_pkey, right_pkey
-        )
+        acc = opt._join_step(acc, j, stats, filter_selectivities)
         used.append(edge)
         joined.add(t)
-    return acc_cost
+    return acc[0] if acc else stats[order[0]].estimate_scan_cost()

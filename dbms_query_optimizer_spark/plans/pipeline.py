@@ -57,15 +57,11 @@ class PlannedQuery:
 _STATS_CACHE: dict[tuple, TableStats] = {}
 
 
-def _cached_stats(
-    df: DataFrame, io_cost_per_page: int, columns: list[str]
-) -> TableStats:
-    key = (df.sparkSession, df.semanticHash(), io_cost_per_page, tuple(sorted(columns)))
+def _cached_stats(df: DataFrame, columns: list[str]) -> TableStats:
+    key = (df.sparkSession, df.semanticHash(), tuple(sorted(columns)))
     hit = _STATS_CACHE.get(key)
     if hit is None:
-        hit = _STATS_CACHE[key] = TableStats.from_dataframe(
-            df, io_cost_per_page=io_cost_per_page, columns=columns
-        )
+        hit = _STATS_CACHE[key] = TableStats.from_dataframe(df, columns=columns)
     return hit
 
 
@@ -75,7 +71,6 @@ def plan_and_emit(
     filters: list[FilterSpec] | None = None,
     pk_columns: dict[str, str | None] | None = None,
     stats: dict[str, TableStats] | None = None,
-    io_cost_per_page: int = 100,
 ) -> PlannedQuery:
     """Optimize a join graph and return the executable DataFrame + the plan.
 
@@ -95,9 +90,7 @@ def plan_and_emit(
         for spec in filters:
             filtered_cols.setdefault(spec.table, []).append(spec.column)
         stats = {
-            name: _cached_stats(
-                tables[name], io_cost_per_page, filtered_cols[name]
-            )
+            name: _cached_stats(tables[name], filtered_cols[name])
             for name in involved
         }
 

@@ -14,6 +14,12 @@ tables:
   cost, and best-so-far pruning (join_optimizer.cc:108-137, 195-292).
   Left-deep by construction.
 
+The DP's inner loop inlines the two models, as it is the hot path.
+Everything else folds ``JoinOptimizer._join_step``, which joins one table
+onto an accumulated outer side (cost, card, running PK flag): the greedy
+orderer ``order_joins_greedy`` and the fixed-order coster
+``cbo_compare.reference_cost_of_order``.
+
 Deviations from the reference (deliberate, recorded in SURVEY.md):
 - PK-ness is explicit per-table metadata (``pk_columns``) instead of the
   ordinal convention "field index 0 is the PK" (join_optimizer.cc:220,224).
@@ -161,16 +167,34 @@ class JoinOptimizer:
     def _is_pk(self, table: str, column: str) -> bool:
         return self.pk_columns.get(table) == column
 
-    @staticmethod
-    def _has_pkey(plan: list[LogicalJoinNode], pk_columns: dict[str, str | None]) -> bool:
-        """Did any join in the subplan involve a primary key column?
-        (reference has_Pkey, join_optimizer.cc:311-317)."""
-        for j in plan:
-            if pk_columns.get(j.left_table) == j.left_field:
-                return True
-            if pk_columns.get(j.right_table) == j.right_field:
-                return True
-        return False
+    def _join_step(
+        self,
+        outer: tuple[float, int, bool] | None,
+        j: LogicalJoinNode,
+        stats: dict[str, TableStats],
+        sels: dict[str, float],
+    ) -> tuple[float, int, bool]:
+        """Join ``j``'s right table onto the outer operand
+        ``(cost, card, pk)``, accumulated side as the outer; ``None`` is
+        ``j``'s left base table. ``pk`` says some join so far touched a PK
+        column (reference has_Pkey, join_optimizer.cc:311-317); for a base
+        table it is whether ``j``'s left column is its PK."""
+        if outer is None:
+            t = stats[j.left_table]
+            outer = (
+                t.estimate_scan_cost(),
+                t.estimate_table_cardinality(sels.get(j.left_table, 1.0)),
+                self._is_pk(j.left_table, j.left_field),
+            )
+        cost, card, pk = outer
+        t2 = stats[j.right_table]
+        t2_card = t2.estimate_table_cardinality(sels.get(j.right_table, 1.0))
+        right_pk = self._is_pk(j.right_table, j.right_field)
+        return (
+            self.estimate_join_cost(card, t2_card, cost, t2.estimate_scan_cost()),
+            self.estimate_join_cardinality(j.op, card, t2_card, pk, right_pk),
+            pk or right_pk or self._is_pk(j.left_table, j.left_field),
+        )
 
     # -- search -------------------------------------------------------------
 
@@ -208,8 +232,9 @@ class JoinOptimizer:
         right = [side(j.right_table, j.right_field) for j in joins]
         ops = [j.op for j in joins]
         touched = [left[i][0] | right[i][0] for i in range(n)]
-        # joins touching a PK column: _has_pkey of a subplan depends only
-        # on which joins it holds, so it is ``pk_mask & subset``
+        # joins touching a PK column: whether a subplan touched one (the
+        # reference's has_Pkey) depends only on which joins it holds, so it
+        # is ``pk_mask & subset``
         pk_mask = sum(1 << i for i in range(n) if left[i][3] or right[i][3])
         join_cost = self.estimate_join_cost
         join_card = self.estimate_join_cardinality
@@ -290,71 +315,47 @@ class JoinOptimizer:
         (Fegaras 1998-style GOO restricted to left-deep prefixes): seed
         with the cheapest single join under the reference cost model, then
         repeatedly attach the connected join with the lowest incremental
-        NLJ cost, accumulated side as the outer operand. Same cost /
-        cardinality / PK model as the DP, same cross-product avoidance;
-        no optimality guarantee (tests assert DP <= greedy on small graphs).
+        NLJ cost. Every step, the seed included, is ``_join_step``: the
+        accumulated side is the outer operand and carries a running PK
+        flag, so each of the O(n) rounds costs each candidate in O(1).
+        Same cost / cardinality / PK model as the DP, same cross-product
+        avoidance; no optimality guarantee (tests assert DP <= greedy on
+        small graphs).
         """
-        sels = filter_selectivities
-
-        def scan(t: str) -> tuple[float, int]:
-            return (
-                stats[t].estimate_scan_cost(),
-                stats[t].estimate_table_cardinality(sels.get(t, 1.0)),
-            )
-
         if not self.joins:
             return []
 
-        seed: tuple[float, int, LogicalJoinNode, LogicalJoinNode] | None = None
-        for orig in self.joins:
-            for cand in (orig, orig.swap_inner_outer()):
-                c1, k1 = scan(cand.left_table)
-                c2, k2 = scan(cand.right_table)
-                cost = self.estimate_join_cost(k1, k2, c1, c2)
-                if seed is None or cost < seed[0]:
-                    card = self.estimate_join_cardinality(
-                        cand.op,
-                        k1,
-                        k2,
-                        self._is_pk(cand.left_table, cand.left_field),
-                        self._is_pk(cand.right_table, cand.right_field),
-                    )
-                    seed = (cost, card, cand, orig)
-        acc_cost, acc_card, first, first_orig = seed
-        plan = [first]
-        used = {first_orig}
-        joined = {first.left_table, first.right_table}
-
+        acc: tuple[float, int, bool] | None = None
+        plan: list[LogicalJoinNode] = []
+        used: set[LogicalJoinNode] = set()
+        joined: set[str] = set()
         while len(plan) < len(self.joins):
-            best: tuple[float, int, LogicalJoinNode, LogicalJoinNode] | None = None
+            best = None
             for orig in self.joins:
                 if orig in used:
                     continue
-                # orient so the accumulated plan is the outer (t1) operand;
-                # a both-sides-joined (cycle) edge keeps its left orientation,
-                # mirroring the DP's left-branch preference.
-                if orig.left_table in joined:
-                    j = orig
+                # the seed tries both orientations of every join; later
+                # joins are oriented so the accumulated plan is the outer
+                # (t1) operand, and a both-sides-joined (cycle) edge keeps
+                # its left orientation, mirroring the DP's left-branch
+                # preference.
+                if acc is None:
+                    cands = (orig, orig.swap_inner_outer())
+                elif orig.left_table in joined:
+                    cands = (orig,)
                 elif orig.right_table in joined:
-                    j = orig.swap_inner_outer()
+                    cands = (orig.swap_inner_outer(),)
                 else:
                     continue  # not connected yet -> would be a cross product
-                t2_cost, t2_card = scan(j.right_table)
-                cost = self.estimate_join_cost(acc_card, t2_card, acc_cost, t2_cost)
-                if best is None or cost < best[0]:
-                    card = self.estimate_join_cardinality(
-                        j.op,
-                        acc_card,
-                        t2_card,
-                        self._has_pkey(plan, self.pk_columns),
-                        self._is_pk(j.right_table, j.right_field),
-                    )
-                    best = (cost, card, j, orig)
+                for j in cands:
+                    step = self._join_step(acc, j, stats, filter_selectivities)
+                    if best is None or step[0] < best[0][0]:
+                        best = (step, j, orig)
             if best is None:
                 break  # disconnected join graph: no cross products, stop
-            acc_cost, acc_card, nxt, orig = best
-            plan.append(nxt)
+            acc, j, orig = best
+            plan.append(j)
             used.add(orig)
-            joined.update((nxt.left_table, nxt.right_table))
-        self.last_plan_cost = acc_cost
+            joined.update((j.left_table, j.right_table))
+        self.last_plan_cost = acc[0]
         return plan

@@ -296,11 +296,7 @@ class TableStats:
 
     @classmethod
     def from_dataframe(
-        cls,
-        df: DataFrame,
-        io_cost_per_page: int = DEFAULT_IO_COST,
-        buckets: int = NUM_HIST_BINS,
-        columns: list[str] | None = None,
+        cls, df: DataFrame, columns: list[str] | None = None
     ) -> "TableStats":
         """Build stats with two Spark jobs (the reference's two scans,
         distributed).
@@ -310,7 +306,9 @@ class TableStats:
         is computed JVM-side, exploded as (column_ordinal, bucket) pairs and
         counted in one hash aggregate. Doubles are floored to integers
         first, mirroring the reference's int-only histogram domain
-        (table_stats.cc:206 casts every field to int).
+        (table_stats.cc:206 casts every field to int). Pages cost
+        ``DEFAULT_IO_COST`` each and histograms have ``NUM_HIST_BINS``
+        buckets, the reference's constants.
         """
         from pyspark.sql import functions as F
 
@@ -334,7 +332,7 @@ class TableStats:
         input_bytes = _input_size_bytes(df)
         num_pages = max(1, math.ceil(input_bytes / PAGE_SIZE))
 
-        stats = cls(num_tuples=int(n), num_pages=num_pages, io_cost_per_page=io_cost_per_page)
+        stats = cls(num_tuples=int(n), num_pages=num_pages)
         hists: dict[str, IntHistogram] = {}
         for c in numeric:
             mn, mx = row1[f"min_{c}"], row1[f"max_{c}"]
@@ -342,7 +340,7 @@ class TableStats:
                 continue
             stats.min_values[c] = mn
             stats.max_values[c] = mx
-            hists[c] = IntHistogram(buckets, int(mn), int(mx))
+            hists[c] = IntHistogram(NUM_HIST_BINS, int(mn), int(mx))
 
         if hists and n > 0:
             cols = list(hists)

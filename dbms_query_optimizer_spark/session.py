@@ -66,7 +66,7 @@ def get_spark(
         # custom Python data sources implementing pushFilters need this on
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # testdata events.ts is TIMESTAMP(NANOS) which the vectorized reader
-        # rejects; read as long and convert at load (engine.load_dir).
+        # rejects; read as long and convert at load (engine.load_tables).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # INT96 (the legacy default) writes NO footer min/max for
         # timestamps, which blinds the manifest's time zone maps — the

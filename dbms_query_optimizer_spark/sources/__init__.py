@@ -9,7 +9,6 @@ run a schema-inference scan, and writers that control output partitioning.
 
 from .readers import TESTDATA_SCHEMAS, read_csv, read_json, read_orc, read_parquet
 from .writers import (
-    compact_small_files,
     write_csv,
     write_json,
     write_orc,
@@ -21,7 +20,6 @@ from .writers import (
 
 __all__ = [
     "TESTDATA_SCHEMAS",
-    "compact_small_files",
     "read_csv",
     "read_json",
     "read_orc",

@@ -208,37 +208,3 @@ def write_zorder_parquet(
         .option("compression", compression)
         .parquet(path)
     )
-
-
-def compact_small_files(
-    spark,
-    src_dir: str,
-    dst_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    fmt: str = "parquet",
-) -> int:
-    """Bin-pack a directory of small files into ~target-size outputs.
-
-    The operational complement of every incremental pipeline: streaming
-    micro-batches and per-partition writers leave thousands of KB-scale
-    files, and at 100 TB the scan cost becomes footer/open overhead, not
-    bytes. Output file count = ceil(total_input_bytes / target), floored
-    at 1; the rewrite is one coalesce (no shuffle — coalesce merges
-    existing partitions) and one job-atomic write. Returns the file count.
-
-    Input size comes from the filesystem listing (exact), not sampled row
-    widths; for splittable columnar inputs the compacted size tracks the
-    input size closely enough for bin-packing purposes.
-    """
-    import math
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(src_dir):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.format(fmt).load(src_dir)
-    df.coalesce(n_files).write.mode("overwrite").format(fmt).save(dst_dir)
-    return n_files

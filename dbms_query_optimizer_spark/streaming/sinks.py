@@ -10,8 +10,8 @@ without transactional commit (plain parquet/object storage); tables with
 atomic commit protocols make the same guarantee internally.
 
 At scale the per-batch directories double as ingestion bookkeeping:
-downstream compaction (sources.compact_small_files) folds them into
-target-size files asynchronously.
+a downstream compaction folds them into target-size files
+asynchronously; the manifest table's is ``TransactionalTable.compact``.
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ def run_events_stream_to_files(
     checkpoint_dir: str,
 ) -> None:
     """Drain the events table through a foreachBatch idempotent file sink."""
-    # events.ts is TIMESTAMP(NANOS); see engine.Engine.load_dir
+    # events.ts is TIMESTAMP(NANOS); see engine.load_tables
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (

@@ -235,6 +235,18 @@ ORACLE_EVENTS_SESSION_WINDOW_NATIVE = f"""
 """
 
 
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """readStream over the events parquet (file source needs a directory;
+    glob-filter the single file), nanos-ts normalized to timestamp."""
+    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    stream = (
+        spark.readStream.schema(raw_schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+    return norm_stream_ts(spark, stream)
+
+
 def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tumbling aggregation executed as a REAL streaming query.
 
@@ -244,20 +256,10 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     every window is emitted regardless of watermark, so the result equals
     the batch query and shares its DuckDB oracle.
     """
-    batch = _events(spark, sf_dir)
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    # the file-stream source requires a DIRECTORY; glob-filter the single
-    # events file out of the sf dir
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    stream = norm_stream_ts(spark, stream)
     agg = (
-        stream.withWatermark("ts", "15 minutes")
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "15 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -281,7 +283,6 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    _ = batch  # batch schema only needed for parity documentation
     return spark.table(name).orderBy("window_start", "event_type")
 
 
@@ -300,13 +301,7 @@ def q_streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle covers a genuinely streaming execution.
     """
     name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    stream = norm_stream_ts(spark, stream)
+    stream = _events_stream(spark, sf_dir)
     dim = load_tables(spark, sf_dir)["customer"].select("c_custkey", "c_mktsegment")
     agg = (
         stream.withWatermark("ts", "15 minutes")
@@ -341,19 +336,6 @@ ORACLE_STREAMING_STATIC_JOIN = """
     GROUP BY 1, 2
     ORDER BY window_start, c_mktsegment
 """
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet (file source needs a directory;
-    glob-filter the single file), nanos-ts normalized to timestamp."""
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    stream = norm_stream_ts(spark, stream)
-    return stream
 
 
 def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,7 +11,7 @@ engine constant keep their meaning) and 18000 derived vectors are added
 (vec_id 2000.., each a seeded Gaussian perturbation sigma=0.05 of a
 random original, label inherited — cluster structure persists, density
 x10). The remaining nine tables are symlinked from sf0.1: embedding-
-only queries never read them, and load_dir just needs the paths to
+only queries never read them, and load_tables just needs the paths to
 exist. Deterministic (fixed seed) so two builds byte-agree.
 
 Round 11 extends the same recipe to DOCUMENTS (the dedup family's

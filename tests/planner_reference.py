@@ -1,6 +1,8 @@
 """The frozenset Selinger DP that ``JoinOptimizer.order_joins`` replaced,
 kept as the reference the bitmask DP is checked against
-(tests/test_planner_properties.py).
+(tests/test_planner_properties.py), and the greedy orderer that rescans
+its plan for a PK join on every candidate, which ``order_joins_greedy``'s
+running PK flag replaced.
 
 Same recurrence (reference join_optimizer.cc:108-137, 195-292): every
 subset of the joins, by size, extends the memoized best plan of
@@ -44,6 +46,16 @@ def reference_order_joins(
     return best_overall.plan, best_overall.cost, memo
 
 
+def _touches_pk(plan: list[LogicalJoinNode], pk_columns: dict[str, str | None]) -> bool:
+    """Does any join of ``plan`` use a primary key column on either side?
+    (reference has_Pkey, join_optimizer.cc:311-317)."""
+    return any(
+        pk_columns.get(p.left_table) == p.left_field
+        or pk_columns.get(p.right_table) == p.right_field
+        for p in plan
+    )
+
+
 def _extend(j, join_set, best_cost_so_far, memo, pk_columns, stats, sels):
     """Cost of joining ``j`` onto the best plan for ``join_set - {j}``, or
     None on a cross product or when it cannot beat ``best_cost_so_far``."""
@@ -70,10 +82,10 @@ def _extend(j, join_set, best_cost_so_far, memo, pk_columns, stats, sels):
         prev_best = cached.plan
         if does_join(prev_best, j.left_table):
             t1_cost, t1_card = cached.cost, cached.card
-            left_pkey = JoinOptimizer._has_pkey(prev_best, pk_columns)
+            left_pkey = _touches_pk(prev_best, pk_columns)
         elif does_join(prev_best, j.right_table):
             t2_cost, t2_card = cached.cost, cached.card
-            right_pkey = JoinOptimizer._has_pkey(prev_best, pk_columns)
+            right_pkey = _touches_pk(prev_best, pk_columns)
         else:
             return None
 
@@ -87,3 +99,70 @@ def _extend(j, join_set, best_cost_so_far, memo, pk_columns, stats, sels):
         return None
     card = JoinOptimizer.estimate_join_cardinality(j.op, t1_card, t2_card, left_pkey, right_pkey)
     return CostCard(cost=cost1, card=card, plan=[*prev_best, j])
+
+
+def reference_order_joins_greedy(
+    joins: list[LogicalJoinNode],
+    pk_columns: dict[str, str | None],
+    stats: dict[str, TableStats],
+    sels: dict[str, float],
+) -> tuple[list[LogicalJoinNode], float]:
+    """Return (greedy plan, its cost): seed with the cheapest join in either
+    orientation, then attach the connected join that is cheapest with the
+    plan so far as the outer operand; the earliest join wins a tie."""
+
+    def scan(table: str) -> tuple[float, int]:
+        return (
+            stats[table].estimate_scan_cost(),
+            stats[table].estimate_table_cardinality(sels.get(table, 1.0)),
+        )
+
+    def is_pk(table: str, field: str) -> bool:
+        return pk_columns.get(table) == field
+
+    best = None
+    for orig in joins:
+        for j in (orig, orig.swap_inner_outer()):
+            (c1, k1), (c2, k2) = scan(j.left_table), scan(j.right_table)
+            cost = JoinOptimizer.estimate_join_cost(k1, k2, c1, c2)
+            if best is None or cost < best[0]:
+                card = JoinOptimizer.estimate_join_cardinality(
+                    j.op,
+                    k1,
+                    k2,
+                    is_pk(j.left_table, j.left_field),
+                    is_pk(j.right_table, j.right_field),
+                )
+                best = (cost, card, j, orig)
+    if best is None:
+        return [], 0.0
+    cost, card, j, orig = best
+    plan, used = [j], [orig]
+    while best is not None and len(plan) < len(joins):
+        joined = {t for p in plan for t in (p.left_table, p.right_table)}
+        best = None
+        for orig in joins:
+            if orig in used:
+                continue
+            if orig.left_table in joined:
+                j = orig
+            elif orig.right_table in joined:
+                j = orig.swap_inner_outer()
+            else:
+                continue
+            c2, k2 = scan(j.right_table)
+            step = JoinOptimizer.estimate_join_cost(card, k2, cost, c2)
+            if best is None or step < best[0]:
+                step_card = JoinOptimizer.estimate_join_cardinality(
+                    j.op,
+                    card,
+                    k2,
+                    _touches_pk(plan, pk_columns),
+                    is_pk(j.right_table, j.right_field),
+                )
+                best = (step, step_card, j, orig)
+        if best is not None:
+            cost, card, j, orig = best
+            plan.append(j)
+            used.append(orig)
+    return plan, cost

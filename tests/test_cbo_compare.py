@@ -12,19 +12,14 @@ import pytest
 
 from dbms_query_optimizer_spark.engine import TABLES, load_tables
 from dbms_query_optimizer_spark.plans.cbo_compare import (
+    EXAMPLE_JOINS as JOINS,
     catalyst_join_order,
     reference_cost_of_order,
     table_order_of_plan,
 )
-from dbms_query_optimizer_spark.plans.planner import JoinOptimizer, LogicalJoinNode
-from dbms_query_optimizer_spark.plans.stats import PredicateType as P
+from dbms_query_optimizer_spark.plans.planner import JoinOptimizer
 from dbms_query_optimizer_spark.plans.stats import TableStats
 
-JOINS = [
-    LogicalJoinNode("customer", "orders", "c_custkey", "o_custkey", P.EQ),
-    LogicalJoinNode("orders", "lineitem", "o_orderkey", "l_orderkey", P.EQ),
-    LogicalJoinNode("customer", "nation", "c_nationkey", "n_nationkey", P.EQ),
-]
 INVOLVED = ["customer", "orders", "lineitem", "nation"]
 
 

@@ -101,9 +101,7 @@ def test_broadcast_hint_in_physical_plan(tables, joins):
     """The emitter adds no hint: Spark's own size estimate against
     ``autoBroadcastJoinThreshold`` picks the broadcast for these
     sf0.001 sides."""
-    planned = plan_and_emit(
-        tables, joins, pk_columns=TABLES, io_cost_per_page=100
-    )
+    planned = plan_and_emit(tables, joins, pk_columns=TABLES)
     txt = explain_string(planned.df, "formatted")
     assert "BroadcastHashJoin" in txt
 
@@ -252,12 +250,12 @@ def test_emit_py4j_round_trips_per_join(spark):
 
 
 def test_engine_sql_entry(spark, sf_dir):
-    """Engine.sql runs full SQL over the registered views — the entry
+    """SQL runs over the views ``load_tables`` registers — the entry
     point the reference never had (its queries arrive pre-parsed)."""
-    from dbms_query_optimizer_spark.engine import Engine
+    from dbms_query_optimizer_spark.engine import load_tables
 
-    eng = Engine(spark).load_dir(sf_dir)
-    row = eng.sql(
+    load_tables(spark, sf_dir)
+    row = spark.sql(
         """
         SELECT r_name, COUNT(*) AS n
         FROM nation JOIN region ON n_regionkey = r_regionkey

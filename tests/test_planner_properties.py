@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import random
 
-from hypothesis import given, settings
+from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 
 from dbms_query_optimizer_spark.plans.cbo_compare import (
@@ -17,7 +17,7 @@ from dbms_query_optimizer_spark.plans.cbo_compare import (
 from dbms_query_optimizer_spark.plans.planner import JoinOptimizer, LogicalJoinNode
 from dbms_query_optimizer_spark.plans.stats import PredicateType, TableStats
 
-from .planner_reference import reference_order_joins
+from .planner_reference import reference_order_joins, reference_order_joins_greedy
 
 EQ = PredicateType.EQ
 
@@ -129,3 +129,32 @@ def test_dp_matches_frozenset_reference(graph):
     for subset, ref in ref_memo.items():
         got = opt.last_plan_cache.get(subset)
         assert (got.cost, got.card, got.plan) == (ref.cost, ref.card, ref.plan)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.one_of(join_graphs(), join_graphs(wide=True)))
+def test_greedy_cost_is_reference_cost_on_trees(graph):
+    """On a cycle-free connected graph the reference coster finds the one
+    edge greedy used for every table, in the same orientation, so greedy's
+    own cost and the reference cost of its table order are one number:
+    the two are one cost model, not two copies that can drift."""
+    joins, stats, sels, pk = graph
+    tables = {t for j in joins for t in (j.left_table, j.right_table)}
+    opt = JoinOptimizer(joins, pk)
+    plan = opt.order_joins_greedy(stats, sels)
+    assume(len(plan) == len(joins) == len(tables) - 1)
+    ref = reference_cost_of_order(table_order_of_plan(plan), joins, stats, sels, pk)
+    assert opt.last_plan_cost == ref
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.one_of(join_graphs(), join_graphs(wide=True)))
+def test_greedy_matches_rescanning_reference(graph):
+    """Greedy's running PK flag is the rescan it replaced: same plan and
+    same cost as tests/planner_reference.py's greedy on every graph."""
+    joins, stats, sels, pk = graph
+    opt = JoinOptimizer(joins, pk)
+    plan = opt.order_joins_greedy(stats, sels)
+    ref_plan, ref_cost = reference_order_joins_greedy(joins, pk, stats, sels)
+    assert plan == ref_plan
+    assert opt.last_plan_cost == ref_cost

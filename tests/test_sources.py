@@ -179,34 +179,6 @@ def test_sorted_parquet_row_group_bands(spark, sf_dir, tmp_path):
     assert "o_orderkey" in n_read  # pushed filter reaches the scan
 
 
-def test_compact_small_files(spark, sf_dir, tmp_path):
-    """Many tiny files -> few target-sized files, content identical."""
-    import os
-
-    from dbms_query_optimizer_spark.sources import compact_small_files
-    from dbms_query_optimizer_spark.engine import load_tables
-
-    events = load_tables(spark, sf_dir)["events"]
-    src = str(tmp_path / "shattered")
-    dst = str(tmp_path / "compacted")
-    events.repartition(64).write.parquet(src)
-    n_small = sum(1 for f in os.listdir(src) if f.endswith(".parquet"))
-    assert n_small == 64
-
-    # target sized so the whole table fits in one or two files
-    n_out = compact_small_files(spark, src, dst, target_file_bytes=16 * 1024 * 1024)
-    n_big = sum(1 for f in os.listdir(dst) if f.endswith(".parquet"))
-    assert n_big == n_out <= 4
-
-    a = spark.read.parquet(src)
-    b = spark.read.parquet(dst)
-    assert a.count() == b.count()
-    assert sorted(a.columns) == sorted(b.columns)
-    assert (
-        a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    )
-
-
 def test_dynamic_partition_overwrite(spark, sf_dir, tmp_path):
     """Dynamic overwrite replaces ONLY the partitions present in the new
     frame; static overwrite (the default) would truncate the whole table.
