@@ -173,6 +173,13 @@ def _fixture_root() -> str:
     return _FIXTURE_ROOTS[parent]
 
 
+def warehouse_dir() -> str:
+    """``<process root>/warehouse``: the session's default
+    ``spark.sql.warehouse.dir`` (``session.get_spark``), so managed tables
+    and databases are private to the process and removed at its exit."""
+    return os.path.join(_fixture_root(), "warehouse")
+
+
 def fixture_dir(sf_dir: str, *parts: str) -> str:
     """Path, private to this process, at which a query stages the input it
     reads back: ``<process root>/<sf basename>-<hash of real sf_dir>/<parts>``.

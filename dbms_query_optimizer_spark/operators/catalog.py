@@ -30,7 +30,8 @@ CATALOG: dict[str, tuple[QueryFn, str | None]] = {}
 
 
 def register(name: str, fn: QueryFn, oracle: str | None) -> None:
-    assert name not in CATALOG, f"duplicate query name {name}"
+    if name in CATALOG:
+        raise ValueError(f"duplicate query name {name}")
     CATALOG[name] = (fn, oracle)
 
 
@@ -636,65 +637,6 @@ from . import geo as GEO  # noqa: E402
 
 for _name, (_fn, _sql) in GEO.oracles().items():
     register(_name, _fn, _sql)
-
-
-# Entries whose QUERY CONSTRUCTION (fn(spark, sf_dir), before any action
-# on the returned frame) already runs Spark jobs or mutates state: the
-# txn/streaming families write table directories, the advisor/solver
-# entries collect stats or run driver solves, the source_* roundtrips
-# write fixtures, and the distributed-moment entries (PCA, spearman,
-# ...) collect scalars. Authoring-time sweeps that
-# only need the result SCHEMA (tests/test_oracle_types.py) skip these —
-# their type agreement is still enforced at full-execution time by
-# oracle_utils.compare inside the complete catalog gate. Measured
-# empirically: construct every oracled entry under a job group on a warm
-# session and flag any that ran >= 1 job (2026-08-15 sweep). BOTH
-# directions are enforced: the type test fails an unflagged entry that
-# starts running jobs at construction, and scripts/check_eager_flags.py
-# (run per round) reports any FLAGGED entry that has become lazy — a
-# stale flag would otherwise silently skip the cheap authoring-time
-# type gate forever.
-EAGER_CONSTRUCTION = frozenset({
-    "asof_join_salted", "bh_fdr_report", "bpe_train_steps",
-    "bucketed_colocated_join",
-    "cbo_ordered_join", "cbo_plan_memo", "cbo_vs_dp_report",
-    "cluster_key_advisor",
-    "column_profile", "curriculum_bins", "dedup_components",
-    "dedup_incremental_lsh", "dedup_semantic", "dpp_join_pruned",
-    "embedding_kmeans_lloyd",
-    "embedding_pca_project", "embedding_pq_adc", "entity_resolution",
-    "global_row_number", "graph_bfs_hops", "graph_kcore",
-    "graph_pagerank", "graph_wcc",
-    "index_refresh",
-    "ks_test_drift", "lsh_recall_report", "mann_whitney_u",
-    "markov_attribution", "mmr_diversify_topk",
-    "model_auc_roc", "model_gains_table", "model_pr_auc",
-    "pipeline_funnel_report", "quantile_normalize",
-    "retrieval_ndcg_report", "rfm_segmentation",
-    "sample_kcenter_coreset", "sample_systematic",
-    "shard_assignment_balanced", "skyline_pareto",
-    "source_binaryfile_scan", "source_csv_scan", "source_json_scan",
-    "source_orc_scan", "source_partitioned_scan",
-    "source_python_datasink", "source_schema_evolution",
-    "source_zorder_scan", "spearman_rank_corr",
-    "stats_equidepth_histogram", "stats_histogram_2d_dump",
-    "stats_histogram_dump",
-    "stats_selectivity_report",
-    "streaming_dedup", "streaming_foreachbatch_ingest",
-    "streaming_index_upsert",
-    "streaming_manifest_tail", "streaming_quantile_sketch",
-    "streaming_sessionized", "streaming_static_join",
-    "streaming_stream_stream_join",
-    "streaming_stream_stream_left_join", "streaming_tumbling",
-    "streaming_upsert_ingest", "txn_changes", "txn_clone",
-    "txn_cluster_evolution", "txn_compact_scan", "txn_constraint_gate",
-    "txn_delete_mor", "txn_delete_where", "txn_erase_keys",
-    "txn_history", "txn_incremental_mv", "txn_merge_upsert",
-    "txn_point_lookup", "txn_replace_where", "txn_restore",
-    "txn_retention_delete", "txn_scd2_apply", "txn_schema_evolution",
-    "txn_time_travel", "txn_vacuum_report", "txn_wap_publish",
-    "txn_write_read", "txn_zonemap_scan", "woe_binning",
-})
 
 
 def queries() -> dict[str, QueryFn]:

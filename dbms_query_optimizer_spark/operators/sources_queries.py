@@ -28,7 +28,7 @@ from ..sources import (
     write_orc,
     write_parquet,
 )
-from ..streaming.startup import start_and_drain
+from ..streaming.startup import drain_to_memory
 
 def _stage_concurrent(table, frames: list[DataFrame]) -> None:
     """Insert each frame as its own committed transaction, with the
@@ -741,35 +741,21 @@ def q_source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor read) value-for-value.
     """
     del sf_dir  # generator source — no testdata input
-    import uuid
-
     from ..sources.python_datasource import register
 
     register(spark)
-    names: list[str] = []
 
-    def start():
-        # fresh memory-sink name per attempt so a retried run never
-        # appends into a partially-filled table
-        names.append(f"synth_stream_{uuid.uuid4().hex[:8]}")
-        stream = (
+    def stream() -> DataFrame:
+        return (
             spark.readStream.format("synthevents")
             .option("rows", str(N_SYNTH_STREAM_ROWS))
             .option("rowsPerBatch", str(SYNTH_STREAM_BATCH))
             .option("partitions", "4")
             .load()
         )
-        return (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(names[-1])
-            .start()
-        )
 
-    # retries only the Python-source worker-spawn startup flake
-    start_and_drain(start)
     return (
-        spark.table(names[-1])
+        drain_to_memory(stream, "append")
         .groupBy("kind")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -817,17 +803,11 @@ def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     lt, ot = f"lineitem_bkt_{tag}", f"orders_bkt_{tag}"
     # saveAsTable(overwrite) only replaces tables the CURRENT catalog
-    # knows; a fresh session (in-memory catalog) + a leftover warehouse
-    # directory from a previous run raises LOCATION_ALREADY_EXISTS. Drop
-    # from the catalog AND clear any orphaned location first.
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    # knows, and a location left by an earlier session raises
+    # LOCATION_ALREADY_EXISTS; so drop from the catalog and write each
+    # table at a fresh fixture path, whatever the session's warehouse.
     for tbl in (lt, ot):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        leftover = os.path.join(warehouse, tbl.lower())
-        if os.path.exists(leftover):
-            import shutil
-
-            shutil.rmtree(leftover)
     (
         t["lineitem"]
         .select("l_orderkey", "l_quantity", "l_extendedprice")
@@ -835,6 +815,7 @@ def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .bucketBy(BUCKET_N, "l_orderkey")
         .sortBy("l_orderkey")
         .format("parquet")
+        .option("path", fixture_dir(sf_dir, "bucketed", lt))
         .saveAsTable(lt)
     )
     (
@@ -844,6 +825,7 @@ def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .bucketBy(BUCKET_N, "o_orderkey")
         .sortBy("o_orderkey")
         .format("parquet")
+        .option("path", fixture_dir(sf_dir, "bucketed", ot))
         .saveAsTable(ot)
     )
     return (
@@ -1736,8 +1718,6 @@ def q_streaming_manifest_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate must equal the batch union of the committed slices — the
     oracle recomputes it from the base table, value-checking offsets,
     file diffing, executor reads, and abort invisibility end to end."""
-    import uuid as _uuid
-
     from ..sources.manifest import TransactionalTable
     from ..sources.manifest_stream import register
 
@@ -1759,25 +1739,11 @@ def q_streaming_manifest_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     t3.commit()
 
     register(spark)
-    names: list[str] = []
-
-    def start():
-        # fresh memory-sink name per attempt (see startup.start_and_drain)
-        names.append(f"tail_{_uuid.uuid4().hex[:8]}")
-        return (
-            spark.readStream.format("manifesttail")
-            .option("path", root)
-            .load()
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(names[-1])
-            .start()
-        )
-
-    # retries only the Python-source worker-spawn startup flake
-    start_and_drain(start)
     return (
-        spark.table(names[-1])
+        drain_to_memory(
+            lambda: spark.readStream.format("manifesttail").option("path", root).load(),
+            "append",
+        )
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.count_distinct("o_orderkey").alias("n_keys"),

@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .cache import warehouse_dir
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -79,6 +81,10 @@ def get_spark(
         # (even a daemonized one reparented to PID 1 while healthy)
         .config("spark.dbms_query_optimizer_spark.origin", "1")
         .config("spark.ui.enabled", "false")
+        # managed tables and databases (the bucketed join's tables,
+        # cbo_cmp.db) go under this process's private root, not a
+        # ./spark-warehouse that every process started in one cwd shares
+        .config("spark.sql.warehouse.dir", warehouse_dir())
         .config("spark.driver.maxResultSize", "4g")
         # local mode = one JVM for driver + all executor threads; Spark's
         # 1g default is sized for a driver that only coordinates. 32

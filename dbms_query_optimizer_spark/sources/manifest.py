@@ -403,6 +403,10 @@ class Transaction:
         self._base_version: int | None = None
         self._dv_adds: dict[str, list[str]] = {}
 
+    def _check_open(self) -> None:
+        if self._done:
+            raise RuntimeError("transaction already finished")
+
     def insert(self, df: DataFrame) -> None:
         """Stage rows: a durable parquet write that no reader can see
         (the manifest doesn't reference it yet).
@@ -417,7 +421,7 @@ class Transaction:
         table untouched) and raises ConstraintViolation with per-
         constraint counts.
         """
-        assert not self._done, "transaction already finished"
+        self._check_open()
         constraints = self._table.snapshot().get("constraints") or {}
         obs = None
         if constraints:
@@ -455,7 +459,7 @@ class Transaction:
         (first-committer-wins). The rewrite must be the first write: that
         snapshot lacks anything this transaction already staged, so a
         second rewrite or a rewrite after inserts raises."""
-        assert not self._done, "transaction already finished"
+        self._check_open()
         if self._base_version is not None or self.staged_files():
             raise RuntimeError(
                 "a transaction holds inserts only, or one rewrite first "
@@ -630,7 +634,7 @@ class Transaction:
         CHECK constraints); a violation auto-aborts and raises
         ValueError, because silently writing rows the predicate would
         not have deleted makes the backfill non-idempotent."""
-        assert not self._done, "transaction already finished"
+        self._check_open()
         self.delete(spark, where)
         obs = Observation()
         df = df.observe(
@@ -656,7 +660,7 @@ class Transaction:
         footer reads are O(files) metadata, not data. A staged file with
         zero rows (Spark writes partition 0's file even when it is empty)
         is deleted, not published: its empty stats could never be pruned."""
-        assert not self._done, "transaction already finished"
+        self._check_open()
         stats = _harvest_stats(self.staged_files())
         for f in [f for f, st in stats.items() if st is None]:
             os.remove(f)
@@ -677,7 +681,7 @@ class Transaction:
     def abort(self) -> None:
         """Drop staged files. Also safe to simply crash instead — an
         unpublished staging dir is invisible either way."""
-        assert not self._done, "transaction already finished"
+        self._check_open()
         shutil.rmtree(self._staging, ignore_errors=True)
         self._done = True
 

@@ -23,8 +23,10 @@ attempt recomputes the stream from offset zero against a clean sink.
 
 from __future__ import annotations
 
+import uuid
 from typing import Callable, Optional
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 # Substrings identifying the transient Python-worker spawn/connect
@@ -75,3 +77,27 @@ def start_and_drain(
                     # stop() on an already-dead query can rethrow the
                     # stream error; the drain above already adjudicated it.
                     pass
+
+
+def drain_to_memory(stream: Callable[[], DataFrame], mode: str) -> DataFrame:
+    """Run the streaming frame ``stream()`` builds to completion into a
+    memory sink in output ``mode`` and return the sink's table.
+
+    Each ``start_and_drain`` attempt builds the frame again (a Python
+    source spawns its planner worker at ``load()`` as well as at
+    ``start()``) and writes to a fresh sink name, so a retried run never
+    appends into a partially-filled table."""
+    names: list[str] = []
+
+    def start() -> StreamingQuery:
+        names.append(f"drain_{uuid.uuid4().hex[:8]}")
+        return (
+            stream()
+            .writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(names[-1])
+            .start()
+        )
+
+    start_and_drain(start)
+    return SparkSession.active().table(names[-1])

@@ -18,8 +18,6 @@ length/slide; sessionization in batch is a single shuffle on user_id.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -27,6 +25,7 @@ from pyspark.sql import functions as F
 from ..cache import fixture_dir
 from ..engine import load_tables
 from ..functions.numeric import dec, dsum_double
+from .startup import drain_to_memory
 
 SESSION_GAP_MIN = 10
 
@@ -256,7 +255,6 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     every window is emitted regardless of watermark, so the result equals
     the batch query and shares its DuckDB oracle.
     """
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "15 minutes")
@@ -273,17 +271,9 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
+    return drain_to_memory(lambda: agg, "complete").orderBy(
+        "window_start", "event_type"
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("window_start", "event_type")
 
 
 def q_streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,7 +290,6 @@ def q_streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result equals the equivalent batch join+agg and a plain SQL
     oracle covers a genuinely streaming execution.
     """
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
     stream = _events_stream(spark, sf_dir)
     dim = load_tables(spark, sf_dir)["customer"].select("c_custkey", "c_mktsegment")
     agg = (
@@ -318,12 +307,9 @@ def q_streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("window_start", "c_mktsegment")
+    return drain_to_memory(lambda: agg, "complete").orderBy(
+        "window_start", "c_mktsegment"
+    )
 
 
 ORACLE_STREAMING_STATIC_JOIN = """
@@ -380,13 +366,7 @@ def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFram
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
     ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
 
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(lambda: joined, "append")
 
 
 def q_streaming_stream_stream_left_join(
@@ -448,18 +428,7 @@ def q_streaming_stream_stream_left_join(
         "purchase_ts",
     )
 
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(lambda: joined, "append")
 
 
 ORACLE_STREAM_STREAM_LEFT_JOIN = """
@@ -535,13 +504,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("minute_ts", "1 hour")
         .dropDuplicates(["user_id", "event_type", "minute_ts"])
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = keys.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(lambda: keys, "append")
 
 
 ORACLE_STREAMING_DEDUP = """

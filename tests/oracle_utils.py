@@ -190,9 +190,9 @@ def release_query_caches() -> None:
 
 
 def compare(spark_df, conn: duckdb.DuckDBPyConnection, sql: str) -> tuple[bool, str]:
-    # release on EVERY exit (including the early type-gate failures): an
-    # eager-constructed entry has already materialized its tracked
-    # persists by the time compare() is called
+    # release on EVERY exit, including the early type-check failures: a
+    # query function that ran jobs while building its frame has already
+    # materialized its tracked persists by the time compare() is called
     try:
         return _compare_inner(spark_df, conn, sql)
     finally:

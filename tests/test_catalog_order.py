@@ -4,6 +4,8 @@ value-hash oracle, and the entry query ``flagship_join_agg`` comes first
 registration order; ``tests/test_queries_oracle.py`` oracle-checks every
 entry."""
 
+import pytest
+
 from dbms_query_optimizer_spark.operators import catalog as C
 
 
@@ -24,6 +26,13 @@ def test_catalog_intact_after_reorder():
     assert len(names) >= 161
     # entry()'s flagship query must stay first
     assert names[0] == "flagship_join_agg"
+
+
+def test_duplicate_name_is_refused():
+    # an explicit check, so it also holds under python -O
+    name = next(iter(C.CATALOG))
+    with pytest.raises(ValueError, match="duplicate query name"):
+        C.register(name, *C.CATALOG[name])
 
 
 def test_state_width_tracks_shuffle_partitions(spark):

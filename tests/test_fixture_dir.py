@@ -6,7 +6,9 @@ maintenance queries) asks ``fixture_dir`` for its directory. These tests
 pin what makes that safe: a process never sees another process's files,
 a process's root goes when it exits, a killed process's root goes on the
 next process's first use, and a query built again starts from nothing.
-Spark-free: the children only import ``cache``.
+The session's warehouse (managed tables and databases) lies under the
+same process root; that test alone needs Spark, and the child processes
+only import ``cache``.
 """
 
 from __future__ import annotations
@@ -108,6 +110,18 @@ def test_same_name_again_is_fresh_and_empty(tmp_path, monkeypatch):
     # an sf directory elsewhere with the same basename is a different input
     other = fixture_dir(str(tmp_path / "elsewhere" / "sf0.01"), "txn", "orders")
     assert other != second
+
+
+def test_session_warehouse_lies_under_process_root(spark):
+    from dbms_query_optimizer_spark.cache import warehouse_dir
+
+    root = os.path.join(_fixtures(tempfile.gettempdir()), str(os.getpid()))
+    assert warehouse_dir() == os.path.join(root, "warehouse")
+    spark.range(3).write.saveAsTable("warehouse_probe")
+    try:
+        assert os.path.isdir(os.path.join(root, "warehouse", "warehouse_probe"))
+    finally:
+        spark.sql("DROP TABLE IF EXISTS warehouse_probe")
 
 
 def test_cache_owns_every_temp_path():

@@ -78,6 +78,19 @@ def test_merge_after_insert_is_refused(spark, kv_table):
     assert _rows(spark, kv_table.root) == [(5, 1)]
 
 
+def test_finished_txn_refuses_every_call(spark, kv_table):
+    # an explicit check, not an assert, so it also holds under python -O:
+    # a second commit would publish the staged file twice and an abort
+    # after commit would delete the committed data file
+    t = kv_table.begin()
+    t.insert(_df(spark, (1, 0), (2, 0)))
+    t.commit()
+    for call in (t.commit, lambda: t.insert(_df(spark, (3, 0))), t.abort):
+        with pytest.raises(RuntimeError, match="already finished"):
+            call()
+    assert _rows(spark, kv_table.root) == [(1, 0), (2, 0)]
+
+
 # ------------------------------------------------------ lost link race
 
 _SCHEMA = StructType([StructField("id", LongType())])

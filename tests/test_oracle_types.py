@@ -1,23 +1,21 @@
-"""Type gates over every catalog oracle: (1) DESCRIBE-only — no
-pandas-lossy output column (HUGEINT/INT128, or DECIMAL with precision
-> 15); (2) bidirectional — DuckDB DESCRIBE types must agree with the
-Spark DataFrame's dtypes at the numeric-class level (int vs float vs
-decimal), closing the r5 twap_daily class for good.
+"""Oracle type checks: the pre-checks ``oracle_utils.compare`` runs before
+it hashes, a DESCRIBE-only sweep of every catalog oracle, and the
+numeric-class check of every oracle against its query's Spark schema.
 
-DuckDB widens SUM over INTEGER/BIGINT to HUGEINT. The grading driver
-canonicalizes oracle results through pandas (``.df()``), where HUGEINT —
-and any DECIMAL wider than float64's ~15.95 exact decimal digits —
-renders as float64 and the value hash flips against Spark's exact output.
-HUGEINT is the class that failed ``tpch_q12`` in round 4 while the local
-``fetchall()``-based gate stayed green; DECIMAL(38,0) was the
-``table_checksum`` output until round 5. This sweep is plan-only (no
-query execution, no Spark), so it runs in milliseconds and catches the
-defect at authoring time.
+The driver canonicalizes oracle results through pandas (``.df()``). There
+DuckDB's HUGEINT (what ``SUM`` over INTEGER/BIGINT widens to) and any
+DECIMAL wider than float64's ~15.95 exact digits render as float64, and a
+Spark BIGINT column against an oracle DOUBLE renders "32869" vs "32869.0":
+the values agree but the hash flips. ``compare`` rejects both classes
+before hashing and names the column; ``tests/test_queries_oracle.py``
+calls it for every catalog entry.
 
-Oracles that read table state a Spark query must materialize first (the
-txn/manifest family writes under a temp dir) can't be planned standalone;
-those are skipped here and covered by the in-test DESCRIBE check inside
-``oracle_utils.compare``, which runs after the Spark side has written.
+The HUGEINT sweep is plan-only (DuckDB DESCRIBE, no Spark), so it names a
+lossy oracle column at authoring time in milliseconds. The schema check
+builds each query's frame but runs no action on it. Oracles that read
+table state a Spark query must write first cannot be planned standalone;
+both sweeps skip them, and ``compare`` checks them after the Spark side
+has written.
 """
 
 from __future__ import annotations
@@ -27,6 +25,7 @@ import pytest
 from dbms_query_optimizer_spark.operators import catalog
 
 from .oracle_utils import (
+    compare,
     duckdb_conn,
     hugeint_columns,
     release_query_caches,
@@ -41,37 +40,6 @@ def conn(sf_dir):
     c = duckdb_conn(sf_dir)
     yield c
     c.close()
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _warm_footers(spark, sf_dir):
-    """Pre-read every table's parquet footer. The FIRST construction that
-    touches a table in a fresh session runs one small schema/listing job
-    per table — warmup cost, not the query's — which would trip the
-    zero-jobs-at-construction assertion for whichever test runs first."""
-    from dbms_query_optimizer_spark.engine import load_tables
-
-    for df in load_tables(spark, sf_dir).values():
-        df.schema  # forces the footer read without an action
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _warm_ivf_index(spark, sf_dir):
-    """Pre-build the persisted IVF index. ``knn_ivf``'s construction is
-    build-once/probe-many: on a machine whose tempdir holds no index for
-    this sf_dir and engine source (``cache.build_once`` keys on both) it
-    TRAINS the quantizer (eager, ~19 jobs) and on every later
-    construction it is lazy — so without this warmup the type gate's
-    zero-jobs assertion is a coin flip on host state (failed on a fresh
-    /tmp, round 8). Building here pins the gate to the steady-state
-    serving path, which is what it is meant to type-check."""
-    from dbms_query_optimizer_spark.operators.similarity import (
-        build_ivf_index,
-        build_ivfpq_index,
-    )
-
-    build_ivf_index(spark, sf_dir)
-    build_ivfpq_index(spark, sf_dir)  # knn_ivfpq: same build-once contract
 
 
 @pytest.mark.parametrize("name", ORACLED)
@@ -90,53 +58,45 @@ def test_oracle_has_no_hugeint_columns(name, conn):
 
 @pytest.mark.parametrize("name", ORACLED)
 def test_oracle_types_agree_with_spark_schema(name, conn, spark, sf_dir):
-    """Bidirectional type gate: for every LAZY-construction oracled
-    entry, compare DuckDB's DESCRIBE column types against the Spark
-    DataFrame's dtypes and fail any numeric-class (int vs float vs
-    decimal) disagreement.
+    """DuckDB's DESCRIBE of the oracle agrees with the Spark frame's
+    dtypes at the numeric-class level (int vs float vs decimal), checked
+    on the frame the query function returns, before any action on it.
 
-    This is the static form of the r5 twap_daily defect: the oracle's
-    ``epoch()`` returned DOUBLE so ``span_s`` reached the driver's pandas
-    canonicalization as float64 ("32869.0") while Spark emitted BIGINT
-    ("32869") — values bit-identical, hash flipped on rendering. Both
-    local harnesses were blind to it because they int-collapsed integral
-    floats; the collapse is gone (oracle_utils normalizes integral floats
-    to "X.0") and this gate names the offending column at authoring time.
-
-    Entries flagged ``catalog.EAGER_CONSTRUCTION`` — whose fn() runs
-    Spark jobs or rewrites txn table state just to build the plan — are
-    skipped here: sweeping them would re-execute the heavy half of the
-    catalog once more per pytest run (and run side-effectful txn
-    fixtures in an extra, order-arbitrary context). Their type agreement
-    is still enforced at full-execution time by the ``type_mismatches``
-    check inside ``oracle_utils.compare`` (test_queries_oracle). For
-    unflagged entries the sweep is construction-only and self-enforcing:
-    it runs fn() under a job group and fails if any job executed, so a
-    newly-eager entry must be flagged rather than silently re-executing.
+    This is the same ``type_mismatches`` check ``compare`` makes before it
+    hashes; here it runs without the hash and names the column. An entry
+    whose construction itself runs Spark jobs (the txn, streaming and
+    source families, solvers, distributed moments) pays them here too;
+    its tracked persists are released straight after.
     """
     fn, sql = catalog.CATALOG[name]
-    if name in catalog.EAGER_CONSTRUCTION:
-        pytest.skip("eager construction — typed at execution by compare()")
     try:
         conn.execute(f"DESCRIBE ({sql})").fetchall()
     except Exception as exc:  # state-dependent oracle — covered in compare()
         pytest.skip(f"oracle not plannable standalone: {str(exc)[:120]}")
-    sc = spark.sparkContext
-    group = f"type-gate-{name}"
-    sc.setJobGroup(group, group)
     try:
         df = fn(spark, sf_dir)
+        mism = type_mismatches(df, conn, sql)
     finally:
-        sc.setJobGroup("", "")
-        release_query_caches()  # drop lazily-registered persists
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert not jobs, (
-        f"{name}: construction ran {len(jobs)} Spark job(s) — flag it in "
-        "catalog.EAGER_CONSTRUCTION so schema sweeps don't re-execute it"
-    )
-    mism = type_mismatches(df, conn, sql)
+        release_query_caches()
     assert not mism, (
         f"{name}: numeric-class mismatch vs oracle {mism} — the driver's "
         "pandas path renders int64 as '32869' but float64 as '32869.0'; "
         "CAST the oracle (or the Spark column) so both sides agree"
     )
+
+
+def test_compare_rejects_bigint_against_double_oracle(spark, conn):
+    df = spark.createDataFrame([(32869, "a")], "span_s bigint, tag string")
+    ok, msg = compare(df, conn, "SELECT 32869.0::DOUBLE AS span_s, 'a' AS tag")
+    assert not ok
+    assert "int/float type mismatch" in msg and "span_s" in msg
+    assert "tag" not in msg
+
+
+def test_compare_rejects_hugeint_oracle(spark, conn):
+    df = spark.createDataFrame([(3,)], "total bigint")
+    ok, msg = compare(
+        df, conn, "SELECT SUM(x::BIGINT) AS total FROM (VALUES (1), (2)) t(x)"
+    )
+    assert not ok
+    assert "HUGEINT" in msg and "total" in msg
