@@ -12,6 +12,13 @@ The registry also records each table's primary key. The reference hard-codes
 "field 0 is the primary key" (``join_optimizer.cc:220,224``); in a
 named-schema world that convention becomes explicit per-table metadata used
 by the join-cardinality estimator.
+
+Every read of a testdata table goes through here: the table list
+(``TABLES``), the session confs the read needs (``_pin_session``), the
+timestamp normalization (``_normalize_timestamps``, shared by batch and
+streaming frames), the batch frames (``load_tables``) and the one events
+stream (``events_stream``). The schema is always the one the parquet
+footers carry; no second copy of it is kept.
 """
 
 from __future__ import annotations
@@ -49,8 +56,10 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     - bigint named ``ts``  -> nanos long, integer-DIV to micros (float
       division would lose bits above 2^53), then ``timestamp_micros``;
     - TIMESTAMP_NTZ        -> cast to TIMESTAMP. The session timezone is
-      pinned to UTC (load_tables), so the cast is identity on the stored
+      pinned to UTC (_pin_session), so the cast is identity on the stored
       micros and epoch math matches DuckDB's naive-timestamp epoch.
+
+    Works on batch and streaming frames alike (a column rewrite).
 
     Caveat: PySpark renders collected TIMESTAMP (LTZ) values through the
     PYTHON PROCESS's local timezone, which the session conf does not
@@ -79,12 +88,8 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
 _TABLE_CACHE: dict[str, tuple[SparkSession, dict[str, DataFrame]]] = {}
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Every known table from ``{sf_dir}/{name}.parquet``: name ->
-    DataFrame, each registered as a temp view of that name for SQL.
-
-    Parquet scans are lazy; registering a view costs nothing until an
-    action runs, and Catalyst pushes filters/projections into the scan.
+def _pin_session(spark: SparkSession) -> None:
+    """Set the session confs every testdata read needs.
 
     SESSION-WIDE SIDE EFFECT: sets ``spark.sql.session.timeZone=UTC``
     and ``spark.sql.legacy.parquet.nanosAsLong=true`` on the caller's
@@ -92,24 +97,35 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     an identity on stored values). Any timezone-sensitive query the
     caller runs on the same session afterwards sees UTC; a warning is
     logged if a different pre-existing timeZone is being overridden.
+    Set here rather than in the session factory, so queries work from a
+    caller-built session too.
     """
-    key = os.path.abspath(sf_dir)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return dict(hit[1])
-    # set here rather than in the session factory, so queries work from a
-    # caller-built session too
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     prev_tz = spark.conf.get("spark.sql.session.timeZone", None)
     if prev_tz not in (None, "UTC"):
         import logging
 
         logging.getLogger(__name__).warning(
-            "load_tables overriding spark.sql.session.timeZone=%s with UTC "
+            "overriding spark.sql.session.timeZone=%s with UTC "
             "(required for exact timestamp normalization)",
             prev_tz,
         )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Every known table from ``{sf_dir}/{name}.parquet``: name ->
+    DataFrame, each registered as a temp view of that name for SQL.
+
+    Parquet scans are lazy; registering a view costs nothing until an
+    action runs, and Catalyst pushes filters/projections into the scan.
+    Pins the session confs on a cache miss (``_pin_session``).
+    """
+    key = os.path.abspath(sf_dir)
+    hit = _TABLE_CACHE.get(key)
+    if hit is not None and hit[0] is spark:
+        return dict(hit[1])
+    _pin_session(spark)
     tables = {}
     for name in TABLES:
         df = _normalize_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
@@ -117,6 +133,32 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         tables[name] = df
     _TABLE_CACHE[key] = (spark, tables)
     return dict(tables)
+
+
+def events_stream(
+    spark: SparkSession, sf_dir: str, files_per_trigger: int | None = None
+) -> DataFrame:
+    """readStream over ``{sf_dir}/events.parquet``, ``ts`` normalized as
+    in ``load_tables``.
+
+    The file source streams a directory, so the two on-disk layouts need
+    different sources: a directory-shaped events.parquet (part files) is
+    streamed directly, while the single-file layout streams ``sf_dir``
+    with a glob that keeps only that file (a glob on a directory layout
+    would match the part-file NAMES and read nothing). The schema is the
+    footers', read once by the batch reader. ``files_per_trigger`` caps
+    the files per micro-batch; unset, one trigger takes every file.
+    """
+    _pin_session(spark)
+    path = os.path.join(sf_dir, "events.parquet")
+    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(files_per_trigger))
+    if os.path.isdir(path):
+        stream = reader.parquet(path)
+    else:
+        stream = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    return _normalize_timestamps(stream)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

@@ -1,10 +1,11 @@
 """Catalog queries exercising the CSV/JSON connectors end-to-end.
 
 Each query exports testdata through a non-parquet format and reads it back
-with an explicit schema, so the correctness gate covers the full
-write -> file -> schema-explicit read path. The oracle runs on the original
-parquet views — values must survive the format roundtrip bit-for-bit
-(floats are aggregated through DECIMAL on both sides, as everywhere else).
+under the written frame's own schema (explicit, so no inference pass), so
+the correctness gate covers the full write -> file -> schema-explicit read
+path. The oracle runs on the original parquet views — values must survive
+the format roundtrip bit-for-bit (floats are aggregated through DECIMAL on
+both sides, as everywhere else).
 """
 
 from __future__ import annotations
@@ -19,7 +20,6 @@ from ..cache import fixture_dir, track_persist
 from ..engine import load_tables
 from ..functions.numeric import dec, dsum_double
 from ..sources import (
-    TESTDATA_SCHEMAS,
     read_csv,
     read_json,
     read_orc,
@@ -64,6 +64,44 @@ def _stage_concurrent(table, frames: list[DataFrame]) -> None:
         raise
 
 
+def _quartile_orders(spark: SparkSession, sf_dir: str, kind: str):
+    """The quartile-clustered orders fixture shared by the zone-map
+    ``txn_*`` queries: a fresh manifest table at ``fixture_dir(sf_dir,
+    kind, "orders")`` whose four commits each hold one key quartile of a
+    3-column orders projection (one file each, committed in quartile
+    order). Returns the table, the projection and the five quartile
+    bounds ``q`` (quartile i is ``q[i] <= o_orderkey < q[i+1]``).
+
+    The projection is cached (r11): the max-key probe and all four
+    quartile insert jobs scan it — five parquet decodes become one. The
+    staging writes overlap and the commits stay in quartile order
+    (guide §2.6; see ``_stage_concurrent`` — table state identical to
+    the serial loop)."""
+    from ..sources.manifest import TransactionalTable
+
+    orders = track_persist(
+        load_tables(spark, sf_dir)["orders"].select(
+            "o_orderkey", "o_custkey", "o_totalprice"
+        )
+    )
+    # quartile bounds from the key domain — a metadata-scale collect
+    mx = orders.agg(F.max("o_orderkey")).collect()[0][0]
+    q = [(i * (mx + 1)) // 4 for i in range(5)]
+
+    root = fixture_dir(sf_dir, kind, "orders")
+    table = TransactionalTable.create(root, orders.schema)
+    _stage_concurrent(
+        table,
+        [
+            orders.filter(
+                (F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi)
+            ).coalesce(1)
+            for lo, hi in zip(q, q[1:])
+        ],
+    )
+    return table, orders, q
+
+
 def q_source_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nation + region through the CSV sink/source, then a broadcast join
     and per-region nation count."""
@@ -72,8 +110,8 @@ def q_source_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     region_dir = fixture_dir(sf_dir, "csv", "region")
     write_csv(t["nation"], nation_dir, target_files=1)
     write_csv(t["region"], region_dir, target_files=1)
-    nation = read_csv(spark, nation_dir, TESTDATA_SCHEMAS["nation"])
-    region = read_csv(spark, region_dir, TESTDATA_SCHEMAS["region"])
+    nation = read_csv(spark, nation_dir, t["nation"].schema)
+    region = read_csv(spark, region_dir, t["region"].schema)
     return (
         nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name")
@@ -97,7 +135,7 @@ def q_source_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     cust_dir = fixture_dir(sf_dir, "json", "customer")
     write_json(t["customer"], cust_dir, target_files=4)
-    customer = read_json(spark, cust_dir, TESTDATA_SCHEMAS["customer"])
+    customer = read_json(spark, cust_dir, t["customer"].schema)
     return (
         customer.groupBy("c_mktsegment")
         .agg(
@@ -162,7 +200,7 @@ def q_source_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     supp_dir = fixture_dir(sf_dir, "orc", "supplier")
     write_orc(t["supplier"], supp_dir, target_files=2)
-    supplier = read_orc(spark, supp_dir, TESTDATA_SCHEMAS["supplier"])
+    supplier = read_orc(spark, supp_dir, t["supplier"].schema)
     return (
         supplier.filter(F.col("s_acctbal") > 0)
         .groupBy("s_nationkey")
@@ -1064,30 +1102,7 @@ def q_txn_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(matching files), never a table scan."""
     from ..sources.manifest import TransactionalTable
 
-    root = fixture_dir(sf_dir, "txn_delete", "orders")
-
-    # cached (r11): the max-key probe and all four quartile insert jobs
-    # scan this 3-column projection — five parquet decodes become one
-    orders = track_persist(
-        load_tables(spark, sf_dir)["orders"].select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-    )
-    mx = orders.agg(F.max("o_orderkey")).collect()[0][0]
-    q = [(i * (mx + 1)) // 4 for i in range(5)]
-
-    table = TransactionalTable.create(root, orders.schema)
-    # staging writes overlapped, commits in quartile order (guide §2.6;
-    # see _stage_concurrent — table state identical to the serial loop)
-    _stage_concurrent(
-        table,
-        [
-            orders.filter(
-                (F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi)
-            ).coalesce(1)
-            for lo, hi in zip(q, q[1:])
-        ],
-    )
+    table, _, q = _quartile_orders(spark, sf_dir, "txn_delete")
 
     cut = q[2]
     td = table.begin()
@@ -1097,7 +1112,7 @@ def q_txn_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_rewritten = len(td._replaced)
     td.commit()
 
-    reader = TransactionalTable(root)  # fresh open = recovery path
+    reader = TransactionalTable(table.root)  # fresh open = recovery path
     return reader.read(spark).agg(
         F.count(F.lit(1)).alias("n_rows"),
         dsum_double(dec("o_totalprice"), 2).alias("sum_price"),
@@ -1139,30 +1154,7 @@ def q_txn_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     row — the compaction half of the bargain)."""
     from ..sources.manifest import TransactionalTable
 
-    root = fixture_dir(sf_dir, "txn_delete_mor", "orders")
-
-    # cached (r11): the max-key probe and all four quartile insert jobs
-    # scan this 3-column projection — five parquet decodes become one
-    orders = track_persist(
-        load_tables(spark, sf_dir)["orders"].select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-    )
-    mx = orders.agg(F.max("o_orderkey")).collect()[0][0]
-    q = [(i * (mx + 1)) // 4 for i in range(5)]
-
-    table = TransactionalTable.create(root, orders.schema)
-    # staging writes overlapped, commits in quartile order (guide §2.6;
-    # see _stage_concurrent — table state identical to the serial loop)
-    _stage_concurrent(
-        table,
-        [
-            orders.filter(
-                (F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi)
-            ).coalesce(1)
-            for lo, hi in zip(q, q[1:])
-        ],
-    )
+    table, _, q = _quartile_orders(spark, sf_dir, "txn_delete_mor")
 
     files_before = table.snapshot()["files"]
     cut = q[2]
@@ -1175,13 +1167,13 @@ def q_txn_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     files_rewritten = len(set(files_before) ^ set(snap["files"]))
     dv_files = len(snap.get("dvs", {}))
 
-    reader = TransactionalTable(root)  # fresh open = recovery path
+    reader = TransactionalTable(table.root)  # fresh open = recovery path
     agg = reader.read(spark).agg(
         F.count(F.lit(1)).alias("n_rows"),
         dsum_double(dec("o_totalprice"), 2).alias("sum_price"),
     )
     table.materialize_dvs(spark)
-    n_after = TransactionalTable(root).read(spark).count()
+    n_after = TransactionalTable(table.root).read(spark).count()
     return agg.select(
         "n_rows",
         "sum_price",
@@ -1480,30 +1472,7 @@ def q_txn_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     are value-checked."""
     from ..sources.manifest import TransactionalTable
 
-    root = fixture_dir(sf_dir, "txn_replace", "orders")
-
-    # cached (r11): the max-key probe and all four quartile insert jobs
-    # scan this 3-column projection — five parquet decodes become one
-    orders = track_persist(
-        load_tables(spark, sf_dir)["orders"].select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-    )
-    mx = orders.agg(F.max("o_orderkey")).collect()[0][0]
-    q = [(i * (mx + 1)) // 4 for i in range(5)]
-
-    table = TransactionalTable.create(root, orders.schema)
-    # staging writes overlapped, commits in quartile order (guide §2.6;
-    # see _stage_concurrent — table state identical to the serial loop)
-    _stage_concurrent(
-        table,
-        [
-            orders.filter(
-                (F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi)
-            ).coalesce(1)
-            for lo, hi in zip(q, q[1:])
-        ],
-    )
+    table, orders, q = _quartile_orders(spark, sf_dir, "txn_replace")
 
     cut = q[2]
     recomputed = orders.filter(F.col("o_orderkey") >= cut).withColumn(
@@ -1514,7 +1483,7 @@ def q_txn_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     txn.commit()
 
     return (
-        TransactionalTable(root).read(spark).orderBy("o_orderkey")
+        TransactionalTable(table.root).read(spark).orderBy("o_orderkey")
     )
 
 
@@ -1798,33 +1767,9 @@ def q_txn_zonemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.manifest import TransactionalTable
 
-    root = fixture_dir(sf_dir, "txn_zonemap", "orders")
+    table, _, q = _quartile_orders(spark, sf_dir, "txn_zonemap")
 
-    # cached (r11): the max-key probe and all four quartile insert jobs
-    # scan this 3-column projection — five parquet decodes become one
-    orders = track_persist(
-        load_tables(spark, sf_dir)["orders"].select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-    )
-    # quartile bounds from the key domain — a metadata-scale collect
-    mx = orders.agg(F.max("o_orderkey")).collect()[0][0]
-    q = [(i * (mx + 1)) // 4 for i in range(5)]
-
-    table = TransactionalTable.create(root, orders.schema)
-    # staging writes overlapped, commits in quartile order (guide §2.6;
-    # see _stage_concurrent — table state identical to the serial loop)
-    _stage_concurrent(
-        table,
-        [
-            orders.filter(
-                (F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi)
-            ).coalesce(1)
-            for lo, hi in zip(q, q[1:])
-        ],
-    )
-
-    reader = TransactionalTable(root)  # fresh open = recovery path
+    reader = TransactionalTable(table.root)  # fresh open = recovery path
     cut = q[2]
     df = reader.read(spark, where=("o_orderkey", ">=", cut))
     return df.agg(

@@ -137,14 +137,6 @@ class IntHistogram:
             return 1.0 - self.estimate_selectivity(PredicateType.GT, v)
         raise ValueError(f"unsupported predicate {op}")
 
-    def avg_selectivity(self) -> float:
-        """Mean EQ selectivity over observed values (used by shape tests)."""
-        if self.ntups == 0:
-            return 0.0
-        return sum(
-            (c / self.span) / self.ntups * (c / self.ntups) for c in self.counts
-        )
-
 
 class Int2DHistogram:
     """Equi-width GRID histogram over two integer columns: joint-distribution

@@ -166,10 +166,6 @@ class BloomFilter:
         ones = sum(bin(b).count("1") for b in self.bits)
         return ones / self.m
 
-    def expected_fpp(self) -> float:
-        """Actual false-positive probability from the observed fill."""
-        return self.fill_ratio ** NUM_HASHES if self.m else 1.0
-
     def __repr__(self) -> str:  # pragma: no cover
         return f"BloomFilter(m={self.m}, fill={self.fill_ratio:.4f})"
 

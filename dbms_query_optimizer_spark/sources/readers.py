@@ -1,14 +1,18 @@
-"""Schema-explicit readers for parquet / CSV / JSON.
+"""Schema-explicit readers for ORC / CSV / JSON.
 
 Scale rules encoded here:
 
 - **Never infer schemas.** CSV/JSON inference is a full extra pass over the
   input — at 100 TB that is a 100 TB job before the real one starts. Every
-  reader takes (or looks up) an explicit ``StructType``.
-- **Parquet carries its own schema**, but passing one anyway pins the
-  contract: a drifted producer fails fast at analysis time instead of
-  corrupting results ("schema-on-write wins").
-- **Pushdown survives.** Explicit schemas keep the vectorized parquet
+  reader takes an explicit ``StructType``. The catalog's roundtrip queries
+  pass the schema of the frame they wrote, which is the schema the
+  source table's parquet footers carry; no hand-typed copy of a table
+  schema is kept.
+- **Columnar files carry their own schema**, but passing one anyway pins
+  the contract: a drifted producer fails fast at analysis time instead of
+  corrupting results ("schema-on-write wins"). Parquet needs no wrapper:
+  ``spark.read.schema(s).parquet(path)``.
+- **Pushdown survives.** Explicit schemas keep the vectorized ORC
   reader + filter/column pushdown active; CSV/JSON readers still prune
   columns at parse time when a select follows the load.
 """
@@ -17,115 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-# Explicit schemas for the driver testdata tables (FIXTURES.md §B). events.ts
-# is TIMESTAMP(NANOS) in the parquet, read session-wide as a raw long
-# (spark.sql.legacy.parquet.nanosAsLong) — represented here as LongType and
-# normalized to a microsecond timestamp by engine._normalize_event_ts.
-TESTDATA_SCHEMAS: dict[str, T.StructType] = {
-    "region": T.StructType(
-        [
-            T.StructField("r_regionkey", T.IntegerType()),
-            T.StructField("r_name", T.StringType()),
-        ]
-    ),
-    "nation": T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-        ]
-    ),
-    "customer": T.StructType(
-        [
-            T.StructField("c_custkey", T.LongType()),
-            T.StructField("c_name", T.StringType()),
-            T.StructField("c_nationkey", T.IntegerType()),
-            T.StructField("c_acctbal", T.DoubleType()),
-            T.StructField("c_mktsegment", T.StringType()),
-        ]
-    ),
-    "supplier": T.StructType(
-        [
-            T.StructField("s_suppkey", T.LongType()),
-            T.StructField("s_name", T.StringType()),
-            T.StructField("s_nationkey", T.IntegerType()),
-            T.StructField("s_acctbal", T.DoubleType()),
-        ]
-    ),
-    "part": T.StructType(
-        [
-            T.StructField("p_partkey", T.LongType()),
-            T.StructField("p_name", T.StringType()),
-            T.StructField("p_brand", T.StringType()),
-            T.StructField("p_type", T.StringType()),
-            T.StructField("p_size", T.IntegerType()),
-            T.StructField("p_retailprice", T.DoubleType()),
-        ]
-    ),
-    "orders": T.StructType(
-        [
-            T.StructField("o_orderkey", T.LongType()),
-            T.StructField("o_custkey", T.LongType()),
-            T.StructField("o_orderstatus", T.StringType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
-            T.StructField("o_orderpriority", T.StringType()),
-        ]
-    ),
-    "lineitem": T.StructType(
-        [
-            T.StructField("l_orderkey", T.LongType()),
-            T.StructField("l_partkey", T.LongType()),
-            T.StructField("l_suppkey", T.LongType()),
-            T.StructField("l_linenumber", T.IntegerType()),
-            T.StructField("l_quantity", T.DoubleType()),
-            T.StructField("l_extendedprice", T.DoubleType()),
-            T.StructField("l_discount", T.DoubleType()),
-            T.StructField("l_tax", T.DoubleType()),
-            T.StructField("l_returnflag", T.StringType()),
-            T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
-        ]
-    ),
-    "events": T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.LongType()),  # nanosAsLong; normalized at load
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    ),
-    "documents": T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    ),
-    "embeddings": T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    ),
-}
-
-
-def read_parquet(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """Parquet scan; optional schema pins the contract (mismatched files
-    fail at analysis, not mid-job)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
 
 
 def read_orc(

@@ -9,6 +9,9 @@ instead of appending duplicates. This is the standard recipe for sinks
 without transactional commit (plain parquet/object storage); tables with
 atomic commit protocols make the same guarantee internally.
 
+``run_events_stream_to_files`` drains the events stream that
+``engine.events_stream`` builds; it sets no session conf of its own.
+
 At scale the per-batch directories double as ingestion bookkeeping:
 a downstream compaction folds them into target-size files
 asynchronously; the manifest table's is ``TransactionalTable.compact``.
@@ -17,9 +20,8 @@ asynchronously; the manifest table's is ``TransactionalTable.compact``.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .windows import norm_stream_ts
+from ..engine import events_stream
 
 
 def write_batch_idempotent(out_dir: str):
@@ -38,17 +40,9 @@ def run_events_stream_to_files(
     out_dir: str,
     checkpoint_dir: str,
 ) -> None:
-    """Drain the events table through a foreachBatch idempotent file sink."""
-    # events.ts is TIMESTAMP(NANOS); see engine.load_tables
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
-    stream = norm_stream_ts(spark, stream)
+    """Drain the events table (``engine.events_stream``, either on-disk
+    layout) through a foreachBatch idempotent file sink."""
+    stream = events_stream(spark, sf_dir)
     q = (
         stream.writeStream.foreachBatch(write_batch_idempotent(out_dir))
         .option("checkpointLocation", checkpoint_dir)

@@ -47,7 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .windows import SESSION_GAP_MIN, norm_stream_ts
+from ..engine import events_stream
+from .windows import SESSION_GAP_MIN
 
 GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 
@@ -184,11 +185,14 @@ def q_streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream never knows it ended) — the oracle applies the same closure
     predicate to the batch sessionization (module docstring), so the
     driver hash-checks the emitted set exactly.
+
+    The source is ``engine.events_stream`` (either on-disk layout); the
+    only thing this query sets on it is the files per trigger of the
+    mtime-ordered replay below.
     """
     import math
     import os
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # Batch the replay into a FIXED small number of micro-batches
     # instead of one per source file: per-batch cost is fixed machinery
     # (state-store load/commit x partitions + an Arrow worker round), so
@@ -198,14 +202,10 @@ def q_streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # timeout across batch boundaries), which is what the sandwich
     # oracle's closure predicate certifies — while bounding the
     # fixed-overhead multiplier at ~3 regardless of file count. The
-    # testdata table is a single file (1 data batch + 1 timer batch);
+    # single-file testdata layout is one data batch + one timer batch;
     # multi-batch state evolution is pinned independently by
     # tests/test_stateful_streaming.py's chunked replays.
-    # the source must match the layout: a directory-shaped
-    # events.parquet is streamed DIRECTLY (a pathGlobFilter of
-    # 'events.parquet' would match leaf-file NAMES — part-*.parquet —
-    # and silently read zero files), while the single-file testdata
-    # layout needs the glob to exclude the sibling tables in sf_dir
+    per_trigger = None
     ev_path = os.path.join(sf_dir, "events.parquet")
     if os.path.isdir(ev_path):
         # Multi-batch replay is only event-time-faithful when the file
@@ -219,27 +219,14 @@ def q_streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
         # assuming it: if any two part files share an mtime (order not
         # a strict total order), replay everything in a single trigger
         # — one batch has no cross-batch order, so it is always safe.
-        parts = [
-            os.path.join(ev_path, f)
+        mtimes = sorted(
+            os.stat(os.path.join(ev_path, f)).st_mtime_ns
             for f in os.listdir(ev_path)
             if f.endswith(".parquet")
-        ]
-        n_files = len(parts)
-        mtimes = sorted(os.stat(p).st_mtime_ns for p in parts)
-        strict = all(a < b for a, b in zip(mtimes, mtimes[1:]))
-        per_trigger = max(1, math.ceil(n_files / 3)) if strict else n_files
-        reader = spark.readStream.schema(raw_schema).option(
-            "maxFilesPerTrigger", str(per_trigger)
         )
-        stream = reader.parquet(ev_path)
-    else:
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(sf_dir)
-        )
-    stream = norm_stream_ts(spark, stream)
+        if all(a < b for a, b in zip(mtimes, mtimes[1:])):
+            per_trigger = max(1, math.ceil(len(mtimes) / 3))
+    stream = events_stream(spark, sf_dir, per_trigger)
 
     # The stateful operator's state-store instance count is frozen to
     # spark.sql.shuffle.partitions at query start, and the replay's wall

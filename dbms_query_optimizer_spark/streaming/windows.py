@@ -11,6 +11,10 @@ Spark-native completion of that category over the ``events`` table:
   memory sink (complete mode), so the driver's oracle check proves
   streaming execution matches both batch Spark and DuckDB.
 
+Every events stream here comes from ``engine.events_stream``, the one
+function that reads both on-disk layouts and normalizes ``ts`` exactly as
+the batch ``load_tables`` does.
+
 Scale notes: watermark + window state keeps memory bounded by (windows x
 event types) regardless of input rate; sliding windows multiply state by
 length/slide; sessionization in batch is a single shuffle on user_id.
@@ -23,7 +27,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..cache import fixture_dir
-from ..engine import load_tables
+from ..engine import events_stream, load_tables
 from ..functions.numeric import dec, dsum_double
 from .startup import drain_to_memory
 
@@ -32,19 +36,6 @@ SESSION_GAP_MIN = 10
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_tables(spark, sf_dir)["events"]
-
-
-def norm_stream_ts(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Conform a readStream events frame's ``ts`` to session-local TIMESTAMP:
-    nanos-as-long testdata -> integer-DIV to micros; TIMESTAMP_NTZ testdata
-    -> cast (identity under the UTC session timezone, set here)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    dtype = dict(df.dtypes).get("ts")
-    if dtype == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif dtype == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
 
 
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,18 +225,6 @@ ORACLE_EVENTS_SESSION_WINDOW_NATIVE = f"""
 """
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet (file source needs a directory;
-    glob-filter the single file), nanos-ts normalized to timestamp."""
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return norm_stream_ts(spark, stream)
-
-
 def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tumbling aggregation executed as a REAL streaming query.
 
@@ -256,7 +235,7 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch query and shares its DuckDB oracle.
     """
     agg = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .withWatermark("ts", "15 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -290,7 +269,7 @@ def q_streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result equals the equivalent batch join+agg and a plain SQL
     oracle covers a genuinely streaming execution.
     """
-    stream = _events_stream(spark, sf_dir)
+    stream = events_stream(spark, sf_dir)
     dim = load_tables(spark, sf_dir)["customer"].select("c_custkey", "c_mktsegment")
     agg = (
         stream.withWatermark("ts", "15 minutes")
@@ -340,7 +319,7 @@ def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFram
     user_id only.
     """
     clicks = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -350,7 +329,7 @@ def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFram
         .withWatermark("click_ts", "1 hour")
     )
     purchases = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("user_id"),
@@ -392,7 +371,7 @@ def q_streaming_stream_stream_left_join(
     the inner form; the outer side adds only the evicted-row emission.
     """
     clicks = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -402,7 +381,7 @@ def q_streaming_stream_stream_left_join(
         .withWatermark("click_ts", "1 hour")
     )
     purchases = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -495,7 +474,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     history.
     """
     keys = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .select(
             "user_id",
             "event_type",
@@ -579,7 +558,7 @@ def q_streaming_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_root = f"{root}/table"
     ckpt = f"{root}/ckpt"
 
-    src = _events_stream(spark, sf_dir).select("user_id", "event_id", "ts", "value")
+    src = events_stream(spark, sf_dir).select("user_id", "event_id", "ts", "value")
     table = TransactionalTable.create(table_root, src.schema)
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:

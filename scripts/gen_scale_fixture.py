@@ -10,9 +10,9 @@ kept VERBATIM (vec_ids 0..1999, so the query vectors and every
 engine constant keep their meaning) and 18000 derived vectors are added
 (vec_id 2000.., each a seeded Gaussian perturbation sigma=0.05 of a
 random original, label inherited — cluster structure persists, density
-x10). The remaining nine tables are symlinked from sf0.1: embedding-
-only queries never read them, and load_tables just needs the paths to
-exist. Deterministic (fixed seed) so two builds byte-agree.
+x10). The remaining ``engine.TABLES`` are symlinked from sf0.1:
+embedding-only queries never read them, and load_tables just needs the
+paths to exist. Deterministic (fixed seed) so two builds byte-agree.
 
 Round 11 extends the same recipe to DOCUMENTS (the dedup family's
 fourth decade): 5000 originals + 45000 derived near-dups/non-dups.
@@ -28,12 +28,13 @@ import sys
 import numpy as np
 import pandas as pd
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from dbms_query_optimizer_spark.engine import TABLES  # noqa: E402
+
 SRC = "/root/testdata/sf0.1"
-DST = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".scale_fixtures",
-    "sf1",
-)
+DST = os.path.join(REPO, ".scale_fixtures", "sf1")
 TARGET_N = 20_000
 SIGMA = 0.05
 SEED = 20260816
@@ -112,9 +113,9 @@ def main() -> None:
         os.unlink(doc_path)
     docs_out.to_parquet(doc_path, index=False)
 
-    for t in (
-        "region nation customer supplier part orders lineitem events".split()
-    ):
+    for t in TABLES:
+        if t in ("embeddings", "documents"):  # regenerated above
+            continue
         link = f"{DST}/{t}.parquet"
         if not os.path.exists(link):
             os.symlink(f"{SRC}/{t}.parquet", link)

@@ -32,23 +32,12 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+from dbms_query_optimizer_spark.engine import TABLES
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     conn = duckdb.connect()
-    for name in TABLE_NAMES:
+    for name in TABLES:
         conn.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
         )

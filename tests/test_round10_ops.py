@@ -209,17 +209,18 @@ def test_bpe_train_survives_single_symbol_words(spark, tmp_path):
     and match the oracle."""
     import shutil
 
+    from dbms_query_optimizer_spark.engine import TABLES
     from dbms_query_optimizer_spark.operators.text import (
         BPE_ROUNDS,
         _oracle_bpe_train_steps,
         q_bpe_train_steps,
     )
 
-    from .oracle_utils import TABLE_NAMES, compare, duckdb_conn
+    from .oracle_utils import compare, duckdb_conn
 
     fx = tmp_path / "bpe_fixture"
     fx.mkdir()
-    for t in TABLE_NAMES:
+    for t in TABLES:
         if t != "documents":
             shutil.copy(f"{SF_DIR}/{t}.parquet", fx / f"{t}.parquet")
     texts = ["in in in in in in in in in in", "abcdef abcdef abcdef"]

@@ -242,6 +242,7 @@ def test_mmr_pool_excludes_embeddingless(spark, tmp_path):
 
     import numpy as np
 
+    from dbms_query_optimizer_spark.engine import TABLES
     from dbms_query_optimizer_spark.operators.similarity import (
         EMB_DIM,
         MMR_K,
@@ -249,11 +250,11 @@ def test_mmr_pool_excludes_embeddingless(spark, tmp_path):
         q_mmr_diversify_topk,
     )
 
-    from .oracle_utils import TABLE_NAMES, compare, duckdb_conn
+    from .oracle_utils import compare, duckdb_conn
 
     fx = tmp_path / "mmr_fixture"
     fx.mkdir()
-    for t in TABLE_NAMES:
+    for t in TABLES:
         if t not in ("documents", "embeddings"):
             shutil.copy(f"{SF_DIR}/{t}.parquet", fx / f"{t}.parquet")
 

@@ -1,4 +1,7 @@
-"""Connector roundtrips: every format preserves values and schemas."""
+"""Connector roundtrips: every format preserves values and schemas.
+
+Each roundtrip reads back under the schema of the frame it wrote (the
+source parquet footers'), an explicit schema with no inference pass."""
 
 from __future__ import annotations
 
@@ -7,10 +10,8 @@ from pyspark.sql import functions as F
 
 from dbms_query_optimizer_spark.engine import load_tables
 from dbms_query_optimizer_spark.sources import (
-    TESTDATA_SCHEMAS,
     read_csv,
     read_json,
-    read_parquet,
     write_csv,
     write_json,
     write_parquet,
@@ -29,28 +30,28 @@ def _sorted_rows(df):
 def test_parquet_roundtrip(spark, nation, tmp_path):
     path = str(tmp_path / "nation_parquet")
     write_parquet(nation, path, target_files=1)
-    back = read_parquet(spark, path, TESTDATA_SCHEMAS["nation"])
-    assert back.schema == TESTDATA_SCHEMAS["nation"]
+    back = spark.read.schema(nation.schema).parquet(path)
+    assert back.schema == nation.schema
     assert _sorted_rows(back) == _sorted_rows(nation)
 
 
 def test_csv_roundtrip(spark, nation, tmp_path):
     path = str(tmp_path / "nation_csv")
     write_csv(nation, path, target_files=1)
-    back = read_csv(spark, path, TESTDATA_SCHEMAS["nation"])
-    assert back.schema == TESTDATA_SCHEMAS["nation"]
+    back = read_csv(spark, path, nation.schema)
+    assert back.schema == nation.schema
     assert _sorted_rows(back) == _sorted_rows(nation)
 
 
 def test_json_roundtrip(spark, nation, tmp_path):
     path = str(tmp_path / "nation_json")
     write_json(nation, path, target_files=1)
-    back = read_json(spark, path, TESTDATA_SCHEMAS["nation"])
-    assert back.schema == TESTDATA_SCHEMAS["nation"]
+    back = read_json(spark, path, nation.schema)
+    assert back.schema == nation.schema
     assert _sorted_rows(back) == _sorted_rows(nation)
 
 
-def test_csv_failfast_on_malformed(spark, tmp_path):
+def test_csv_failfast_on_malformed(spark, nation, tmp_path):
     bad = tmp_path / "bad_csv"
     bad.mkdir()
     (bad / "part.csv").write_text(
@@ -59,7 +60,7 @@ def test_csv_failfast_on_malformed(spark, tmp_path):
     from py4j.protocol import Py4JJavaError
 
     with pytest.raises(Py4JJavaError):
-        read_csv(spark, str(bad), TESTDATA_SCHEMAS["nation"]).collect()
+        read_csv(spark, str(bad), nation.schema).collect()
 
 
 def test_partitioned_parquet_prunes(spark, sf_dir, tmp_path):
@@ -67,7 +68,7 @@ def test_partitioned_parquet_prunes(spark, sf_dir, tmp_path):
     docs = load_tables(spark, sf_dir)["documents"]
     path = str(tmp_path / "docs_by_lang")
     write_parquet(docs, path, partition_by=["lang"])
-    back = read_parquet(spark, path)
+    back = spark.read.parquet(path)
     one_lang = back.filter(back.lang == "en")
     plan = one_lang._jdf.queryExecution().executedPlan().toString()
     # partition pruning shows up as the partition filter on the scan node

@@ -12,13 +12,42 @@ aggregates.
 
 from __future__ import annotations
 
+import os
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
-from dbms_query_optimizer_spark.engine import load_tables
+from dbms_query_optimizer_spark.engine import TABLES, load_tables
+from dbms_query_optimizer_spark.operators import catalog
 from dbms_query_optimizer_spark.streaming.stateful import GAP_US, q_streaming_sessionized
 from dbms_query_optimizer_spark.streaming.windows import q_events_sessionized
 
+from .oracle_utils import normalize_rows
+
 MARGIN_US = 10_000  # watermark/timeout timestamps round to milliseconds
+
+
+def _directory_layout(spark, sf_dir: str, root: str, n_parts: int) -> str:
+    """A copy of ``sf_dir`` at ``root`` whose events.parquet is a
+    DIRECTORY of ``n_parts`` time-sliced part files (the layout a
+    continuously-ingesting table has), with file mtimes staggered in
+    time-slice order; every other table is a symlink to the original."""
+    os.makedirs(root)
+    ev_dir = os.path.join(root, "events.parquet")
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev.repartitionByRange(n_parts, "ts").sortWithinPartitions("ts").write.parquet(
+        ev_dir
+    )
+    parts = sorted(f for f in os.listdir(ev_dir) if f.endswith(".parquet"))
+    assert len(parts) == n_parts  # the multi-file layout is genuinely built
+    now = time.time()
+    for i, f in enumerate(parts):  # mtime order = time-slice order
+        os.utime(os.path.join(ev_dir, f), (now + i, now + i))
+    for t in TABLES:
+        if t != "events":
+            os.symlink(f"{sf_dir}/{t}.parquet", f"{root}/{t}.parquet")
+    return root
 
 
 def _key(r):
@@ -92,22 +121,41 @@ def test_directory_shaped_events_source(spark, sf_dir, tmp_path):
     a deliberately scrambled file order is out of contract (its late
     rows land behind the watermark; the operator clamps their timers
     rather than crashing, but sessions split by design)."""
-    import os
-    import time
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    multi_dir = str(tmp_path / "sfdir")
-    os.makedirs(multi_dir)
-    ev_dir = os.path.join(multi_dir, "events.parquet")
-    ev.repartitionByRange(4, "ts").sortWithinPartitions("ts").write.parquet(
-        ev_dir
-    )
-    parts = sorted(f for f in os.listdir(ev_dir) if f.endswith(".parquet"))
-    assert len(parts) >= 4  # the multi-file branch is genuinely exercised
-    now = time.time()
-    for i, f in enumerate(parts):  # mtime order = time-slice order
-        os.utime(os.path.join(ev_dir, f), (now + i, now + i))
-
+    multi_dir = _directory_layout(spark, sf_dir, str(tmp_path / "sfdir"), 4)
     single = {_key(r) for r in q_streaming_sessionized(spark, sf_dir).collect()}
     multi = {_key(r) for r in q_streaming_sessionized(spark, multi_dir).collect()}
     assert multi == single
+
+
+@pytest.fixture(scope="module")
+def dir_sf(spark, sf_dir, tmp_path_factory):
+    return _directory_layout(
+        spark, sf_dir, str(tmp_path_factory.mktemp("layout") / "sf"), 3
+    )
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_tumbling",
+        "streaming_static_join",
+        "streaming_stream_stream_join",
+        "streaming_stream_stream_left_join",
+        "streaming_dedup",
+        "streaming_upsert_ingest",
+        "streaming_foreachbatch_ingest",
+    ],
+)
+def test_events_stream_layout_invariant(spark, sf_dir, dir_sf, name):
+    """Every events-stream entry answers the same over a directory-shaped
+    events.parquet (3 part files) as over the single-file layout: the
+    stream must read the directory itself, not glob the sibling files."""
+    fn = catalog.CATALOG[name][0]
+
+    def rows(sf):
+        df = fn(spark, sf)
+        return normalize_rows(df.columns, [tuple(r) for r in df.collect()])
+
+    single = rows(sf_dir)
+    assert single, f"{name} returned no rows"
+    assert rows(dir_sf) == single

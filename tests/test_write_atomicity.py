@@ -21,14 +21,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from dbms_query_optimizer_spark.engine import load_tables
-from dbms_query_optimizer_spark.sources import read_parquet, write_parquet
+from dbms_query_optimizer_spark.sources import write_parquet
 
 
 def test_committed_write_fully_visible(spark, sf_dir, tmp_path):
     docs = load_tables(spark, sf_dir)["documents"]
     path = str(tmp_path / "committed")
     write_parquet(docs, path)
-    back = read_parquet(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == docs.count()
     assert sorted(back.columns) == sorted(docs.columns)
 
