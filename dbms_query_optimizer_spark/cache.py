@@ -22,8 +22,10 @@ still applies.
 :func:`build_once` is the on-disk counterpart: artifacts that outlive a
 session (ANN indexes, the LSH store), keyed on what they were built from.
 :func:`fixture_dir` is its private twin: inputs a query stages before it
-reads them back, in a directory no other process can see or share.
-Between them they own every path the engine puts under ``gettempdir()``.
+reads them back, in a directory no other process can see or share;
+:func:`checkpoint_dir` gives each streaming query attempt its checkpoint
+under the same private root. Between them they own every path the engine
+puts under ``gettempdir()``.
 """
 
 from __future__ import annotations
@@ -180,15 +182,25 @@ def warehouse_dir() -> str:
     return os.path.join(_fixture_root(), "warehouse")
 
 
+def checkpoint_dir() -> str:
+    """A fresh, empty directory under ``<process root>/checkpoints`` for
+    one streaming query attempt (``streaming.startup.run_stream`` sets it
+    as the query's checkpoint location and removes it when the attempt
+    ends)."""
+    parent = os.path.join(_fixture_root(), "checkpoints")
+    os.makedirs(parent, exist_ok=True)
+    return tempfile.mkdtemp(dir=parent)
+
+
 def fixture_dir(sf_dir: str, *parts: str) -> str:
     """Path, private to this process, at which a query stages the input it
     reads back: ``<process root>/<sf basename>-<hash of real sf_dir>/<parts>``.
 
     Nothing exists at the returned path: whatever an earlier call with the
     same ``sf_dir`` and ``parts`` left there is removed, so a query built
-    again starts from empty files and a fresh streaming checkpoint. What
-    the query writes there stays until that happens or the process exits,
-    so the frames that read it stay lazy."""
+    again starts from empty files. What the query writes there stays
+    until that happens or the process exits, so the frames that read it
+    stay lazy."""
     sf_dir = os.path.realpath(sf_dir)
     tag = f"{os.path.basename(sf_dir)}-{hashlib.sha256(sf_dir.encode()).hexdigest()[:8]}"
     path = os.path.join(_fixture_root(), tag, *parts)

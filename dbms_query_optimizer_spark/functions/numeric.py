@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-MONEY = "decimal(12,2)"
-
 
 def dec(col: str | Column, scale: int = 2) -> Column:
     c = F.col(col) if isinstance(col, str) else col

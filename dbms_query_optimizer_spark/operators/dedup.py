@@ -43,7 +43,6 @@ NUM_PERM = 16  # minhash permutations
 LSH_BANDS = 4  # bands of NUM_PERM // LSH_BANDS rows each
 MINHASH_JACCARD_T = 0.5
 NGRAM_JACCARD_T = 0.3
-SIMHASH_BITS = 32
 SIMHASH_BANDS = 4  # 8-bit bands
 SIMHASH_MAX_HAMMING = 1
 COSINE_T = 0.4

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..cache import build_once, fixture_dir
 from ..engine import load_tables
+from ..sources.writers import overwrite_partitions_dynamic
 from .dedup import cosine_expr
 
 N_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -2023,15 +2024,15 @@ def _ivfr_quantize(df: DataFrame, extra: tuple = ()) -> DataFrame:
     )
 
 
-def _ivfr_centroids(qdf: DataFrame, k: int = IVFR_K) -> DataFrame:
-    """Frozen coarse quantizer: the k smallest vec_ids' quantized
+def _ivfr_centroids(qdf: DataFrame) -> DataFrame:
+    """Frozen coarse quantizer: the IVFR_K smallest vec_ids' quantized
     vectors, labeled by seed vec_id (cell ids therefore share the INT
     ceiling documented on the kmeans seeder: seeds past 2^31 need a
-    wider label column). localCheckpoint'd — k rows, reused by every
+    wider label column). localCheckpoint'd — IVFR_K rows, reused by every
     assignment pass."""
     return (
         qdf.orderBy("vec_id")
-        .limit(k)
+        .limit(IVFR_K)
         .select(F.col("vec_id").cast("int").alias("cell"), F.col("qv").alias("cqv"))
         .localCheckpoint()
     )
@@ -2254,17 +2255,11 @@ def refresh_index(spark, table, cent: DataFrame, idx_dir: str) -> int:
     # dynamic partition overwrite rewrites ONLY partitions present in
     # the written frame — a cell whose every row was erased produces no
     # output rows, so clear its directory explicitly (replaceWhere
-    # semantics over the affected-cell set)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    orig_mode = spark.conf.get(mode_key)
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        # churn-sized shuffle -> one file per rewritten cell (guide §6)
-        new_cells.repartition(IVFR_K, "cell").write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(corpus_dir)
-    finally:
-        spark.conf.set(mode_key, orig_mode)
+    # semantics over the affected-cell set); churn-sized shuffle -> one
+    # file per rewritten cell (guide §6)
+    overwrite_partitions_dynamic(
+        new_cells.repartition(IVFR_K, "cell"), corpus_dir, ["cell"]
+    )
     kept = {r["cell"] for r in new_cells.select("cell").distinct().collect()}
     for cell in set(affected) - kept:
         shutil.rmtree(os.path.join(corpus_dir, f"cell={cell}"), ignore_errors=True)
@@ -2530,7 +2525,7 @@ def q_streaming_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.manifest import TransactionalTable
     from ..sources.manifest_stream import register
-    from ..streaming.startup import start_and_drain
+    from ..streaming.startup import run_stream
     from .sources_queries import _stage_concurrent
 
     root = fixture_dir(sf_dir, "txn_ivf_stream", "embeddings")
@@ -2552,7 +2547,6 @@ def q_streaming_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register(spark)
     out_dir = os.path.join(root, "index_stream")
-    ckpt = os.path.join(root, "ckpt")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         assigned = _ivfr_assign(_ivfr_quantize(batch_df), cent)
@@ -2561,23 +2555,15 @@ def q_streaming_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).partitionBy("cell").parquet(f"{out_dir}/batch={batch_id}")
 
-    def start():
-        return (
-            spark.readStream.format("manifesttail")
-            .option("path", table_root)
-            .load()
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    def reset():
-        # nothing committed survives a retry: wipe sink dirs + checkpoint
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # retries only the Python-source worker-spawn startup flake
-    start_and_drain(start, reset=reset)
+    # retries only the Python-source worker-spawn startup flake; nothing
+    # a failed attempt wrote survives into the next
+    run_stream(
+        lambda: spark.readStream.format("manifesttail")
+        .option("path", table_root)
+        .load()
+        .writeStream.foreachBatch(fold),
+        reset=lambda: shutil.rmtree(out_dir, ignore_errors=True),
+    )
 
     idx = spark.read.parquet(out_dir)  # partition cols: batch, cell
     return _ivfr_cell_stats(idx)

@@ -9,8 +9,9 @@ instead of appending duplicates. This is the standard recipe for sinks
 without transactional commit (plain parquet/object storage); tables with
 atomic commit protocols make the same guarantee internally.
 
-``run_events_stream_to_files`` drains the events stream that
-``engine.events_stream`` builds; it sets no session conf of its own.
+The sink is only the per-batch writer; ``startup.run_stream`` starts,
+checkpoints, drains and stops the query that feeds it
+(``windows.q_streaming_foreachbatch_ingest``).
 
 At scale the per-batch directories double as ingestion bookkeeping:
 a downstream compaction folds them into target-size files
@@ -19,9 +20,7 @@ asynchronously; the manifest table's is ``TransactionalTable.compact``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..engine import events_stream
+from pyspark.sql import DataFrame
 
 
 def write_batch_idempotent(out_dir: str):
@@ -33,22 +32,3 @@ def write_batch_idempotent(out_dir: str):
 
     return sink
 
-
-def run_events_stream_to_files(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Drain the events table (``engine.events_stream``, either on-disk
-    layout) through a foreachBatch idempotent file sink."""
-    stream = events_stream(spark, sf_dir)
-    q = (
-        stream.writeStream.foreachBatch(write_batch_idempotent(out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()

@@ -38,7 +38,6 @@ form.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -48,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..engine import events_stream
+from .startup import drain_to_memory
 from .windows import SESSION_GAP_MIN
 
 GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
@@ -188,7 +188,9 @@ def q_streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The source is ``engine.events_stream`` (either on-disk layout); the
     only thing this query sets on it is the files per trigger of the
-    mtime-ordered replay below.
+    mtime-ordered replay below. ``startup.drain_to_memory`` runs it with
+    two drains, the second being that final timer trigger, and owns its
+    checkpoint, stop and retry.
     """
     import math
     import os
@@ -248,25 +250,15 @@ def q_streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     orig_parts = spark.conf.get(part_key)
     spark.conf.set(part_key, str(state_width(stream)))
 
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
     try:
-        q = (
-            sessionize_stream(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
+        # the second drain runs one more empty micro-batch so timers fire
+        # against the final watermark
+        sessions = drain_to_memory(
+            lambda: sessionize_stream(stream), "append", drains=2
         )
-        try:
-            q.processAllAvailable()
-            # one more empty micro-batch so timers fire against the final
-            # watermark
-            q.processAllAvailable()
-        finally:
-            q.stop()
     finally:
         spark.conf.set(part_key, orig_parts)
-    return spark.table(name).orderBy("user_id", "session_start")
+    return sessions.orderBy("user_id", "session_start")
 
 
 # The batch lag/cumsum sessionization (windows.py's ORACLE_EVENTS_

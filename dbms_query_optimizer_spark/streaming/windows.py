@@ -13,7 +13,9 @@ Spark-native completion of that category over the ``events`` table:
 
 Every events stream here comes from ``engine.events_stream``, the one
 function that reads both on-disk layouts and normalizes ``ts`` exactly as
-the batch ``load_tables`` does.
+the batch ``load_tables`` does, and runs through ``startup.run_stream``
+(``drain_to_memory`` for the memory sinks), which owns its checkpoint,
+drain, stop and retry; no query here names a checkpoint.
 
 Scale notes: watermark + window state keeps memory bounded by (windows x
 event types) regardless of input rate; sliding windows multiply state by
@@ -29,7 +31,8 @@ from pyspark.sql import functions as F
 from ..cache import fixture_dir
 from ..engine import events_stream, load_tables
 from ..functions.numeric import dec, dsum_double
-from .startup import drain_to_memory
+from .sinks import write_batch_idempotent
+from .startup import drain_to_memory, run_stream
 
 SESSION_GAP_MIN = 10
 
@@ -501,14 +504,15 @@ def q_streaming_foreachbatch_ingest(spark: SparkSession, sf_dir: str) -> DataFra
     instead of duplicating), then the landed directories are read back
     and aggregated. The oracle aggregates the source directly: any lost
     or doubled batch breaks the value hash, which is exactly the
-    exactly-once contract. Fresh checkpoint/output dirs per run so the
-    entry re-executes the full drain every time.
+    exactly-once contract. A fresh output dir per run (and the runner's
+    fresh checkpoint) so the entry re-executes the full drain every time.
     """
-    from .sinks import run_events_stream_to_files
-
-    root = fixture_dir(sf_dir, "fbsink", "events")
-    out_dir, ckpt_dir = f"{root}/out", f"{root}/ckpt"
-    run_events_stream_to_files(spark, sf_dir, out_dir, ckpt_dir)
+    out_dir = fixture_dir(sf_dir, "fbsink", "events")
+    run_stream(
+        lambda: events_stream(spark, sf_dir).writeStream.foreachBatch(
+            write_batch_idempotent(out_dir)
+        )
+    )
     landed = spark.read.parquet(out_dir)
     return (
         landed.groupBy("event_type")
@@ -554,9 +558,7 @@ def q_streaming_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.manifest import TransactionalTable
 
-    root = fixture_dir(sf_dir, "upsert", "events")
-    table_root = f"{root}/table"
-    ckpt = f"{root}/ckpt"
+    table_root = fixture_dir(sf_dir, "upsert", "events")
 
     src = events_stream(spark, sf_dir).select("user_id", "event_id", "ts", "value")
     table = TransactionalTable.create(table_root, src.schema)
@@ -578,15 +580,7 @@ def q_streaming_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         tx.merge(batch_df.sparkSession, merged, "user_id")
         tx.commit()
 
-    q = (
-        src.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_stream(lambda: src.writeStream.foreachBatch(upsert_batch))
     return (
         TransactionalTable(table_root)  # fresh recovery-path open
         .read(spark)
@@ -890,7 +884,7 @@ def q_streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     error law against exact per-type order statistics.
     """
     root = fixture_dir(sf_dir, "ddsketch", "events")
-    src_dir, sketch_dir, ckpt = f"{root}/src", f"{root}/sketch", f"{root}/ckpt"
+    src_dir, sketch_dir = f"{root}/src", f"{root}/sketch"
     vals = load_tables(spark, sf_dir)["events"].select("event_type", "value")
     vals.repartition(4).write.parquet(src_dir)  # 4 files -> 4 micro-batches
     stream = (
@@ -904,15 +898,7 @@ def q_streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{sketch_dir}/batch={batch_id}"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_stream(lambda: stream.writeStream.foreachBatch(sink))
     return ddsketch_readout(
         spark.read.parquet(sketch_dir).select("event_type", "bin", "pn")
     )

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import decimal
 import numbers
+import os
 import re
 from datetime import date, datetime
 
@@ -38,9 +39,10 @@ from dbms_query_optimizer_spark.engine import TABLES
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     conn = duckdb.connect()
     for name in TABLES:
-        conn.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
-        )
+        path = f"{sf_dir}/{name}.parquet"
+        if os.path.isdir(path):  # a directory-shaped table: read its part files
+            path += "/*.parquet"
+        conn.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
     return conn
 
 

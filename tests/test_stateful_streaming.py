@@ -23,7 +23,7 @@ from dbms_query_optimizer_spark.operators import catalog
 from dbms_query_optimizer_spark.streaming.stateful import GAP_US, q_streaming_sessionized
 from dbms_query_optimizer_spark.streaming.windows import q_events_sessionized
 
-from .oracle_utils import normalize_rows
+from .oracle_utils import duckdb_conn, normalize_rows
 
 MARGIN_US = 10_000  # watermark/timeout timestamps round to milliseconds
 
@@ -83,15 +83,16 @@ def test_streamed_sessions_match_batch(spark, sf_dir):
 def test_foreachbatch_idempotent_sink(spark, sf_dir, tmp_path):
     """foreachBatch exactly-once: the drained sink equals the batch table,
     and redelivering a batch (simulated retry) changes nothing."""
-    from dbms_query_optimizer_spark.engine import load_tables
-    from dbms_query_optimizer_spark.streaming.sinks import (
-        run_events_stream_to_files,
-        write_batch_idempotent,
-    )
+    from dbms_query_optimizer_spark.engine import events_stream, load_tables
+    from dbms_query_optimizer_spark.streaming.sinks import write_batch_idempotent
+    from dbms_query_optimizer_spark.streaming.startup import run_stream
 
     out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    run_events_stream_to_files(spark, sf_dir, out, ckpt)
+    run_stream(
+        lambda: events_stream(spark, sf_dir).writeStream.foreachBatch(
+            write_batch_idempotent(out)
+        )
+    )
 
     events = load_tables(spark, sf_dir)["events"]
     sunk = spark.read.parquet(f"{out}/batch=*")
@@ -159,3 +160,29 @@ def test_events_stream_layout_invariant(spark, sf_dir, dir_sf, name):
     single = rows(sf_dir)
     assert single, f"{name} returned no rows"
     assert rows(dir_sf) == single
+
+
+def test_duckdb_oracle_reads_directory_shaped_table(sf_dir, dir_sf):
+    """The DuckDB oracle reads a directory-shaped events.parquet (3 part
+    files) as the same table as the single file."""
+    # exact decimal sum: a float SUM differs in its last bits by read order
+    sql = "SELECT COUNT(*), SUM(CAST(value AS DECIMAL(12, 2))) FROM events"
+    assert duckdb_conn(dir_sf).execute(sql).fetchall() == (
+        duckdb_conn(sf_dir).execute(sql).fetchall()
+    )
+
+
+def test_memory_drain_reads_its_own_session_after_foreachbatch(spark, sf_dir):
+    """``createDataFrame`` on a foreachBatch batch's session (the manifest
+    merge in ``streaming_upsert_ingest`` does this) makes that streaming
+    clone PySpark's active session; a memory drain that follows must
+    still find its sink table, which lives in the frame's own session."""
+    from dbms_query_optimizer_spark.engine import events_stream
+    from dbms_query_optimizer_spark.streaming.startup import drain_to_memory, run_stream
+
+    def sink(batch_df, batch_id):
+        batch_df.sparkSession.createDataFrame([(batch_id,)], "batch_id int").count()
+
+    run_stream(lambda: events_stream(spark, sf_dir).writeStream.foreachBatch(sink))
+    drained = drain_to_memory(lambda: events_stream(spark, sf_dir), "append")
+    assert drained.count() == load_tables(spark, sf_dir)["events"].count()
